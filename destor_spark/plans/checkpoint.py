@@ -12,16 +12,74 @@ sources/catalog.py) plus a manifest json carrying
 (run_id, stage, rows, per-partition row counts, wall seconds).  A
 re-entrant run loads any stage whose manifest says complete instead of
 recomputing — resume-equals-fresh is pinned by tests/test_resume.py.
+
+A pipeline is declared once as a stage graph: `Stage(name, inputs, fn)`
+in definition order, each input naming an earlier stage.  `run_graph`
+starts every stage as soon as all its inputs have committed, one thread
+per ready stage — destor's backup phases run concurrently the same way
+(do_backup.c:32-41), so independent stages share the cluster's slots
+instead of each leaving most of them idle.  Concurrency is the graph's
+width; there is no knob.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import queue
+import threading
 import time
+from typing import Callable, NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+def write_barrier(df: DataFrame, path: str) -> DataFrame:
+    """Write df as parquet at path and return the file-backed re-read.
+
+    The re-read uses the schema just written, so it launches no
+    schema-inference job: Spark reads a user schema as all-nullable,
+    which is exactly what inference over the written files returns."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _footer_stats(data_dir: str) -> tuple[dict[str, int], int, int]:
+    """(rows per non-empty write partition, bytes, files) of a committed
+    parquet dir, from the file footers alone — no Spark job, no data
+    read.  Part files are named part-<partition>-<uuid>...; a partition
+    that wrote several files sums them."""
+    import pyarrow.parquet as pq
+
+    part_rows: dict[str, int] = {}
+    data_size = n_files = 0
+    for dp, _, names in os.walk(data_dir):
+        for name in names:
+            if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                continue
+            p = os.path.join(dp, name)
+            data_size += os.path.getsize(p)
+            n_files += 1
+            rows = pq.read_metadata(p).num_rows
+            if rows:
+                pid = str(int(name.split("-")[1]))
+                part_rows[pid] = part_rows.get(pid, 0) + rows
+    return part_rows, data_size, n_files
+
+
+class Stage(NamedTuple):
+    """One node of a stage graph: fn(*inputs) -> DataFrame, called with
+    the committed DataFrames of the stages named in `inputs`."""
+
+    name: str
+    inputs: tuple[str, ...]
+    fn: Callable[..., DataFrame]
+    # resume guard across code versions: a checkpoint written by an
+    # older layout (e.g. a signatures stage from before content_sha
+    # rode in the same scan) loads fine but breaks the FIRST downstream
+    # select — recompute it instead of resuming
+    required_cols: tuple[str, ...] = ()
 
 
 class StageRunner:
@@ -70,27 +128,88 @@ class StageRunner:
         return True
 
     def run(
-        self,
-        stage: str,
-        fn,
-        repartition: int | None = None,
-        required_cols: tuple[str, ...] = (),
+        self, stage: str, fn, required_cols: tuple[str, ...] = ()
     ) -> DataFrame:
-        """fn() -> DataFrame; materialized once, loaded on resume.
+        """fn() -> DataFrame; materialized once, loaded on resume.  A
+        one-stage graph."""
+        return self.run_graph([Stage(stage, (), fn, required_cols)])[stage]
 
-        required_cols guards resume across code versions: a checkpoint
-        written by an older layout (e.g. a signatures stage from before
-        content_sha rode in the same scan) loads fine but breaks the
-        FIRST downstream select — recompute it instead of resuming."""
-        data_dir, mpath = self._paths(stage)
-        if self.completed(stage):
+    def run_graph(self, stages: list[Stage]) -> dict[str, DataFrame]:
+        """Run a stage graph; returns every stage's committed DataFrame.
+
+        Each stage starts, on its own thread, once all its inputs have
+        committed.  If a stage fails, no further stage starts; the
+        error is re-raised only after every in-flight sibling has
+        finished, so no Spark job is still writing under base_dir when
+        the caller sees it.  metrics.jsonl lines follow definition
+        order whatever order the stages finish in."""
+        seen: set[str] = set()
+        for st in stages:
+            missing = [i for i in st.inputs if i not in seen]
+            if st.name in seen or missing:
+                raise ValueError(
+                    f"stage {st.name!r}: duplicate name or inputs not "
+                    f"declared before it: {missing}"
+                )
+            seen.add(st.name)
+
+        out: dict[str, DataFrame] = {}
+        manifests: dict[str, dict | None] = {}
+        waiting = list(stages)
+        done: queue.Queue = queue.Queue()
+        running = 0
+        error: BaseException | None = None
+        logged = 0
+        while True:
+            ready = [] if error else [
+                st for st in waiting if all(i in out for i in st.inputs)
+            ]
+            for st in ready:
+                waiting.remove(st)
+                args = [out[i] for i in st.inputs]
+                threading.Thread(
+                    target=inheritable_thread_target(self.spark)(self._worker),
+                    args=(st, args, done),
+                    name=f"stage:{st.name}",
+                    daemon=True,
+                ).start()
+                running += 1
+            if not running:
+                break
+            name, res, exc = done.get()
+            running -= 1
+            if exc is not None:
+                error = error or exc
+                continue
+            out[name], manifests[name] = res
+            while logged < len(stages) and stages[logged].name in manifests:
+                m = manifests[stages[logged].name]
+                if m is not None:  # resumed stages log nothing
+                    self._append_metrics(m)
+                logged += 1
+        if error is not None:
+            for st in stages[logged:]:
+                if manifests.get(st.name) is not None:
+                    self._append_metrics(manifests[st.name])
+            raise error
+        return out
+
+    def _worker(self, st: Stage, args: list, done: queue.Queue) -> None:
+        try:
+            done.put((st.name, self._stage(st, args), None))
+        except BaseException as e:  # noqa: BLE001 - re-raised by run_graph
+            done.put((st.name, None, e))
+
+    def _stage(self, st: Stage, args: list) -> tuple[DataFrame, dict | None]:
+        """Resume or compute + commit one stage; (DataFrame, manifest),
+        manifest None when resumed."""
+        data_dir, mpath = self._paths(st.name)
+        if self.completed(st.name):
             out = self.spark.read.parquet(data_dir)
-            if set(required_cols) <= set(out.columns):
-                return out
+            if set(st.required_cols) <= set(out.columns):
+                return out, None
         t0 = time.time()
-        df = fn()
-        if repartition:
-            df = df.repartition(repartition)
+        df = st.fn(*args)
         # invalidate BEFORE the data overwrite: mode('overwrite')
         # deletes the old parquet first, so a crash mid-recompute must
         # not leave a stale 'complete' manifest (written under an
@@ -104,36 +223,22 @@ class StageRunner:
                     {"status": "recomputing", "run_id": self.run_id}, f
                 )
             os.replace(tmp, mpath)
-        df.write.mode("overwrite").parquet(data_dir)
-        # wall stops at the durable write: the lineage/metrics queries
-        # below re-read the output and would otherwise be billed to the
-        # stage, systematically understating throughput_mb_s
+        out = write_barrier(df, data_dir)
         wall = time.time() - t0
-        out = self.spark.read.parquet(data_dir)
-        part_rows = {
-            str(r["pid"]): r["rows"]
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
+        # no Spark job after the write: counts come from the parquet
+        # footers, so the manifest costs no rescan of the stage output.
         # jcr restore-report analogue (/root/reference/src/do_restore.c:
         # 243-277): data size, throughput MB/s, and the speed factor —
         # destor normalizes restored bytes by containers READ; the
         # parquet restatement normalizes stage bytes by files written
         # (the unit a downstream stage must open), same packing-density
         # meaning.
-        data_size = 0
-        n_files = 0
-        for dp, _, fns in os.walk(data_dir):
-            for name in fns:
-                if name.endswith(".parquet"):
-                    data_size += os.path.getsize(os.path.join(dp, name))
-                    n_files += 1
+        part_rows, data_size, n_files = _footer_stats(data_dir)
         manifest = {
             "status": "complete",
             "run_id": self.run_id,
             "context_fp": self.context_fp,
-            "stage": stage,
+            "stage": st.name,
             "rows": int(sum(part_rows.values())),
             "n_partitions": len(part_rows),
             "partition_rows": part_rows,
@@ -154,8 +259,7 @@ class StageRunner:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mpath)
-        self._append_metrics(manifest)
-        return out
+        return out, manifest
 
     def _append_metrics(self, manifest: dict) -> None:
         """jcr-equivalent metrics log (/root/reference/src/jcr.h:19-61)."""

@@ -1,21 +1,36 @@
 """End-to-end dedup pipeline orchestration.
 
 destor's backup job is 6 pipelined phases over bounded queues
-(/root/reference/src/do_backup.c:32-41); here each phase is a Spark
-stage group with an optional durable checkpoint between them
-(SURVEY.md section 3.1 "Spark restatement"):
+(do_backup.c:32-41); here each phase is a Spark stage group with a
+parquet barrier between them (SURVEY.md section 3.1 "Spark
+restatement").
 
-  read/extract -> exact pass -> signatures -> LSH pairs -> verify
-     -> [simhash pass] -> union-find -> assignments
+`run_checkpointed` declares the pipeline once as a stage graph, each
+stage durable (StageRunner) so a killed job resumes from the stages
+that committed.  A stage starts as soon as its inputs have committed,
+so independent stages run concurrently:
 
-`run_pipeline` is the pure in-memory composition (tests, benchmarks);
-`run_checkpointed` wraps every stage in a StageRunner so a killed job
-resumes from the last complete stage with lineage + metrics.
+  pages ─┬─> signatures ─┬─> exact_edges ───────────────────────┐
+         │               ├─> candidate_pairs ─> verified_pairs ─┤
+         │               ├─> bucket_stats
+         │               └─> [simhash_pairs] ───────────────────┤
+         └─> [substring_pairs] ─────────────────────────────────┴─> edges
+                                    edges ─> components ─> assignments
+
+`substring_pairs` needs only the pages, so it overlaps `signatures`;
+`exact_edges`, `candidate_pairs`, `bucket_stats` and `simhash_pairs`
+start together once `signatures` commits; `edges` is the
+union/distinct of the committed pair stages.
+
+`run_pipeline` is the in-memory composition of the same pieces
+(tests, benchmarks, queries), with ephemeral barriers on the
+multi-consumer stages only.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import itertools
 import os
 import shutil
@@ -35,7 +50,7 @@ from destor_spark.operators import minhash as minhash_op
 from destor_spark.operators import simhash as simhash_op
 from destor_spark.operators import substring as substring_op
 from destor_spark.operators import verify as verify_op
-from destor_spark.plans.checkpoint import StageRunner
+from destor_spark.plans.checkpoint import Stage, StageRunner, write_barrier
 
 
 @dataclass
@@ -74,9 +89,7 @@ def _materialize(df: DataFrame, tag: str, root: str) -> DataFrame:
     root (set SPARK_GRAFT_MAT_DIR to a cluster-visible path), and the
     durable variant of this barrier is StageRunner (run_checkpointed).
     """
-    path = os.path.join(root, tag)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return write_barrier(df, os.path.join(root, tag))
 
 
 _SESSION_ROOTS: dict[str, str] = {}
@@ -158,8 +171,7 @@ def _materialize_gen(df: DataFrame, tag: str, root: str) -> DataFrame:
             )
         _TAG_INFLIGHT.add(key)
     try:
-        path = os.path.join(root, f"{tag}_g{gen}")
-        df.write.mode("overwrite").parquet(path)
+        out = write_barrier(df, os.path.join(root, f"{tag}_g{gen}"))
         # sweep EVERY older generation, not just gen-1: a failed write
         # at gen N leaves g{N-1} behind (the retry then runs as N+1 and
         # its gen-1 cleanup would only remove the failed g{N}), so a
@@ -172,7 +184,7 @@ def _materialize_gen(df: DataFrame, tag: str, root: str) -> DataFrame:
                     shutil.rmtree(
                         os.path.join(root, name), ignore_errors=True
                     )
-        return df.sparkSession.read.parquet(path)
+        return out
     finally:
         with _TAG_LOCK:
             _TAG_INFLIGHT.discard(key)
@@ -261,9 +273,11 @@ def run_pipeline(
     # from the sigs barrier (same lazy contract as exact_edges).
     verified = verify_op.verify_pairs(pairs, sigs, cfg)
 
-    all_edges = _edge_union(
-        pages, sigs, exact_edges, verified, cfg, use_simhash, use_substring
-    )
+    frames = [exact_edges, verified]
+    if use_simhash:
+        frames.append(_simhash_edges(sigs, cfg))
+    if use_substring:
+        frames.append(_substring_edges(pages, cfg))
     # Barrier the union BEFORE connected components: large-star
     # references the edge relation 4x (sym union + m-join), and
     # without a barrier each reference drags the full upstream —
@@ -272,8 +286,8 @@ def run_pipeline(
     # (exchange-reuse canonicalization that held at 2M broke at 4M),
     # ~90 s of the 8-core leg's wall.  A ~100 B/edge parquet barrier
     # makes the fan-out O(edges), deterministically, at every scale.
-    # (run_checkpointed already barriers edges via sr.run("edges").)
-    all_edges = _materialize(all_edges, "edges", root)
+    # (run_checkpointed's "edges" stage is the same barrier.)
+    all_edges = _materialize(_union_edges(frames), "edges", root)
 
     comps = cluster_op.connected_components(all_edges, cfg.max_cc_rounds)
     assignment = assign_op.assignments(pages, comps)
@@ -288,38 +302,29 @@ def run_pipeline(
     )
 
 
-def _edge_union(
-    pages: DataFrame,
-    sigs: DataFrame,
-    exact_edges: DataFrame,
-    verified: DataFrame,
-    cfg: DedupConfig,
-    use_simhash: bool,
-    use_substring: bool,
-) -> DataFrame:
+def _simhash_edges(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """SimHash pairs over the signatures barrier.  One cheap count over
+    the materialized barrier (n_shingles column only) picks the
+    candidate-index physics; pair semantics are identical either way
+    (auto_index_config docstring)."""
+    n_live = sigs.filter(F.col("n_shingles") > 0).count()
+    sim_cfg = simhash_op.auto_index_config(cfg, n_live)
+    return simhash_op.simhash_pairs(sigs, sim_cfg)
+
+
+def _substring_edges(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    return substring_op.substring_pairs(
+        pages.select("url", "warc_ts", "text"), cfg
+    )
+
+
+def _union_edges(frames: list[DataFrame]) -> DataFrame:
     """The exact ∪ verified ∪ [simhash] ∪ [substring] edge relation,
-    deduplicated.  ONE definition for both run_pipeline and
-    run_checkpointed — the two paths previously carried drift-prone
-    copies of this block, and batch-vs-checkpointed parity depends on
+    deduplicated.  ONE definition for run_pipeline, run_checkpointed
+    and the flagship query — batch-vs-checkpointed parity depends on
     them staying identical."""
-    frames = [exact_edges, verified.select("url_a", "url_b")]
-    if use_simhash:
-        # one cheap count over the materialized barrier (n_shingles
-        # column only) picks the candidate-index physics; pair
-        # semantics identical either way (auto_index_config docstring)
-        n_live = sigs.filter(F.col("n_shingles") > 0).count()
-        sim_cfg = simhash_op.auto_index_config(cfg, n_live)
-        frames.append(simhash_op.simhash_pairs(sigs, sim_cfg))
-    if use_substring:
-        frames.append(
-            substring_op.substring_pairs(
-                pages.select("url", "warc_ts", "text"), cfg
-            )
-        )
-    out = frames[0]
-    for e in frames[1:]:
-        out = out.unionByName(e)
-    return out.distinct()
+    edges = [e.select("url_a", "url_b") for e in frames]
+    return functools.reduce(DataFrame.unionByName, edges).distinct()
 
 
 def config_fingerprint(
@@ -354,59 +359,94 @@ def run_checkpointed(
     use_simhash: bool = True,
     use_substring: bool = False,
 ) -> DataFrame:
-    """Checkpointed variant: every stage durable, resume from the last
-    complete one (destor recipe semantics)."""
+    """Checkpointed variant: every stage durable, resume from the
+    stages that committed (destor recipe semantics).  The stage graph
+    is declared once below; StageRunner.run_graph starts each stage as
+    soon as its inputs have committed (module docstring)."""
     sr = StageRunner(
         spark,
         ckpt_dir,
         run_id,
         context_fp=config_fingerprint(cfg, use_simhash, use_substring),
     )
-
-    # ONE text scan: content_sha rides in the signature stage (see
-    # signatures_stage docstring); the checkpointed sigs table then
-    # feeds the exact self-join without re-reading raw text.
-    sigs = sr.run(
-        "signatures",
-        lambda: signatures_stage(pages, cfg, with_sha=True),
-        # pre-r3 checkpoints have a complete signatures stage WITHOUT
-        # content_sha (it lived in a separate content_hashes stage);
-        # resuming one would fail at the exact pass's select below
-        required_cols=("url", "warc_ts", "content_sha"),
-    )
-    exact_edges = sr.run(
-        "exact_edges",
-        lambda: exact_op.exact_pairs(
-            sigs.select("url", "warc_ts", "content_sha")
+    stages = [
+        # ONE text scan: content_sha rides in the signature stage (see
+        # signatures_stage docstring); the checkpointed sigs table then
+        # feeds the exact self-join without re-reading raw text.
+        Stage(
+            "signatures",
+            (),
+            lambda: signatures_stage(pages, cfg, with_sha=True),
+            # pre-r3 checkpoints have a complete signatures stage
+            # WITHOUT content_sha (it lived in a separate content_hashes
+            # stage); resuming one would fail at the exact pass's select
+            required_cols=("url", "warc_ts", "content_sha"),
         ),
-    )
-    pairs = sr.run(
-        "candidate_pairs", lambda: lsh_op.candidate_pairs(sigs, cfg)[0]
-    )
-    # bucket_stats persisted per run: the destor-HAR pattern — this
-    # run's hot-bucket inventory informs the next run's salting and is
-    # part of the per-partition lineage (har_rewrite.c:17-180 inherits
-    # the previous backup's sparse-container list the same way).
-    # bucket_stats_only, not candidate_pairs(...)[1]: the tuple form
-    # would re-run the whole collect_list explode/groupBy — the job's
-    # largest shuffle — a second time just to persist this small table.
-    sr.run(
-        "bucket_stats",
-        lambda: lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg),
-    )
-    verified = sr.run(
-        "verified_pairs", lambda: verify_op.verify_pairs(pairs, sigs, cfg)
-    )
-
-    edges = sr.run(
-        "edges",
-        lambda: _edge_union(
-            pages, sigs, exact_edges, verified, cfg,
-            use_simhash, use_substring,
+        Stage(
+            "exact_edges",
+            ("signatures",),
+            lambda sigs: exact_op.exact_pairs(
+                sigs.select("url", "warc_ts", "content_sha")
+            ),
         ),
-    )
-    comps = sr.run(
-        "components",
-        lambda: cluster_op.connected_components(edges, cfg.max_cc_rounds),
-    )
-    return sr.run("assignments", lambda: assign_op.assignments(pages, comps))
+        Stage(
+            "candidate_pairs",
+            ("signatures",),
+            lambda sigs: lsh_op.candidate_pairs(sigs, cfg)[0],
+        ),
+        # bucket_stats persisted per run: the destor-HAR pattern — this
+        # run's hot-bucket inventory informs the next run's salting and
+        # is part of the per-partition lineage (har_rewrite.c:17-180
+        # inherits the previous backup's sparse-container list the same
+        # way).  bucket_stats_only, not candidate_pairs(...)[1]: the
+        # tuple form would re-run the whole collect_list explode/groupBy
+        # — the job's largest shuffle — a second time just to persist
+        # this small table.
+        Stage(
+            "bucket_stats",
+            ("signatures",),
+            lambda sigs: lsh_op.bucket_stats_only(
+                lsh_op.explode_bands(sigs), cfg
+            ),
+        ),
+        Stage(
+            "verified_pairs",
+            ("candidate_pairs", "signatures"),
+            lambda pairs, sigs: verify_op.verify_pairs(pairs, sigs, cfg),
+        ),
+    ]
+    pair_stages = ["exact_edges", "verified_pairs"]
+    if use_simhash:
+        stages.append(
+            Stage(
+                "simhash_pairs",
+                ("signatures",),
+                lambda sigs: _simhash_edges(sigs, cfg),
+            )
+        )
+        pair_stages.append("simhash_pairs")
+    if use_substring:
+        stages.append(
+            Stage("substring_pairs", (), lambda: _substring_edges(pages, cfg))
+        )
+        pair_stages.append("substring_pairs")
+    stages += [
+        Stage(
+            "edges",
+            tuple(pair_stages),
+            lambda *frames: _union_edges(list(frames)),
+        ),
+        Stage(
+            "components",
+            ("edges",),
+            lambda edges: cluster_op.connected_components(
+                edges, cfg.max_cc_rounds
+            ),
+        ),
+        Stage(
+            "assignments",
+            ("components",),
+            lambda comps: assign_op.assignments(pages, comps),
+        ),
+    ]
+    return sr.run_graph(stages)["assignments"]

@@ -1741,6 +1741,7 @@ def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_cap=PIPE_BUCKET_CAP,
     )
     from destor_spark.operators.portable_mh import pipeline_sigs_from_text
+    from destor_spark.plans.pipeline import _union_edges
 
     pages = _pipeline_pages(spark, sf_dir)
 
@@ -1762,10 +1763,7 @@ def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs, _stats = lsh_op.candidate_pairs(sigs, cfg)
     verified = verify_op.verify_pairs(pairs, sigs, cfg)
-    edges = _barrier(
-        exact_edges.unionByName(verified.select("url_a", "url_b")).distinct(),
-        "pipe_edges",
-    )
+    edges = _barrier(_union_edges([exact_edges, verified]), "pipe_edges")
     comps = cluster_op.connected_components(edges, cfg.max_cc_rounds)
     return assign_op.assignments(pages, comps).select(
         F.col("url").cast("bigint").alias("doc_id"),

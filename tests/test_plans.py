@@ -154,6 +154,45 @@ def test_query_barrier_previous_generation_survives_until_commit(spark):
     assert len(live) == 1
 
 
+def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
+    """Barriers re-read with the schema just written instead of paying a
+    schema-inference job.  That schema must equal what inference over
+    the written files returns, types and nullability included: a
+    signatures barrier (array<bigint>, string) plus a struct column and
+    a non-nullable column, through both ephemeral barriers."""
+    import os
+
+    from destor_spark.plans.pipeline import (
+        _materialize,
+        _materialize_gen,
+        signatures_stage,
+    )
+    from destor_spark.synth import make_corpus
+
+    pages = spark.createDataFrame(make_corpus(5, 60)[0])
+    sigs = signatures_stage(pages, cfg, with_sha=True).select(
+        "*",
+        F.struct("warc_ts", "url").alias("head"),
+        F.lit(1).alias("one"),
+    )
+    assert not sigs.schema["one"].nullable
+    types = {f.name: f.dataType.simpleString() for f in sigs.schema.fields}
+    assert types["sig"] == "array<bigint>"
+    assert types["head"].startswith("struct<")
+    assert types["url"] == "string"
+
+    root = str(tmp_path)
+    got = _materialize(sigs, "sigs", root)
+    assert got.schema == spark.read.parquet(os.path.join(root, "sigs")).schema
+    assert got.count() == 60
+
+    got = _materialize_gen(sigs, "schema_probe", root)
+    (gen_dir,) = [
+        d for d in os.listdir(root) if d.startswith("schema_probe_g")
+    ]
+    assert got.schema == spark.read.parquet(os.path.join(root, gen_dir)).schema
+
+
 def test_ivf_assign_is_map_side(spark):
     """IVF cell assignment must compile to a broadcast of the single
     centroid-array row plus per-row HOF scoring — NO shuffle exchange

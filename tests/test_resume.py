@@ -40,6 +40,111 @@ def test_resume_equals_fresh(spark, cfg, smoke_corpus, ckpt_dir):
     pd.testing.assert_frame_equal(fresh, resumed, check_dtype=False)
 
 
+def test_resume_pair_stages_with_substring(spark, cfg, smoke_corpus,
+                                           ckpt_dir):
+    """The durable pair stages resume like any other: delete both pair
+    stages and everything downstream of them, and the resumed run must
+    equal a fresh one."""
+    pages_pd, _ = smoke_corpus
+    pages = spark.createDataFrame(pages_pd)
+
+    fresh = _assign_pdf(run_checkpointed(
+        spark, pages, cfg, ckpt_dir + "_fresh", "rS0", use_substring=True
+    ))
+    run_checkpointed(spark, pages, cfg, ckpt_dir, "rS1", use_substring=True)
+    for stage in ("simhash_pairs", "substring_pairs", "edges", "components",
+                  "assignments"):
+        os.remove(os.path.join(ckpt_dir, f"{stage}.manifest.json"))
+        shutil.rmtree(os.path.join(ckpt_dir, stage))
+    resumed = _assign_pdf(run_checkpointed(
+        spark, pages, cfg, ckpt_dir, "rS2", use_substring=True
+    ))
+    pd.testing.assert_frame_equal(fresh, resumed, check_dtype=False)
+
+
+def test_failed_stage_waits_for_inflight_siblings(
+    spark, cfg, smoke_corpus, ckpt_dir, monkeypatch
+):
+    """A stage that raises while its siblings are running: the error
+    reaches the caller only after those siblings have finished (no
+    Spark job still writing under ckpt_dir), no stage starts after the
+    failure, the failed stage is not committed, and a rerun equals a
+    fresh run."""
+    import json
+    import time
+
+    from destor_spark.operators import lsh as lsh_op
+
+    pages_pd, _ = smoke_corpus
+    pages = spark.createDataFrame(pages_pd)
+    fresh = _assign_pdf(
+        run_checkpointed(spark, pages, cfg, ckpt_dir + "_fresh", "rX0")
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    seen_active = []
+
+    def boom(*args, **kwargs):
+        # raise only once a sibling stage has a Spark job running
+        deadline = time.time() + 60
+        while not tracker.getActiveJobsIds() and time.time() < deadline:
+            time.sleep(0.005)
+        seen_active.append(bool(tracker.getActiveJobsIds()))
+        raise RuntimeError("bucket_stats failed")
+
+    monkeypatch.setattr(lsh_op, "bucket_stats_only", boom)
+    with pytest.raises(RuntimeError, match="bucket_stats failed"):
+        run_checkpointed(spark, pages, cfg, ckpt_dir, "rX1")
+    assert seen_active == [True]
+    assert tracker.getActiveJobsIds() == []
+    monkeypatch.undo()
+
+    def status(stage):
+        p = os.path.join(ckpt_dir, f"{stage}.manifest.json")
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return json.load(f)["status"]
+
+    assert status("bucket_stats") is None
+    # the siblings in flight at the failure ran to their commit ...
+    for stage in ("exact_edges", "candidate_pairs", "simhash_pairs"):
+        assert status(stage) == "complete", stage
+    # ... and nothing downstream of them was started
+    for stage in ("verified_pairs", "edges", "components", "assignments"):
+        assert status(stage) is None, stage
+        assert not os.path.exists(os.path.join(ckpt_dir, stage)), stage
+
+    rerun = _assign_pdf(run_checkpointed(spark, pages, cfg, ckpt_dir, "rX2"))
+    pd.testing.assert_frame_equal(fresh, rerun, check_dtype=False)
+
+
+def test_manifest_counts_match_parquet(spark, cfg, smoke_corpus, ckpt_dir):
+    """Stage manifests take rows / partition_rows from the parquet
+    footers; they must equal a Spark count of the committed stage dir
+    for every stage, including one with zero output rows (exact_edges
+    over a corpus with no exact duplicates)."""
+    import json
+
+    pages_pd, _ = smoke_corpus
+    pages = spark.createDataFrame(pages_pd.drop_duplicates("text"))
+    run_checkpointed(spark, pages, cfg, ckpt_dir, "rN", use_substring=True)
+    with open(os.path.join(ckpt_dir, "metrics.jsonl")) as f:
+        stages = [json.loads(line)["stage"] for line in f]
+    assert {"simhash_pairs", "substring_pairs", "exact_edges"} <= set(stages)
+    for stage in stages:
+        with open(os.path.join(ckpt_dir, f"{stage}.manifest.json")) as f:
+            man = json.load(f)
+        n = spark.read.parquet(os.path.join(ckpt_dir, stage)).count()
+        assert man["rows"] == sum(man["partition_rows"].values()) == n, stage
+        assert man["n_partitions"] == len(man["partition_rows"]), stage
+        assert man["n_files"] >= 1 and man["data_size"] > 0, stage
+        if stage == "exact_edges":
+            assert n == 0
+        if stage == "signatures":
+            assert n == len(pages_pd.drop_duplicates("text"))
+
+
 def test_metrics_lineage(spark, cfg, smoke_corpus, ckpt_dir):
     import json
 
@@ -59,6 +164,7 @@ def test_metrics_lineage(spark, cfg, smoke_corpus, ckpt_dir):
         "candidate_pairs",
         "bucket_stats",
         "verified_pairs",
+        "simhash_pairs",
         "edges",
         "components",
         "assignments",

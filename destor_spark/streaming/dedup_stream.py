@@ -30,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from destor_spark.config import DedupConfig
 from destor_spark.operators import exact as exact_op
@@ -74,12 +75,12 @@ def stream_exact_dedup(
 
 
 def _check_store_layout(state_dir: str) -> None:
-    """Refuse to resume a state_dir written by the pre-bid-partitioned
-    layout (flat pairs/part-*.parquet, signatures/ub=*/part-* with no
-    bid= level).  Writing the current layout next to old-layout files
-    would leave a mix that crashes partition discovery on the NEXT
-    batch ("Conflicting directory structures") — failing up front with
-    a named remedy beats a delayed, cryptic read error."""
+    """Refuse to resume a state_dir written by a legacy layout (flat
+    pairs/part-*.parquet; signatures/ as flat part-files or split into
+    ub=* url-hash buckets).  Writing the current layout next to
+    old-layout files would leave a mix that crashes partition discovery
+    on the NEXT batch ("Conflicting directory structures") — failing up
+    front with a named remedy beats a delayed, cryptic read error."""
     pair_store = os.path.join(state_dir, "pairs")
     sig_store = os.path.join(state_dir, "signatures")
     legacy = []
@@ -88,32 +89,22 @@ def _check_store_layout(state_dir: str) -> None:
     ):
         legacy.append("pairs/ holds flat part-files (no bid= level)")
     if os.path.isdir(sig_store):
-        if any(f.startswith("part-") for f in os.listdir(sig_store)):
-            # the oldest layout: flat append, no ub= level at all
-            legacy.append(
-                "signatures/ holds flat part-files (no ub=/bid= levels)"
-            )
-        for ub in os.listdir(sig_store):
-            sub = os.path.join(sig_store, ub)
-            if (
-                ub.startswith("ub=")
-                and os.path.isdir(sub)
-                and any(f.startswith("part-") for f in os.listdir(sub))
-            ):
-                legacy.append(
-                    f"signatures/{ub}/ holds leaf part-files (no bid= "
-                    "level)"
-                )
-                break
+        entries = os.listdir(sig_store)
+        if any(f.startswith("part-") for f in entries):
+            # the oldest layout: flat append, no partition level at all
+            legacy.append("signatures/ holds flat part-files (no bid= level)")
+        if any(f.startswith("ub=") for f in entries):
+            legacy.append("signatures/ is split into ub= url-hash buckets")
     if legacy:
         raise RuntimeError(
             "state_dir uses the legacy pre-bid store layout ("
             + "; ".join(legacy)
-            + ").  The at-least-once layout partitions pairs by bid "
-            "and signatures by (ub, bid); mixing layouts corrupts "
+            + ").  The at-least-once layout partitions pairs and "
+            "signatures by bid alone; mixing layouts corrupts "
             "partition discovery.  Rebuild the store (delete "
             f"{state_dir} and replay the input), or migrate by "
-            "rewriting each store with its bid column as a partition."
+            "rewriting each store with its bid column as the only "
+            "partition."
         )
 
 
@@ -124,7 +115,6 @@ def run_incremental_dedup(
     cfg: DedupConfig,
     value_len: int = 64,
     n_key_buckets: int = 64,
-    n_url_buckets: int = 64,
     max_event_age: str | None = None,
     files_per_trigger: int = 4,
 ) -> None:
@@ -147,9 +137,13 @@ def run_incremental_dedup(
         partitions at every rewrite, so the physical store is bounded
         too.  Consequence (destor-identical): a document evicted from
         a bucket cannot match FUTURE arrivals through that bucket.
-      * signatures/ — (url, warc_ts, sig, ...) partitioned on
-        ub = pmod(xxhash64(url), n_url_buckets); verification reads
-        only the ub partitions of the candidate pairs' urls.
+      * signatures/ — (url, warc_ts, sig, ...) partitioned on bid
+        alone; verification left-semi-joins the store on the candidate
+        pairs' urls.  It has no url-hash partition level: with 64
+        such buckets, a 300-doc trigger's candidate pairs touch 45/64
+        of them in the first trigger and 63/64 in the second, so the
+        level prunes almost nothing and costs 64 directories plus a
+        listing job per trigger.
 
     Emitted pairs are restricted to those involving at least one url
     from the current batch (old-old pairs were emitted when first
@@ -411,7 +405,7 @@ def run_incremental_dedup(
         ).select("url", "warc_ts", "band", "key")
         pairs, _stats = lsh_op.bucket_pairs(members, cfg)
         new_urls = sigs.select("url")
-        pairs = _materialize(
+        pairs = _materialize(  # barrier: url semi-join + verify_pairs
             pairs.join(
                 F.broadcast(new_urls.withColumnRenamed("url", "url_a")),
                 "url_a",
@@ -431,26 +425,22 @@ def run_incremental_dedup(
             root,
         )
 
-        # verification: read only the url-hash partitions the pairs touch
-        urls_needed = (
-            pairs.select(F.col("url_a").alias("url"))
-            .unionByName(pairs.select(F.col("url_b").alias("url")))
-            .distinct()
-        )
-        ubs = [
-            r["ub"]
-            for r in urls_needed.select(
-                F.pmod(F.xxhash64("url"), F.lit(n_url_buckets)).alias("ub")
-            )
-            .distinct()
-            .collect()
-        ]
+        # verification: the stored signatures of the pairs' urls, read
+        # with the schema they were written with (no schema-inference
+        # job)
         all_sigs = sigs
-        if os.path.exists(sig_store) and ubs:
+        if os.path.exists(sig_store):
+            stored = StructType(list(sigs.schema)).add("bid", IntegerType())
+            urls_needed = (
+                pairs.select(F.col("url_a").alias("url"))
+                .unionByName(pairs.select(F.col("url_b").alias("url")))
+                .distinct()
+            )
             old_sigs = (
-                spark.read.parquet(sig_store)
-                .filter(F.col("ub").isin(ubs))
-                .drop("ub", "bid")
+                spark.read.schema(stored)
+                .parquet(sig_store)
+                .join(urls_needed, "url", "left_semi")
+                .drop("bid")
             )
             all_sigs = sigs.unionByName(old_sigs)
         # A url present in BOTH the batch and the store (re-crawl) — or
@@ -485,13 +475,10 @@ def run_incremental_dedup(
                 .parquet(pair_store)
             )
         (
-            sigs.withColumn(
-                "ub", F.pmod(F.xxhash64("url"), F.lit(n_url_buckets))
-            )
-            .withColumn("bid", F.lit(batch_id))
+            sigs.withColumn("bid", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ub", "bid")
+            .partitionBy("bid")
             .parquet(sig_store)
         )
 

@@ -351,7 +351,7 @@ def test_replay_after_checkpoint_loss_is_idempotent(spark, cfg, tmp_path):
     pd.testing.assert_frame_equal(first, second)
     assert len(second) == len(second.drop_duplicates())
     sigs = pd.read_parquet(os.path.join(state, "signatures"))
-    assert sigs.groupby(["url", "bid"]).size().max() == 1
+    assert sigs.groupby(["url", "bid"], observed=True).size().max() == 1
 
 
 def test_recrawl_emits_no_self_pair_and_no_fanout(spark, cfg, tmp_path):
@@ -602,6 +602,50 @@ def test_legacy_flat_store_layout_refused(spark, cfg, tmp_path):
     )
     with pytest.raises(RuntimeError, match="legacy pre-bid store layout"):
         run_incremental_dedup(spark, in_dir, state2, cfg)
+
+    # the url-bucketed layout: signatures/ub=*/bid=* (bid= directories
+    # written next to ub= ones would break partition discovery)
+    state3 = str(tmp_path / "state_legacy3")
+    ub_dir = os.path.join(state3, "signatures", "ub=3", "bid=0")
+    os.makedirs(ub_dir)
+    pd.DataFrame({"url": ["x"], "sig": [[1, 2]]}).to_parquet(
+        os.path.join(ub_dir, "part-00000.parquet"), index=False
+    )
+    with pytest.raises(RuntimeError, match="legacy pre-bid store layout"):
+        run_incremental_dedup(spark, in_dir, state3, cfg)
+
+
+def test_signature_store_keyed_by_batch_id(spark, cfg, tmp_path):
+    """The signature store is partitioned by bid alone: one bid=
+    directory per micro-batch, no url-bucket level, and each url stored
+    once per batch."""
+    in_dir = str(tmp_path / "in_sigbid")
+    state = str(tmp_path / "state_sigbid")
+    os.makedirs(in_dir)
+    day = lambda d: pd.Timestamp("2024-01-01") + pd.Timedelta(days=d)  # noqa: E731
+    _write_pages(
+        os.path.join(in_dir, "b1.parquet"), [("u00", day(1)), ("u01", day(1))]
+    )
+    _write_pages(
+        os.path.join(in_dir, "b2.parquet"), [("u00", day(2)), ("u02", day(2))]
+    )
+    run_incremental_dedup(spark, in_dir, state, cfg, files_per_trigger=1)
+
+    sig_store = os.path.join(state, "signatures")
+    children = {
+        c for c in os.listdir(sig_store) if not c.startswith(("_", "."))
+    }
+    assert children == {"bid=0", "bid=1"}, children
+    for c in children:
+        assert not any(
+            os.path.isdir(os.path.join(sig_store, c, f))
+            for f in os.listdir(os.path.join(sig_store, c))
+        ), f"{c} has a nested partition level"
+    # each url exactly once per bid
+    sigs = pd.read_parquet(sig_store)
+    assert sorted(zip(sigs.url, sigs.bid.astype(int))) == [
+        ("u00", 0), ("u00", 1), ("u01", 0), ("u02", 1)
+    ]
 
 
 def test_exact_dedup_state_bounded_by_watermark(spark, tmp_path):

@@ -5,10 +5,7 @@ destor's backup job is 6 pipelined phases over bounded queues
 parquet barrier between them (SURVEY.md section 3.1 "Spark
 restatement").
 
-`run_checkpointed` declares the pipeline once as a stage graph, each
-stage durable (StageRunner) so a killed job resumes from the stages
-that committed.  A stage starts as soon as its inputs have committed,
-so independent stages run concurrently:
+The pipeline is declared once, as the stage list `dedup_stages`:
 
   pages ─┬─> signatures ─┬─> exact_edges ───────────────────────┐
          │               ├─> candidate_pairs ─> verified_pairs ─┤
@@ -17,14 +14,17 @@ so independent stages run concurrently:
          └─> [substring_pairs] ─────────────────────────────────┴─> edges
                                     edges ─> components ─> assignments
 
-`substring_pairs` needs only the pages, so it overlaps `signatures`;
-`exact_edges`, `candidate_pairs`, `bucket_stats` and `simhash_pairs`
-start together once `signatures` commits; `edges` is the
-union/distinct of the committed pair stages.
+Two runners execute that one list:
 
-`run_pipeline` is the in-memory composition of the same pieces
-(tests, benchmarks, queries), with ephemeral barriers on the
-multi-consumer stages only.
+  * `run_checkpointed` hands it to StageRunner.run_graph: every stage
+    durable, so a killed job resumes from the stages that committed.
+    A stage starts as soon as its inputs have committed, so
+    `substring_pairs` overlaps `signatures`, and `exact_edges`,
+    `candidate_pairs`, `bucket_stats` and `simhash_pairs` start
+    together once `signatures` commits.
+  * `run_stages` runs it in memory, lazily and in definition order,
+    with an ephemeral barrier on IN_MEMORY_BARRIERS only.  It backs
+    `run_pipeline` (tests, benchmarks) and the flagship query.
 """
 
 from __future__ import annotations
@@ -36,7 +36,8 @@ import os
 import shutil
 import tempfile
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,26 +71,6 @@ class PipelineResult:
         otherwise accumulate intermediates until interpreter exit.)"""
         if self.mat_root:
             shutil.rmtree(self.mat_root, ignore_errors=True)
-
-
-def _materialize(df: DataFrame, tag: str, root: str) -> DataFrame:
-    """Stage barrier: parquet round-trip instead of .persist().
-
-    Spark's in-memory columnar cache is pathological for this data
-    shape — array<bigint> columns (128-long signatures, band keys) go
-    through per-element generic encoders on BOTH the build and every
-    read.  Measured at 100k docs / local[32], signature table + one
-    LSH consumer pass (min of 3 alternating repeats): persist 125 s,
-    localCheckpoint 111 s, parquet round-trip 68 s.  Parquet's
-    vectorized array codec wins on both sides, and the barrier
-    semantics (destor's bounded inter-phase queues,
-    /root/reference/src/do_backup.c:32-41) are identical.
-
-    On a multi-executor cluster the same pattern holds with a shared
-    root (set SPARK_GRAFT_MAT_DIR to a cluster-visible path), and the
-    durable variant of this barrier is StageRunner (run_checkpointed).
-    """
-    return write_barrier(df, os.path.join(root, tag))
 
 
 _SESSION_ROOTS: dict[str, str] = {}
@@ -228,80 +209,6 @@ def signatures_stage(
     return minhash_op.with_signatures_from_text(keyed, cfg)
 
 
-def run_pipeline(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    use_simhash: bool = True,
-    use_substring: bool = False,
-) -> PipelineResult:
-    # Materialize the reused stages eagerly (parquet barrier, see
-    # _materialize).  Eagerness matters: a lazy stage consumed by
-    # several subtrees of one action recomputes the whole lineage per
-    # subtree, which multiplied the wall time ~2x measured at 50k docs.
-    # destor's phases are hard barriers between queues
-    # (/root/reference/src/do_backup.c:32-41); these are the same
-    # barriers.
-    root = _mat_root(pages.sparkSession)
-
-    # ONE text scan for the whole job: content_sha (exact pass) is
-    # computed in the same pass as tokenize + signatures (JVM sha2
-    # beside the Arrow UDF), and the sigs barrier then feeds both the
-    # exact self-join and every LSH/simhash consumer.  Before r3 the
-    # exact pass had its own barrier and its own full scan of the raw
-    # text — at 100 TB the single largest avoidable IO.
-    sigs = _materialize(
-        signatures_stage(pages, cfg, with_sha=True), "sigs", root
-    )
-    exact_edges = exact_op.exact_pairs(
-        sigs.select("url", "warc_ts", "content_sha")
-    )
-    pairs, _ = lsh_op.candidate_pairs(sigs, cfg)
-    # stats via the count-only aggregate: row-identical to the tuple's
-    # second element but a consumer touching res.bucket_stats pays one
-    # lean (band,key,count) shuffle instead of re-running the
-    # collect_list groupBy — the job's largest shuffle — from the sigs
-    # barrier a second time.
-    bucket_stats = lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg)
-    # pairs and verified are SINGLE-consumer links in the chain
-    # sigs -> pairs -> verified -> edges (the edges barrier below
-    # materializes the whole chain once): barriering them bought no
-    # recompute protection and cost two parquet write+read cycles —
-    # measured r6 A/B (min of 2 alternating): 4.68 -> 3.47 s at 5k
-    # docs, 8.55 -> 6.91 s at 50k.  The sigs barrier stays: it feeds
-    # exact + LSH + verify + simhash (4 consumers).  PipelineResult
-    # still exposes both lazily; a caller consuming them recomputes
-    # from the sigs barrier (same lazy contract as exact_edges).
-    verified = verify_op.verify_pairs(pairs, sigs, cfg)
-
-    frames = [exact_edges, verified]
-    if use_simhash:
-        frames.append(_simhash_edges(sigs, cfg))
-    if use_substring:
-        frames.append(_substring_edges(pages, cfg))
-    # Barrier the union BEFORE connected components: large-star
-    # references the edge relation 4x (sym union + m-join), and
-    # without a barrier each reference drags the full upstream —
-    # measured at 4M docs/local[8]: the ~6.3 GB simhash key-table
-    # exchange ran THREE times as concurrent AQE query stages
-    # (exchange-reuse canonicalization that held at 2M broke at 4M),
-    # ~90 s of the 8-core leg's wall.  A ~100 B/edge parquet barrier
-    # makes the fan-out O(edges), deterministically, at every scale.
-    # (run_checkpointed's "edges" stage is the same barrier.)
-    all_edges = _materialize(_union_edges(frames), "edges", root)
-
-    comps = cluster_op.connected_components(all_edges, cfg.max_cc_rounds)
-    assignment = assign_op.assignments(pages, comps)
-    return PipelineResult(
-        signatures=sigs,
-        exact_edges=exact_edges,
-        candidate_pairs=pairs,
-        verified_pairs=verified,
-        bucket_stats=bucket_stats,
-        assignments=assignment,
-        mat_root=root,
-    )
-
-
 def _simhash_edges(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """SimHash pairs over the signatures barrier.  One cheap count over
     the materialized barrier (n_shingles column only) picks the
@@ -312,71 +219,29 @@ def _simhash_edges(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return simhash_op.simhash_pairs(sigs, sim_cfg)
 
 
-def _substring_edges(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return substring_op.substring_pairs(
-        pages.select("url", "warc_ts", "text"), cfg
-    )
-
-
-def _union_edges(frames: list[DataFrame]) -> DataFrame:
-    """The exact ∪ verified ∪ [simhash] ∪ [substring] edge relation,
-    deduplicated.  ONE definition for run_pipeline, run_checkpointed
-    and the flagship query — batch-vs-checkpointed parity depends on
-    them staying identical."""
-    edges = [e.select("url_a", "url_b") for e in frames]
-    return functools.reduce(DataFrame.unionByName, edges).distinct()
-
-
-def config_fingerprint(
-    cfg: DedupConfig, use_simhash: bool, use_substring: bool
-) -> str:
-    """Stable fingerprint of every parameter that determines stage
-    outputs, recorded in each stage manifest: resuming a checkpoint
-    under a DIFFERENT config must recompute, not silently return
-    results computed under the old parameters."""
-    import dataclasses
-    import hashlib
-    import json
-
-    payload = json.dumps(
-        {
-            "cfg": dataclasses.asdict(cfg),
-            "use_simhash": bool(use_simhash),
-            "use_substring": bool(use_substring),
-        },
-        sort_keys=True,
-        default=list,
-    )
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def run_checkpointed(
-    spark: SparkSession,
+def dedup_stages(
     pages: DataFrame,
     cfg: DedupConfig,
-    ckpt_dir: str,
-    run_id: str = "r0",
     use_simhash: bool = True,
     use_substring: bool = False,
-) -> DataFrame:
-    """Checkpointed variant: every stage durable, resume from the
-    stages that committed (destor recipe semantics).  The stage graph
-    is declared once below; StageRunner.run_graph starts each stage as
-    soon as its inputs have committed (module docstring)."""
-    sr = StageRunner(
-        spark,
-        ckpt_dir,
-        run_id,
-        context_fp=config_fingerprint(cfg, use_simhash, use_substring),
-    )
+    signatures: DataFrame | None = None,
+) -> list[Stage]:
+    """The dedup pipeline, declared once (module docstring graph).
+
+    signatures: a signature table to use instead of signatures_stage,
+    with the same columns (the flagship query's SQL-portable md5
+    family)."""
+    pair_stages = ["exact_edges", "verified_pairs"]
     stages = [
         # ONE text scan: content_sha rides in the signature stage (see
-        # signatures_stage docstring); the checkpointed sigs table then
-        # feeds the exact self-join without re-reading raw text.
+        # signatures_stage docstring); the signatures table then feeds
+        # the exact self-join without re-reading raw text.
         Stage(
             "signatures",
             (),
-            lambda: signatures_stage(pages, cfg, with_sha=True),
+            (lambda: signatures)
+            if signatures is not None
+            else lambda: signatures_stage(pages, cfg, with_sha=True),
             # pre-r3 checkpoints have a complete signatures stage
             # WITHOUT content_sha (it lived in a separate content_hashes
             # stage); resuming one would fail at the exact pass's select
@@ -415,7 +280,6 @@ def run_checkpointed(
             lambda pairs, sigs: verify_op.verify_pairs(pairs, sigs, cfg),
         ),
     ]
-    pair_stages = ["exact_edges", "verified_pairs"]
     if use_simhash:
         stages.append(
             Stage(
@@ -427,14 +291,25 @@ def run_checkpointed(
         pair_stages.append("simhash_pairs")
     if use_substring:
         stages.append(
-            Stage("substring_pairs", (), lambda: _substring_edges(pages, cfg))
+            Stage(
+                "substring_pairs",
+                (),
+                lambda: substring_op.substring_pairs(
+                    pages.select("url", "warc_ts", "text"), cfg
+                ),
+            )
         )
         pair_stages.append("substring_pairs")
-    stages += [
+    return stages + [
+        # the exact ∪ verified ∪ [simhash] ∪ [substring] edge relation,
+        # deduplicated
         Stage(
             "edges",
             tuple(pair_stages),
-            lambda *frames: _union_edges(list(frames)),
+            lambda *frames: functools.reduce(
+                DataFrame.unionByName,
+                [e.select("url_a", "url_b") for e in frames],
+            ).distinct(),
         ),
         Stage(
             "components",
@@ -449,4 +324,98 @@ def run_checkpointed(
             lambda comps: assign_op.assignments(pages, comps),
         ),
     ]
+
+
+# The stages run_stages barriers.  Eagerly: a lazy stage consumed by
+# several subtrees of one action recomputes its whole lineage per
+# subtree (~2x wall measured at 50k docs); destor's phases are the same
+# hard barriers between queues (do_backup.c:32-41).
+#   * signatures has four consumers (exact, LSH, verify, simhash).
+#   * edges: connected components references the edge relation 4x
+#     (sym union + m-join).  Without a barrier each reference drags the
+#     full upstream — at 4M docs/local[8] the ~6.3 GB simhash key-table
+#     exchange ran THREE times as concurrent AQE query stages, ~90 s of
+#     the 8-core leg's wall.  A ~100 B/edge parquet barrier makes the
+#     fan-out O(edges), deterministically, at every scale.
+# Every other stage is a single-consumer link (the edges barrier
+# materializes the chain once): barriering candidate_pairs and
+# verified_pairs bought no recompute protection and cost two parquet
+# write+read cycles — r6 A/B, min of 2 alternating: 4.68 -> 3.47 s at
+# 5k docs, 8.55 -> 6.91 s at 50k without them.  A caller consuming an
+# unbarriered stage recomputes it from the signatures barrier.
+IN_MEMORY_BARRIERS = ("signatures", "edges")
+
+
+def run_stages(
+    stages: list[Stage], barrier: Callable[[DataFrame, str], DataFrame]
+) -> dict[str, DataFrame]:
+    """In-memory runner: each stage's fn in definition order, lazily,
+    with barrier(df, name) on IN_MEMORY_BARRIERS only."""
+    out: dict[str, DataFrame] = {}
+    for st in stages:
+        df = st.fn(*(out[i] for i in st.inputs))
+        if st.name in IN_MEMORY_BARRIERS:
+            df = barrier(df, st.name)
+        out[st.name] = df
+    return out
+
+
+def run_pipeline(
+    pages: DataFrame,
+    cfg: DedupConfig,
+    use_simhash: bool = True,
+    use_substring: bool = False,
+) -> PipelineResult:
+    """dedup_stages in memory, barriers in a per-run dir (mat_root)."""
+    root = _mat_root(pages.sparkSession)
+    out = run_stages(
+        dedup_stages(pages, cfg, use_simhash, use_substring),
+        lambda df, name: write_barrier(df, os.path.join(root, name)),
+    )
+    keep = {f.name for f in fields(PipelineResult)} - {"mat_root"}
+    return PipelineResult(mat_root=root, **{k: out[k] for k in keep})
+
+
+def config_fingerprint(
+    cfg: DedupConfig, use_simhash: bool, use_substring: bool
+) -> str:
+    """Stable fingerprint of every parameter that determines stage
+    outputs, recorded in each stage manifest: resuming a checkpoint
+    under a DIFFERENT config must recompute, not silently return
+    results computed under the old parameters."""
+    import dataclasses
+    import hashlib
+    import json
+
+    payload = json.dumps(
+        {
+            "cfg": dataclasses.asdict(cfg),
+            "use_simhash": bool(use_simhash),
+            "use_substring": bool(use_substring),
+        },
+        sort_keys=True,
+        default=list,
+    )
+    return hashlib.sha256(payload.encode()).hexdigest()[:16]
+
+
+def run_checkpointed(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: DedupConfig,
+    ckpt_dir: str,
+    run_id: str = "r0",
+    use_simhash: bool = True,
+    use_substring: bool = False,
+) -> DataFrame:
+    """dedup_stages with every stage durable: resume from the stages
+    that committed (destor recipe semantics); StageRunner.run_graph
+    starts each stage as soon as its inputs have committed."""
+    sr = StageRunner(
+        spark,
+        ckpt_dir,
+        run_id,
+        context_fp=config_fingerprint(cfg, use_simhash, use_substring),
+    )
+    stages = dedup_stages(pages, cfg, use_simhash, use_substring)
     return sr.run_graph(stages)["assignments"]

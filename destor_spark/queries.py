@@ -52,7 +52,7 @@ def _barrier(df: DataFrame, tag: str) -> DataFrame:
     persist() of array<string>/array<bigint> columns goes through the
     per-element generic columnar-cache encoders on build AND every read;
     the parquet round-trip is ~2x faster both ways (measured, see
-    plans/pipeline._materialize).  Uses the session's stable query root
+    plans/checkpoint.write_barrier).  Uses the session's stable query root
     with a per-tag GENERATION counter (plans/pipeline._materialize_gen):
     repeated driver invocations of one query hold a single barrier's
     worth of disk per tag, concurrent invocations get distinct dirs,
@@ -1720,18 +1720,14 @@ def _pipeline_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full dedup pipeline over the documents table —
     exact pass + MinHash/LSH candidates (cap/star skew rule) +
-    signature verify + union-find CC + canonical assignment — through
-    the same operator modules run_pipeline composes, configured with
-    the md5 permutation family so SQL_DEDUP_PIPELINE_ASSIGNMENTS
-    reproduces it exactly (see PIPE_* notes above)."""
+    signature verify + union-find CC + canonical assignment — as the
+    same stage list run_pipeline and run_checkpointed run
+    (plans/pipeline.dedup_stages), with the md5 permutation family as
+    its signatures so SQL_DEDUP_PIPELINE_ASSIGNMENTS reproduces it
+    exactly (see PIPE_* notes above)."""
     from destor_spark.config import DedupConfig
-    from destor_spark.operators import (
-        assign as assign_op,
-        cluster as cluster_op,
-        exact as exact_op,
-        lsh as lsh_op,
-        verify as verify_op,
-    )
+    from destor_spark.operators.portable_mh import pipeline_sigs_from_text
+    from destor_spark.plans.pipeline import dedup_stages, run_stages
 
     cfg = DedupConfig(
         num_hashes=NUM_MH,
@@ -1740,32 +1736,20 @@ def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tau=0.5,
         bucket_cap=PIPE_BUCKET_CAP,
     )
-    from destor_spark.operators.portable_mh import pipeline_sigs_from_text
-    from destor_spark.plans.pipeline import _union_edges
-
     pages = _pipeline_pages(spark, sf_dir)
-
-    # one text scan feeds exact + LSH + verify (same fusion as
-    # run_pipeline's sigs barrier).  r6: sha256 + shingles + the 16 md5
-    # minima + band keys all come from the fused Arrow kernel
-    # (operators/portable_mh.py) — bit-identical to the r5 expression
-    # chain (parity: tests/test_portable_mh.py::test_pipeline_sigs_*),
-    # without the ~10^8 per-(p, shingle) JVM Md5 calls.
-    sigs = _barrier(
-        pipeline_sigs_from_text(
-            _spread(pages), NUM_MH, MH_BANDS, MH_ROWS, K
-        ),
-        "pipe_sigs",
+    # r6: sha256 + shingles + the 16 md5 minima + band keys all come
+    # from the fused Arrow kernel (operators/portable_mh.py) —
+    # bit-identical to the r5 expression chain (parity:
+    # tests/test_portable_mh.py::test_pipeline_sigs_*), without the
+    # ~10^8 per-(p, shingle) JVM Md5 calls.
+    sigs = pipeline_sigs_from_text(
+        _spread(pages), NUM_MH, MH_BANDS, MH_ROWS, K
     )
-
-    exact_edges = exact_op.exact_pairs(
-        sigs.select("url", "warc_ts", "content_sha")
+    out = run_stages(
+        dedup_stages(pages, cfg, use_simhash=False, signatures=sigs),
+        lambda df, name: _barrier(df, f"pipe_{name}"),
     )
-    pairs, _stats = lsh_op.candidate_pairs(sigs, cfg)
-    verified = verify_op.verify_pairs(pairs, sigs, cfg)
-    edges = _barrier(_union_edges([exact_edges, verified]), "pipe_edges")
-    comps = cluster_op.connected_components(edges, cfg.max_cc_rounds)
-    return assign_op.assignments(pages, comps).select(
+    return out["assignments"].select(
         F.col("url").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
         "is_canonical",

@@ -237,8 +237,7 @@ def build_session(
     # Event-log instrumentation for perf_eventlog.py attribution runs
     # (opt-in: per-task metrics cost a little driver time).  Honored
     # here so EVERY harness (perf_scaling/perf_opportunistic/
-    # perf_heap_ab) inherits it — the r5 heap A/B passed this env var
-    # but only perf_stages.py's private snippet consumed it.
+    # perf_heap_ab) inherits it.
     # Crashed-worker diagnosability (opt-in, same pattern as event
     # logs): a Python worker that dies in native code (numpy/Arrow)
     # otherwise surfaces only as "Python worker exited unexpectedly"

@@ -187,7 +187,8 @@ def run_incremental_dedup(
         bytes stay bounded by the FIFO k plus one batch's width.
     None (default) disables event-time retention (FIFO only).
     """
-    from destor_spark.plans.pipeline import _materialize, _mat_root
+    from destor_spark.plans.checkpoint import write_barrier
+    from destor_spark.plans.pipeline import _mat_root
 
     band_store = os.path.join(state_dir, "band_store")
     sig_store = os.path.join(state_dir, "signatures")
@@ -219,8 +220,9 @@ def run_incremental_dedup(
     def _process_inner(
         batch: DataFrame, batch_id: int, root: str
     ) -> None:
-        sigs = _materialize(
-            signatures_stage(batch, cfg), f"b{batch_id}_sigs", root
+        sigs = write_barrier(
+            signatures_stage(batch, cfg),
+            os.path.join(root, f"b{batch_id}_sigs"),
         )
         if not sigs.head(1):
             # foreachBatch can deliver an empty micro-batch; writing
@@ -364,12 +366,11 @@ def run_incremental_dedup(
         w = Window.partitionBy("band", "key").orderBy(
             F.desc("bid"), F.desc("warc_ts"), F.desc("url")
         )
-        retained = _materialize(  # barrier: store is read AND rewritten
+        retained = write_barrier(  # barrier: store is read AND rewritten
             merged.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= value_len)
             .drop("rn"),
-            f"b{batch_id}_retained",
-            root,
+            os.path.join(root, f"b{batch_id}_retained"),
         )
         # STATE EVICTION is deliberately LAZY: batch N's rewrite keeps
         # every member its join could see (the lag-filtered visible set
@@ -405,7 +406,7 @@ def run_incremental_dedup(
         ).select("url", "warc_ts", "band", "key")
         pairs, _stats = lsh_op.bucket_pairs(members, cfg)
         new_urls = sigs.select("url")
-        pairs = _materialize(  # barrier: url semi-join + verify_pairs
+        pairs = write_barrier(  # barrier: url semi-join + verify_pairs
             pairs.join(
                 F.broadcast(new_urls.withColumnRenamed("url", "url_a")),
                 "url_a",
@@ -421,8 +422,7 @@ def run_incremental_dedup(
                 )
             )
             .distinct(),
-            f"b{batch_id}_pairs",
-            root,
+            os.path.join(root, f"b{batch_id}_pairs"),
         )
 
         # verification: the stored signatures of the pairs' urls, read
@@ -456,10 +456,9 @@ def run_incremental_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        verified = _materialize(  # barrier: consumed by head(1) + write
+        verified = write_barrier(  # barrier: consumed by head(1) + write
             verify_op.verify_pairs(pairs, all_sigs, cfg),
-            f"b{batch_id}_verified",
-            root,
+            os.path.join(root, f"b{batch_id}_verified"),
         )
         # Durable outputs are partitioned by batch id and written with
         # dynamic partition overwrite: an at-least-once replay of batch

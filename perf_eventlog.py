@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Spark event-log analyzer for scaling diagnosis.
 
-Reads the JSON event log(s) a perf_stages/perf_scaling run writes when
-SPARK_GRAFT_EVENT_DIR is set and prints, per stage: wall, summed task
-run/CPU/GC time, scheduler delay, shuffle bytes, and the achieved
-parallelism (task-time / wall).  The two ratios that matter on this
-host (BENCH.md):
+Reads the JSON event log(s) a perf_scaling (or any build_session) run
+writes when SPARK_GRAFT_EVENT_DIR is set and prints, per stage: wall,
+summed task run/CPU/GC time, scheduler delay, shuffle bytes, and the
+achieved parallelism (task-time / wall).  The two ratios that matter
+on this host (BENCH.md):
 
   * gc/run high on one leg only -> GC parallelism mismatch;
   * parallelism << cores on the WIDE leg only -> under-partitioned

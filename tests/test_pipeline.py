@@ -3,6 +3,8 @@ exact assignment equality (FIXTURES.md section 3 gates)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -46,6 +48,14 @@ def test_assignments_match_oracle(smoke_run):
     _, _, spark_assign, o, _ = smoke_run
     oa = o["assignments"][["url", "cluster_id", "is_canonical"]]
     pd.testing.assert_frame_equal(spark_assign, oa, check_dtype=False)
+
+
+def test_in_memory_barriers(smoke_run):
+    """run_pipeline barriers exactly the multi-consumer stages:
+    signatures (four consumers) and edges (read 4x by connected
+    components); every other stage stays a lazy link."""
+    res = smoke_run[0]
+    assert set(os.listdir(res.mat_root)) == {"signatures", "edges"}
 
 
 def test_pair_recall_and_precision(smoke_run):

@@ -162,11 +162,8 @@ def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
     a non-nullable column, through both ephemeral barriers."""
     import os
 
-    from destor_spark.plans.pipeline import (
-        _materialize,
-        _materialize_gen,
-        signatures_stage,
-    )
+    from destor_spark.plans.checkpoint import write_barrier
+    from destor_spark.plans.pipeline import _materialize_gen, signatures_stage
     from destor_spark.synth import make_corpus
 
     pages = spark.createDataFrame(make_corpus(5, 60)[0])
@@ -182,7 +179,7 @@ def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
     assert types["url"] == "string"
 
     root = str(tmp_path)
-    got = _materialize(sigs, "sigs", root)
+    got = write_barrier(sigs, os.path.join(root, "sigs"))
     assert got.schema == spark.read.parquet(os.path.join(root, "sigs")).schema
     assert got.count() == 60
 

@@ -9,7 +9,7 @@ import shutil
 import pandas as pd
 import pytest
 
-from destor_spark.plans.pipeline import run_checkpointed
+from destor_spark.plans.pipeline import run_checkpointed, run_pipeline
 
 
 @pytest.fixture()
@@ -60,6 +60,13 @@ def test_resume_pair_stages_with_substring(spark, cfg, smoke_corpus,
         spark, pages, cfg, ckpt_dir, "rS2", use_substring=True
     ))
     pd.testing.assert_frame_equal(fresh, resumed, check_dtype=False)
+    # the in-memory runner runs the same stage list: batch == durable
+    batch = _assign_pdf(
+        run_pipeline(pages, cfg, use_substring=True).assignments
+    )
+    pd.testing.assert_frame_equal(
+        fresh, batch[fresh.columns], check_dtype=False
+    )
 
 
 def test_failed_stage_waits_for_inflight_siblings(

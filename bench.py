@@ -155,10 +155,10 @@ def run_dedup_pipeline(
 
 
 def bench_simhash_passes(spark, pages_path: str) -> dict[str, float]:
-    """Pigeonhole (default) vs 8-block combination index (SCALE_CONFIG
-    path) over the SAME signature table: identical verified pairs
-    (parity-gated in tests/test_simhash_combo.py), different bucket
-    selectivity — the number the combo path exists to improve."""
+    """Pigeonhole (default) vs 8-block combination index over the SAME
+    signature table: identical verified pairs (parity-gated in
+    tests/test_simhash_combo.py), different bucket selectivity — the
+    number the combo path exists to improve."""
     from destor_spark.config import DedupConfig
     from destor_spark.operators.simhash import simhash_pairs
     from destor_spark.plans.checkpoint import write_barrier

@@ -11,7 +11,7 @@ pipeline must both run at for the recall >= 0.99 parity gate
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -47,9 +47,6 @@ class DedupConfig:
                                    # strategy='star_hot' in bucket_stats
                                    # (still star-paired; the flag is the
                                    # next run's salting/pre-split input)
-    lsh_two_phase: bool = False    # True: size-preagg + semi-join path that
-                                   # never holds a bucket in one task (extreme
-                                   # skew regime); same pair semantics
     # canonical selection is FIXED to (warc_ts, url) ordering (destor:
     # first-copy-wins, kvstore_htable.c:44-53) — it is hardcoded at
     # every ordering site (exact.py, lsh.py, assign.py, oracle.py), so
@@ -92,17 +89,3 @@ DEFAULT_CONFIG = DedupConfig()
 
 # A cheap config for unit tests / the DuckDB-parity driver queries.
 SMALL_CONFIG = DedupConfig(num_hashes=32, bands=8, rows=4, tau=0.6)
-
-# The 10^12-doc cluster profile.  Pair SEMANTICS are identical to
-# DEFAULT_CONFIG (parity-gated in tests/test_simhash_combo.py and
-# tests/test_scale_config.py); only the physical strategies change:
-#   * simhash_combo_blocks=8 — the Manku WWW'07 combination index:
-#     C(8,5)=56 tables of 40-bit keys instead of 4 dense 16-bit
-#     blocks, ~2^24x more selective per bucket, the difference between
-#     bucket-join fanout that survives 10^12 docs and one that
-#     doesn't (pigeonhole's 16-bit blocks give 2^48 expected members
-#     per bucket at that scale);
-#   * lsh_two_phase=True — band-bucket pair generation via size
-#     pre-aggregation + semi-join, so no task ever materializes an
-#     oversized bucket in memory (boilerplate hot buckets).
-SCALE_CONFIG = DedupConfig(simhash_combo_blocks=8, lsh_two_phase=True)

@@ -601,18 +601,9 @@ def has_common_substring(a: str, b: str, k: int) -> bool:
         return True
     if len(a) < k or len(b) < k:
         return False
-    ka = _window_keys(a, k)
-    kb = _window_keys(b, k)
-    common, ia, ib = np.intersect1d(ka, kb, return_indices=True)
-    if common.size == 0:
-        return False
-    for i, j in zip(ia.tolist(), ib.tolist()):
-        if a[i : i + k] == b[j : j + k]:
-            return True
-    # shared keys, no confirm: either a genuine 62-bit collision or the
-    # intersect picked a collided (i, j) pair while the true match sits
-    # at other positions of the same key — arbitrate exactly.
-    return _has_common_substring_py(a, b, k)
+    return _keyed_common_substring(
+        a, _window_keys(a, k), b, _window_keys(b, k), k
+    )
 
 
 def _keyed_common_substring(
@@ -625,6 +616,9 @@ def _keyed_common_substring(
     for i, j in zip(ia.tolist(), ib.tolist()):
         if a[i : i + k] == b[j : j + k]:
             return True
+    # shared keys, no confirm: either a genuine 62-bit collision or the
+    # intersect picked a collided (i, j) pair while the true match sits
+    # at other positions of the same key — arbitrate exactly.
     return _has_common_substring_py(a, b, k)
 
 

@@ -22,8 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from destor_spark import hashing as H
-
 
 def _dot(a, b):
     return F.aggregate(
@@ -678,9 +676,7 @@ def ivf_assign(
     msim is integer micro-units so the argmax is portable to the DuckDB
     oracle (ties broken by centroid_id ASC on both engines).  K is
     bounded by the broadcast ceiling (K ~ sqrt(N) ~ 10^6 cells x 64
-    dims x 8 B ~ 500 MB at 10^12 docs); past ~10^3 cells the O(K)
-    fold per row should move to ivf_assign_matmul (same semantics,
-    BLAS throughput), parity-gated in tests/test_ann_recall.py.
+    dims x 8 B ~ 500 MB at 10^12 docs).
     """
     v = emb.select(
         F.col(id_col).alias(id_alias),
@@ -708,58 +704,6 @@ def ivf_assign(
     )
 
 
-def ivf_assign_matmul(
-    emb: DataFrame,
-    cents_pd: "pd.DataFrame",
-    nprobe: int = 1,
-    id_alias: str = "vec_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The large-K scale path for ivf_assign: one numpy matmul per Arrow
-    batch against the (collected, bounded O(K x dim)) centroid matrix —
-    the quantizer is a model artifact, not data, so materializing it
-    driver-side is the standard IVF deployment shape.  Semantics are
-    identical to ivf_assign (micro-unit rounding, centroid_id ASC
-    tie-break via lexsort); parity is gated on the fixture corpus in
-    tests/test_ann_recall.py::test_ivf_assign_matmul_parity.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    order = np.argsort(cents_pd["centroid_id"].to_numpy(), kind="stable")
-    cent_ids = cents_pd["centroid_id"].to_numpy()[order].astype(np.int64)
-    cmat = np.asarray(
-        cents_pd["cvec"].to_numpy()[order].tolist(), dtype=np.float64
-    )
-    # zero-norm clip: cosine_sim defines cosine(0, y) = 0, so a zero
-    # vector must score msim 0 for every cell (-> lowest-id cells win
-    # the stable tie-break, matching ivf_assign exactly) instead of
-    # 0/0 -> NaN -> INT64_MIN garbage from astype
-    cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cmat_n = cmat / np.where(cnorm == 0.0, 1.0, cnorm)
-
-    @pandas_udf(ArrayType(LongType()))
-    def cells(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray(vecs.tolist(), dtype=np.float64)
-        vnorm = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(vnorm == 0.0, 1.0, vnorm)
-        s = mat @ cmat_n.T * 1_000_000
-        # HALF_UP (away from zero), matching JVM F.round / DuckDB
-        # round() in ivf_assign — np.rint is half-to-even, which flips
-        # the cell on exact-.5 micro-cosine ties vs the oracle path.
-        msim = (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
-        # centroid columns are already in ascending-id order, so a
-        # stable sort on -msim breaks ties by centroid_id ASC
-        top = np.argsort(-msim, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(cent_ids[top].tolist())
-
-    return emb.select(
-        F.col(id_col).alias(id_alias),
-        F.explode(cells(F.col(vec_col))).alias("cell"),
-    )
-
-
 def _ivf_assign_np(
     emb: DataFrame,
     cents_pd: "pd.DataFrame",
@@ -770,8 +714,7 @@ def _ivf_assign_np(
 ) -> DataFrame:
     """ivf_assign with exact-fold numpy scoring (r6): bit-identical to
     the expression path — the fold kernels reproduce the JVM doubles
-    exactly (not just the argmax, unlike ivf_assign_matmul's
-    normalize-first formulation), HALF_UP micro-rounding, stable
+    exactly (not just the argmax), HALF_UP micro-rounding, stable
     tie-break centroid_id ASC.  One mapInArrow scan, no crossJoin
     against the broadcast centroid struct."""
     import pyarrow as pa

@@ -66,27 +66,49 @@ def bucket_pairs(
     lexicographic — see _norm_pair; in-bucket ordering and star-head
     selection remain by (warc_ts, url), first-copy-wins).
 
-    Two physical strategies with IDENTICAL pair semantics (the pandas
-    oracle mirrors the semantics, not the physical shape):
-
-      * single-phase (default, cfg.lsh_two_phase=False): ONE groupBy
-        collects each bucket, pairs generated JVM-side from the array.
-        2 shuffles total.  A bucket materializes as one in-task array —
-        fine up to millions of members, the regime the cap/star rule
-        already targets.
-      * two-phase (cfg.lsh_two_phase=True): pre-aggregate bucket sizes,
-        drop singletons by semi-join, all-pairs only for small buckets,
-        star via a separate min-aggregate + join so no task ever holds
-        an oversized bucket in memory.  4 shuffles; the choice for
-        pathological hot buckets (boilerplate shingles at 10^12 docs).
+    One groupBy collects each bucket and the pairs are generated
+    JVM-side from the sorted member array: 2 shuffles total.  A bucket
+    materializes as one in-task array — fine up to millions of
+    members, the regime the cap/star rule already targets.
 
     Shared by the MinHash band pass and the SimHash block pass — both
     are instances of destor's feature->segment-list index lookup
     (/root/reference/src/index/kvstore_htable.c:156-168).
     """
-    if not getattr(cfg, "lsh_two_phase", False):
-        return _bucket_pairs_single_phase(ex, cfg)
-    return _bucket_pairs_two_phase(ex, cfg)
+    grouped = (
+        ex.groupBy("band", "key")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("warc_ts", "url"))).alias(
+                "ms"
+            )
+        )
+        .filter(F.size("ms") >= 2)
+    )
+    bucket_stats = grouped.select(
+        "band",
+        "key",
+        # cast: F.size is int32 while bucket_stats_only derives size
+        # from F.count (int64) — the two producers of this relation
+        # must agree on schema, not just values (checkpointed stats
+        # tables get restored and compared across runs)
+        F.size("ms").cast("long").alias("size"),
+        _strategy(F.size("ms"), cfg).alias("strategy"),
+    )
+    pair_array = F.when(
+        F.size("ms") <= cfg.bucket_cap, _combos(F.col("ms"))
+    ).otherwise(_star(F.col("ms")))
+    pairs = (
+        grouped.select(F.explode(pair_array).alias("p"))
+        .select("p.url_a", "p.url_b")
+        # a url present TWICE in one bucket (streaming store + re-crawl
+        # of the same page, or duplicate input rows) would otherwise
+        # emit the degenerate self-pair (X, X) — the member structs
+        # differ on warc_ts, so i<j combination does not exclude it
+        .filter(F.col("url_a") != F.col("url_b"))
+        .select(*_norm_pair())
+        .distinct()
+    )
+    return pairs, bucket_stats
 
 
 def _strategy(size_col, cfg: DedupConfig):
@@ -159,95 +181,6 @@ def _star(ms):
         F.slice(ms, 2, F.size(ms)),
         lambda y: F.struct(head.alias("url_a"), y["url"].alias("url_b")),
     )
-
-
-def _bucket_pairs_single_phase(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    grouped = (
-        ex.groupBy("band", "key")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("warc_ts", "url"))).alias(
-                "ms"
-            )
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    bucket_stats = grouped.select(
-        "band",
-        "key",
-        # cast: F.size is int32 while the two-phase path and
-        # bucket_stats_only derive size from F.count (int64) — the
-        # three producers of this relation must agree on schema, not
-        # just values (checkpointed stats tables get restored and
-        # compared across runs)
-        F.size("ms").cast("long").alias("size"),
-        _strategy(F.size("ms"), cfg).alias("strategy"),
-    )
-    pair_array = F.when(
-        F.size("ms") <= cfg.bucket_cap, _combos(F.col("ms"))
-    ).otherwise(_star(F.col("ms")))
-    pairs = (
-        grouped.select(F.explode(pair_array).alias("p"))
-        .select("p.url_a", "p.url_b")
-        # a url present TWICE in one bucket (streaming store + re-crawl
-        # of the same page, or duplicate input rows) would otherwise
-        # emit the degenerate self-pair (X, X) — the member structs
-        # differ on warc_ts, so i<j combination does not exclude it
-        .filter(F.col("url_a") != F.col("url_b"))
-        .select(*_norm_pair())
-        .distinct()
-    )
-    return pairs, bucket_stats
-
-
-def _bucket_pairs_two_phase(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    sizes = ex.groupBy("band", "key").agg(F.count("*").alias("size"))
-    multi = sizes.filter(F.col("size") >= 2)
-
-    bucket_stats = multi.withColumn(
-        "strategy", _strategy(F.col("size"), cfg)
-    )
-
-    # Inner join drops singleton buckets (the vast majority) before any
-    # pair work; the sizes aggregate is tiny relative to ex.
-    members = ex.join(multi, ["band", "key"])
-
-    # --- small buckets: all-pairs, JVM combination generation ---
-    small = members.filter(F.col("size") <= cfg.bucket_cap)
-    grouped = small.groupBy("band", "key").agg(
-        F.array_sort(
-            F.collect_list(F.struct("warc_ts", "url"))
-        ).alias("ms")
-    )
-    small_pairs = (
-        grouped.select(F.explode(_combos(F.col("ms"))).alias("p"))
-        .select("p.url_a", "p.url_b")
-        # same self-pair guard as the single-phase path (a url twice in
-        # one bucket under different warc_ts)
-        .filter(F.col("url_a") != F.col("url_b"))
-    )
-
-    # --- oversized buckets: star to the bucket head (min (warc_ts,url)) ---
-    big = members.filter(F.col("size") > cfg.bucket_cap)
-    heads = big.groupBy("band", "key").agg(
-        F.min(F.struct("warc_ts", "url")).alias("head")
-    )
-    star_pairs = (
-        big.join(heads, ["band", "key"])
-        .filter(F.col("url") != F.col("head.url"))
-        .select(
-            F.col("head.url").alias("url_a"),
-            F.col("url").alias("url_b"),
-        )
-    )
-
-    pairs = (
-        small_pairs.unionByName(star_pairs).select(*_norm_pair()).distinct()
-    )
-    return pairs, bucket_stats
 
 
 def candidate_pairs(

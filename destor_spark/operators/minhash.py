@@ -1,4 +1,4 @@
-"""MinHash signatures + LSH band keys as one Arrow-vectorized UDF.
+"""MinHash signatures + LSH band keys as one Arrow-vectorized stage.
 
 destor analogue: min-fingerprint feature sampling per segment
 (index_sampling_min, /root/reference/src/index/sampling_method.c:12-76)
@@ -6,19 +6,17 @@ destor analogue: min-fingerprint feature sampling per segment
 band of r rows folds into one bucket key (the "feature" that the kv
 index would store, /root/reference/src/index/kvstore_htable.c:156-168).
 
-One pandas UDF per document batch: shingle-mix (rolling polynomial over
-token hashes), MinHash permutations, band-key folding — all numpy
-uint64 from destor_spark.hashing, shared verbatim with the pandas
-oracle, so Spark-vs-oracle signature equality is by construction.
+One mapInArrow pass per document batch: tokenize + xxh64, shingle-mix
+(rolling polynomial over token hashes), MinHash permutations, band-key
+folding — all numpy uint64 from destor_spark.hashing, shared verbatim
+with the pandas oracle, so Spark-vs-oracle signature equality is by
+construction.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from destor_spark import hashing as H
 from destor_spark.config import DedupConfig
@@ -46,45 +44,6 @@ def doc_signature(
     return H.to_signed(sig), H.to_signed(bk), int(sh.shape[0]), H.simhash64(sh)
 
 
-def make_signature_udf(cfg: DedupConfig):
-    a, b = H.minhash_params(cfg.num_hashes, cfg.seed)
-
-    @pandas_udf(SIG_SCHEMA)
-    def signature_udf(token_hashes: pd.Series) -> pd.DataFrame:
-        sigs, bands, counts, simhashes = [], [], [], []
-        for th in token_hashes:
-            th = np.asarray(th, dtype=np.int64) if th is not None else np.empty(0, np.int64)
-            s, bk, n, sh = doc_signature(th, cfg, a, b)
-            sigs.append(s)
-            bands.append(bk)
-            counts.append(n)
-            simhashes.append(sh)
-        return pd.DataFrame(
-            {
-                "sig": sigs,
-                "band_keys": bands,
-                "n_shingles": counts,
-                "simhash": simhashes,
-            }
-        )
-
-    return signature_udf
-
-
-def with_signatures(df: DataFrame, cfg: DedupConfig,
-                    token_col: str = "token_hashes") -> DataFrame:
-    """Adds sig/band_keys/n_shingles/simhash columns; drops the token array."""
-    udf = make_signature_udf(cfg)
-    out = df.withColumn("_s", udf(F.col(token_col)))
-    return (
-        out.withColumn("sig", F.col("_s.sig"))
-        .withColumn("band_keys", F.col("_s.band_keys"))
-        .withColumn("n_shingles", F.col("_s.n_shingles"))
-        .withColumn("simhash", F.col("_s.simhash"))
-        .drop("_s", token_col)
-    )
-
-
 # ---------------------------------------------------------------------------
 # fused text -> signature stage (mapInArrow, zero per-token objects)
 # ---------------------------------------------------------------------------
@@ -104,7 +63,13 @@ def _sig_batch_arrays(
 
     ta = texts
     if ta.null_count:
-        ta = pa.compute.fill_null(ta, "")
+        # imported here, not at the top: `import pyarrow` alone does
+        # not bind pa.compute (a fresh worker failed on its first null
+        # text), and the module costs every worker memory it otherwise
+        # never needs
+        import pyarrow.compute as pc
+
+        ta = pc.fill_null(ta, "")
     ta = ta.cast(pa.large_string())
     n = len(ta)
     # offsets buffer is int64[n+1] starting at the array's slice offset
@@ -151,7 +116,7 @@ def with_signatures_from_text(
 ) -> DataFrame:
     """text -> sig/band_keys/n_shingles/simhash in ONE Arrow stage.
 
-    Replaces the JVM split + F.transform(xxhash64) + pandas-UDF chain:
+    Replaced (r5) the JVM split + F.transform(xxhash64) + pandas-UDF chain:
     higher-order functions are interpreted (not codegen'd) and box
     every token hash — profiled at 1M docs/8 cores, the tokenize+
     signature stage billed 30-50% of executor run time to GC.  The
@@ -168,9 +133,8 @@ def with_signatures_from_text(
     a, b = H.minhash_params(cfg.num_hashes, cfg.seed)
     keep = [f for f in df.schema.fields if f.name != text_col]
     keep_names = [f.name for f in keep]
-    # appending SIG_SCHEMA itself: the fused stage emits the SAME
-    # signature columns as the pandas-UDF path above, so the two
-    # stages cannot silently diverge
+    # appending SIG_SCHEMA itself: the stage's signature columns are
+    # declared once, beside doc_signature (the oracle's kernel)
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in keep
     ) + (", " if keep else "") + SIG_SCHEMA

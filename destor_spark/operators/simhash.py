@@ -58,7 +58,7 @@ def auto_index_config(cfg: DedupConfig, n_live: int) -> DedupConfig:
     filters over the same Hamming ball and the exact bit_count verify
     runs after either — parity-gated in tests/test_simhash_combo.py);
     only the bucket-join physics differ.  An explicit
-    cfg.simhash_combo_blocks (e.g. SCALE_CONFIG) is always respected;
+    cfg.simhash_combo_blocks is always respected;
     combo_blocks == 0 means "auto": classic pigeonhole until the
     expected per-bucket occupancy n_live / 2^width crosses
     PIGEONHOLE_MAX_OCCUPANCY, the Manku combination index beyond.
@@ -152,7 +152,7 @@ def explode_blocks(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
 def simhash_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate + verified pairs with Hamming distance <= radius.
 
-    sigs: the signature table from minhash.with_signatures
+    sigs: the signature table from pipeline.signatures_stage
     (url, warc_ts, ..., n_shingles, simhash).
     """
     from destor_spark.operators.lsh import bucket_pairs

@@ -6,10 +6,6 @@ feature count and keeps the top-k
 candidate pair is scored by estimated Jaccard — the fraction of equal
 MinHash signature positions — entirely JVM-side (zip_with + aggregate
 inside whole-stage codegen), and kept if >= tau.
-
-An optional exact re-check (token-shingle Jaccard) exists for
-borderline pairs; the default pipeline and the oracle both use the
-signature estimate so parity is exact.
 """
 
 from __future__ import annotations

@@ -103,15 +103,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", _tokens(F.col("text")).alias("w")
-    )
-    return d.filter(F.size("w") >= K).select(
-        "doc_id", _shingles(F.col("w")).alias("sh")
-    )
-
-
 def _kgram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s) — exploded distinct K-shingle relation via the fused
     Arrow kernel, with s = the gram's 16-byte md5 DIGEST: every
@@ -132,7 +123,7 @@ def _kgram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh) — the portable md5 MinHash relation, computed by
     the fused Arrow kernel (operators/portable_mh.py) instead of the
-    r5 expression chain `_portable_minhash(_shingled_docs(...))`.
+    r5 expression chain `_portable_minhash` over `_shingles`.
     Signatures are bit-identical (min over positions == min over the
     distinct set; md5 kernel parity pinned in tests/test_md5np.py,
     operator parity in tests/test_portable_mh.py); at sf1 the
@@ -560,14 +551,6 @@ WHERE CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
 """
 
 
-def _shingles_of(df: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, sh) with the portable K-shingle rules."""
-    d = df.select("doc_id", _tokens(F.col("text")).alias("w"))
-    return d.filter(F.size("w") >= K).select(
-        "doc_id", _shingles(F.col("w")).alias("sh")
-    )
-
-
 def _portable_minhash(sh_df: DataFrame) -> DataFrame:
     """(doc_id, sh) -> (doc_id, mh): md5-string minima, NUM_MH perms."""
     return sh_df.select(
@@ -620,8 +603,8 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from destor_spark.operators.portable_mh import minhash_hex_from_text
 
     # r6: both signature tables via the fused md5 Arrow kernel
-    # (bit-identical to _portable_minhash over _shingled_docs /
-    # _shingles_of — same text, same md5 family)
+    # (bit-identical to _portable_minhash over _shingles — same text,
+    # same md5 family)
     mh_base = _barrier(_mh_docs(spark, sf_dir), "inc_mh_base")
     mh_delta = _barrier(
         minhash_hex_from_text(

@@ -236,8 +236,8 @@ def build_session(
     )
     # Event-log instrumentation for perf_eventlog.py attribution runs
     # (opt-in: per-task metrics cost a little driver time).  Honored
-    # here so EVERY harness (perf_scaling/perf_opportunistic/
-    # perf_heap_ab) inherits it.
+    # here so EVERY harness (perf_scaling/perf_opportunistic)
+    # inherits it.
     # Crashed-worker diagnosability (opt-in, same pattern as event
     # logs): a Python worker that dies in native code (numpy/Arrow)
     # otherwise surfaces only as "Python worker exited unexpectedly"

@@ -59,7 +59,7 @@ def analyze(path: str, top_n: int = 12) -> list[dict]:
         return p
 
     # ONE application per analysis: a reused event dir accumulates an
-    # eventlog_v2_<app> dir per run (perf_heap_ab reuses a
+    # eventlog_v2_<app> dir per run (a harness may reuse a
     # deterministic dir), and merging apps would count the hours
     # BETWEEN runs as driver idle, sum stage walls across runs, and
     # take `cores` from whichever app parsed last.  Keep the newest.

@@ -208,33 +208,6 @@ def test_ivf_driver_query_matches_duckdb(spark, sf):
     assert sp[du.columns.tolist()].astype("int64").equals(du.astype("int64"))
 
 
-def test_ivf_assign_matmul_parity(spark):
-    """The numpy-matmul scale path assigns every vector to the SAME
-    cells as the oracle-exact JVM higher-order-function path (micro
-    rounding + centroid_id tie-break reproduced via stable lexsort)."""
-    from destor_spark.operators.ann import (
-        ivf_assign,
-        ivf_assign_matmul,
-        ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = ivf_centroids(emb, n_cells=16)
-    cents_pd = cents.toPandas()
-    for nprobe in (1, 4):
-        jvm = {
-            (r.vec_id, r.cell)
-            for r in ivf_assign(emb, cents, nprobe=nprobe).collect()
-        }
-        mm = {
-            (r.vec_id, r.cell)
-            for r in ivf_assign_matmul(
-                emb, cents_pd, nprobe=nprobe
-            ).collect()
-        }
-        assert jvm == mm
-
-
 def test_ivf_topk_recall_and_candidate_fraction(spark):
     """IVF's trade made visible: at 16 cells / nprobe 4 the re-rank
     touches roughly nprobe/n_cells of the corpus while recall@10 stays
@@ -256,11 +229,12 @@ def test_zero_vector_never_kills_the_job(spark):
     it as 0 (nullif/coalesce) instead of dying with DIVIDE_BY_ZERO
     under Spark 4's default ANSI mode — one degenerate media/embedding
     row must not fail a corpus-scale ANN job.  Both the transform path
-    (ivf_assign) and the matmul twin must agree on degenerate input."""
+    (ivf_assign) and the numpy path (_ivf_assign_np, used when the
+    query set is broadcast) must agree on degenerate input."""
     from destor_spark.operators.ann import (
+        _ivf_assign_np,
         brute_force_topk,
         ivf_assign,
-        ivf_assign_matmul,
         ivf_centroids,
     )
 
@@ -281,7 +255,7 @@ def test_zero_vector_never_kills_the_job(spark):
     cents = ivf_centroids(emb, n_cells=2)
     a1 = ivf_assign(emb, cents, 1).toPandas().sort_values("vec_id")
     a2 = (
-        ivf_assign_matmul(emb, cents.toPandas(), 1)
+        _ivf_assign_np(emb, cents.toPandas(), 1, "vec_id")
         .toPandas()
         .sort_values("vec_id")
     )

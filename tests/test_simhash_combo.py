@@ -68,7 +68,7 @@ def test_combo_config_validation():
 
 def test_auto_index_config_crossover():
     """Pigeonhole below the measured occupancy crossover, combo above;
-    an explicit combo_blocks (SCALE_CONFIG) is always respected."""
+    an explicit combo_blocks is always respected."""
     from destor_spark.operators.simhash import (
         AUTO_COMBO_BLOCKS,
         PIGEONHOLE_MAX_OCCUPANCY,

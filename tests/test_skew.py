@@ -77,7 +77,7 @@ def test_star_hot_flag_and_stats_only_parity(spark, hot_corpus):
     'star_hot' in bucket_stats while the PAIR rule stays identical to
     star; and bucket_stats_only (the count-only aggregate used by the
     checkpointed lineage stage) returns row-identical stats to the
-    collect_list path, in both physical phases."""
+    collect_list path."""
     from destor_spark.operators import lsh as lsh_op
     from destor_spark.plans.pipeline import signatures_stage
 
@@ -86,32 +86,30 @@ def test_star_hot_flag_and_stats_only_parity(spark, hot_corpus):
     sigs = signatures_stage(sdf, cfg)
     ex = lsh_op.explode_bands(sigs).localCheckpoint()
 
-    for two_phase in (False, True):
-        base = DedupConfig(lsh_two_phase=two_phase)
-        hot = DedupConfig(lsh_two_phase=two_phase, bucket_hard_cap=100)
-        pairs_b, stats_b = lsh_op.bucket_pairs(ex, base)
-        pairs_h, stats_h = lsh_op.bucket_pairs(ex, hot)
-        sh = stats_h.toPandas()
-        assert (sh["strategy"] == "star_hot").any(), "flag never engaged"
-        assert set(sh["strategy"]) <= {"all_pairs", "star", "star_hot"}
-        # pair semantics unchanged by the flag
-        assert pairs_b.exceptAll(pairs_h).count() == 0
-        assert pairs_h.exceptAll(pairs_b).count() == 0
-        # stats_only row-identical to the tuple stats (same cfg) —
-        # and SCHEMA-identical: the three producers of this relation
-        # (single-phase F.size, two-phase count, stats_only count)
-        # must agree on types too, or checkpointed stats tables from
-        # different paths conflict on restore/union
-        so_df = lsh_op.bucket_stats_only(ex, hot)
-        assert [
-            (f.name, f.dataType.simpleString()) for f in so_df.schema
-        ] == [
-            (f.name, f.dataType.simpleString()) for f in stats_h.schema
-        ]
-        so = so_df.toPandas()
-        key = ["band", "key"]
-        a = sh.sort_values(key).reset_index(drop=True)
-        b = so.sort_values(key).reset_index(drop=True)
-        assert len(a) == len(b)
-        assert (a["size"].to_numpy() == b["size"].to_numpy()).all()
-        assert (a["strategy"].to_numpy() == b["strategy"].to_numpy()).all()
+    hot = DedupConfig(bucket_hard_cap=100)
+    pairs_b, _ = lsh_op.bucket_pairs(ex, cfg)
+    pairs_h, stats_h = lsh_op.bucket_pairs(ex, hot)
+    sh = stats_h.toPandas()
+    assert (sh["strategy"] == "star_hot").any(), "flag never engaged"
+    assert set(sh["strategy"]) <= {"all_pairs", "star", "star_hot"}
+    # pair semantics unchanged by the flag
+    assert pairs_b.exceptAll(pairs_h).count() == 0
+    assert pairs_h.exceptAll(pairs_b).count() == 0
+    # stats_only row-identical to the tuple stats (same cfg) —
+    # and SCHEMA-identical: the two producers of this relation
+    # (bucket_pairs F.size, stats_only count) must agree on types
+    # too, or checkpointed stats tables from different paths conflict
+    # on restore/union
+    so_df = lsh_op.bucket_stats_only(ex, hot)
+    assert [
+        (f.name, f.dataType.simpleString()) for f in so_df.schema
+    ] == [
+        (f.name, f.dataType.simpleString()) for f in stats_h.schema
+    ]
+    so = so_df.toPandas()
+    key = ["band", "key"]
+    a = sh.sort_values(key).reset_index(drop=True)
+    b = so.sort_values(key).reset_index(drop=True)
+    assert len(a) == len(b)
+    assert (a["size"].to_numpy() == b["size"].to_numpy()).all()
+    assert (a["strategy"].to_numpy() == b["strategy"].to_numpy()).all()

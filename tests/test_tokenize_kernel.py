@@ -6,8 +6,8 @@ Three layers:
      re.split + the parity-tested pure-Python xxh64 (which
      tests/test_hash_parity.py pins against Spark's JVM xxhash64);
   2. property test over adversarial strings (hypothesis);
-  3. Spark-level: with_signatures_from_text output frame-equals the
-     old with_token_hashes -> with_signatures path on a corpus with
+  3. Spark-level: with_signatures_from_text output equals the pandas
+     oracle's doc_signature over tokenize + xxh64 on a corpus with
      nulls, empties, unicode, exotic whitespace and >=32-byte tokens.
 """
 
@@ -135,30 +135,39 @@ def spark():
 
 
 def test_fused_stage_equals_legacy_path(spark):
-    """with_signatures_from_text == with_token_hashes + with_signatures
-    row for row (the fused Arrow stage replaces the JVM tokenize path
-    only physically — same signatures, bands, counts, simhashes)."""
+    """with_signatures_from_text == the oracle's doc_signature over
+    tokenize + xxh64, row for row (the fused Arrow stage changes the
+    tokenize path only physically — same signatures, bands, counts,
+    simhashes)."""
     from destor_spark.config import SMALL_CONFIG
     from destor_spark.operators.minhash import (
-        with_signatures,
+        doc_signature,
         with_signatures_from_text,
     )
-    from destor_spark.operators.shingles import with_token_hashes
+    from destor_spark.oracle import _TokenHasher, tokenize
 
     rows = [(f"u{i:03d}", d) for i, d in enumerate(TRICKY)]
     rows.append(("u_null", None))
     df = spark.createDataFrame(rows, "url string, text string")
 
-    legacy = with_signatures(
-        with_token_hashes(df).drop("text"), SMALL_CONFIG
-    )
     fused = with_signatures_from_text(df, SMALL_CONFIG)
 
+    mh = H.minhash_params(SMALL_CONFIG.num_hashes, SMALL_CONFIG.seed)
+    th = _TokenHasher()
+    want = {}
+    for url, text in rows:
+        sig, bk, n, sim = doc_signature(
+            th(tokenize(text)), SMALL_CONFIG, *mh
+        )
+        want[url] = (sig.tolist(), bk.tolist(), n, int(sim))
+
     cols = ["url", "sig", "band_keys", "n_shingles", "simhash"]
-    a = {r["url"]: r for r in legacy.select(cols).collect()}
-    b = {r["url"]: r for r in fused.select(cols).collect()}
-    assert set(a) == set(b)
-    for url in a:
-        assert a[url] == b[url], url
+    got = {
+        r["url"]: (r["sig"], r["band_keys"], r["n_shingles"], r["simhash"])
+        for r in fused.select(cols).collect()
+    }
+    assert set(got) == set(want)
+    for url in want:
+        assert got[url] == want[url], url
     assert fused.schema["n_shingles"].dataType.simpleString() == "int"
     assert fused.schema["simhash"].dataType.simpleString() == "bigint"

@@ -1,15 +1,22 @@
 """Approximate-nearest-neighbor / similarity search over embeddings.
 
-Two paths over an `array<float>` embedding column:
+Three operators over an `array<float>` embedding column, one physical
+path each:
 
-  * brute-force cosine top-k — the exactness baseline: cross join of a
-    (small, broadcast) query set against the corpus, dot product via
-    zip_with/aggregate (JVM codegen, no Python), ranked by a window.
-  * LSH-bucketed (random hyperplane / SRP) — the scale path: sign-bit
-    sketch of each vector -> bucket equality join shrinks the candidate
-    set from O(N*Q) to bucket-local, then exact cosine re-rank.  At
-    10^12 rows the bucket join is the only viable shape; the sketch is
+  * brute-force cosine top-k — the exactness baseline: the (small)
+    query set is collected as grouped matrices and every corpus Arrow
+    batch scores all queries in one numpy kernel, ranked by a window.
+  * LSH-bucketed (random hyperplane / SRP) and IVF — the scale paths:
+    a sign-bit sketch (or an md5-sampled coarse quantizer) shrinks the
+    candidate set from O(N*Q) to bucket/cell-local, then an exact
+    cosine re-rank scores the (query, neighbor) rows.  At 10^12 rows
+    the bucket join is the only viable shape; the sketch is
     deterministic (seeded numpy hyperplanes broadcast as literals).
+    Broadcast-or-shuffle for every join is left to AQE.
+
+All scoring runs through two exact-fold numpy kernels: pairwise_msim_np
+(row-aligned pairs, the re-rank) and _msim_vs_groups (corpus rows x a
+small collected vector set: brute-force queries, IVF centroids).
 
 destor analogue: similarity detection over segment features — sketch
 first, exact top-k after (/root/reference/src/index/similarity_detection.c:49-126).
@@ -54,14 +61,8 @@ def cosine_sim(a, b):
     )
 
 
-def _msim(a, b):
-    """Integer micro-unit cosine (HALF_UP round) — the portable score
-    every ANN operator and every DuckDB twin ranks by."""
-    return F.round(cosine_sim(a, b) * 1_000_000).cast("bigint")
-
-
 # ---------------------------------------------------------------------------
-# exact-fold numpy scoring kernels (r6)
+# exact-fold numpy scoring kernels
 # ---------------------------------------------------------------------------
 # The expression cosine above is evaluated per PAIR by Spark's
 # interpreted higher-order functions (zip_with/aggregate have no
@@ -73,7 +74,7 @@ def _msim(a, b):
 # (each op IEEE-double-rounded), and the numpy loop below performs the
 # identical op sequence per element lane (acc += A[:, i] * B[:, i]), so
 # dot, norm, cosine and the HALF_UP micro-rounding are equal to the
-# expression path on every input — not just approximately (parity
+# expression cosine on every input — not just approximately (parity
 # pinned in tests/test_ann_np.py).  F.round(double) == sign *
 # floor(abs + 0.5) for every representable value (x.5 is always
 # exactly representable below 2^52, and BigDecimal.valueOf shortest-
@@ -105,7 +106,8 @@ def _fold_norms(A: np.ndarray) -> np.ndarray:
 
 
 def _half_up_micro(cos: np.ndarray) -> np.ndarray:
-    """round(cos * 1e6) HALF_UP -> int64, matching F.round/_msim."""
+    """round(cos * 1e6) HALF_UP -> int64, matching
+    F.round(cosine_sim(a, b) * 1e6).cast('bigint')."""
     s = cos * 1_000_000.0
     return (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
 
@@ -168,38 +170,39 @@ def _vec_matrix(col, dim: int):
     return mat, lens
 
 
-def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
-    """Bounded query-set collect: (ids ndarray, qmat (m,d), qnorm) or
-    None when the set is empty/ragged (callers fall back to the
-    expression path).  The query set is a model-sized artifact (same
-    contract as the IVF centroid collect in _cent_struct_array)."""
-    qpd = queries.select(id_col, vec_col).toPandas()
-    if len(qpd) == 0:
-        return None
-    vecs = qpd[vec_col].tolist()
-    if any(v is None for v in vecs):
-        return None
-    lens = {len(v) for v in vecs}
-    if len(lens) != 1 or 0 in lens:
-        return None
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-    qids = qpd[id_col].to_numpy()
-    return qids, qmat, _fold_norms(qmat)
-
-
-def _qvec(queries: DataFrame, id_col: str, vec_col: str, broadcast: bool):
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
+def _vector_groups(pdf: pd.DataFrame, id_col: str, vec_col: str):
+    """A collected, model-sized vector set (brute-force queries, IVF
+    centroids) -> (ids, [(dim, cols, mat, norms)]): one group per
+    vector length, cols the group's positions in pdf order.  Null and
+    empty vectors form a dim <= 0 group that scores 0 everywhere."""
+    vecs = pdf[vec_col].tolist()
+    lens = np.array(
+        [-1 if v is None else len(v) for v in vecs], dtype=np.int64
     )
-    return F.broadcast(q) if broadcast else q
+    groups = []
+    for d in np.unique(lens):
+        cols = np.flatnonzero(lens == d)
+        mat = np.zeros((cols.size, max(int(d), 0)), dtype=np.float64)
+        if d > 0:
+            mat[:] = [vecs[i] for i in cols]
+        groups.append((int(d), cols, mat, _fold_norms(mat)))
+    return pdf[id_col].to_numpy(), groups
 
 
-def _cvec(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-    )
+def _msim_vs_groups(col, n: int, groups) -> np.ndarray:
+    """(n, m) integer micro-cosine of each row of an Arrow list column
+    against every vector of _vector_groups' groups (columns in the
+    collected set's order).  A length mismatch scores exactly 0, the
+    expression semantics (zip_with null-pads, the dot is NULL and
+    cosine_sim coalesces to 0): _vec_matrix zero-fills such rows, so
+    their denominator is 0."""
+    m = sum(g[1].size for g in groups)
+    out = np.zeros((n, m), dtype=np.int64)
+    for dim, cols, mat, norms in groups:
+        if dim > 0:
+            rows, _ = _vec_matrix(col, dim)
+            out[:, cols] = _msim_cross_np(rows, _fold_norms(rows), mat, norms)
+    return out
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -214,77 +217,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "msim")
     )
-
-
-def _rerank_candidates_np(
-    cand: DataFrame,
-    emb: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    qnorm: np.ndarray,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Exact-cosine re-rank via the exact-fold numpy kernels: the
-    corpus vector attaches to each candidate row once (one join), the
-    query side rides along as the collected (m, d) matrix — no second
-    vector join, no interpreted per-pair folds.  Emits per-batch local
-    top-k before the global ranking window (same containment argument
-    as _score_corpus_topk)."""
-    import pyarrow as pa
-
-    sel = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    joined = cand.join(sel, "neighbor_id").select(
-        "query_id", "neighbor_id", "cv"
-    )
-    id_type = dict(
-        (f.name, f.dataType.simpleString()) for f in emb.schema.fields
-    )[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, msim bigint"
-    dim = qmat.shape[1]
-    qpos = {q: i for i, q in enumerate(qids.tolist())}
-
-    def gen(batches):
-        import pandas as pd
-
-        for rb in batches:
-            qcol = rb.column(0).to_numpy(zero_copy_only=False)
-            ncol = rb.column(1).to_numpy(zero_copy_only=False)
-            cmat, _lens = _vec_matrix(rb.column(2), dim)
-            qidx = pd.Series(qcol).map(qpos).to_numpy(dtype=np.int64)
-            cn = _fold_norms(cmat)
-            dots = _fold_dot_rows(cmat, qmat[qidx])
-            denom = cn * qnorm[qidx]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0.0, 0.0, dots / denom)
-            msim = _half_up_micro(cos)
-            # local top-k per query: global order is (msim desc,
-            # neighbor asc), so keeping each query's first k rows in
-            # that order preserves the global top-k set
-            order = np.lexsort((ncol, -msim, qidx))
-            qs = qidx[order]
-            new_grp = np.ones(qs.shape[0], dtype=bool)
-            new_grp[1:] = qs[1:] != qs[:-1]
-            grp_start = np.maximum.accumulate(
-                np.where(new_grp, np.arange(qs.shape[0]), 0)
-            )
-            rank_in_grp = np.arange(qs.shape[0]) - grp_start
-            keep = order[rank_in_grp < k]
-            if keep.size == 0:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qcol[keep], from_pandas=True),
-                    pa.array(ncol[keep], from_pandas=True),
-                    pa.array(msim[keep]),
-                ],
-                names=["query_id", "neighbor_id", "msim"],
-            )
-
-    return _rank_topk(joined.mapInArrow(gen, out_schema), k)
 
 
 def pairwise_msim_np(
@@ -342,23 +274,32 @@ def pairwise_msim_np(
     return df.mapInArrow(gen, out_schema)
 
 
-def _rerank_candidates(
-    cand: DataFrame, q: DataFrame, c: DataFrame, k: int
+def _rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    emb: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
     """Exact-cosine re-rank of a (query_id, neighbor_id) candidate
-    relation: join back both vector sides, score, rank.  Shared by
-    srp_topk and ivf_topk (brute_force_topk scores inside its single
-    broadcast cross join instead — no candidate relation exists)."""
-    scored = (
+    relation, shared by srp_topk and ivf_topk: join both vector sides
+    back, score the rows with pairwise_msim_np, rank.  No join hints —
+    AQE picks broadcast or shuffle from the observed sizes, and the
+    rank filter plans as a partial WindowGroupLimit (per-partition
+    top-k) before the ranking exchange."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+    c = emb.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+    joined = (
         cand.join(q, "query_id")
         .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _msim(F.col("qv"), F.col("cv")).alias("msim"),
-        )
+        .select("query_id", "neighbor_id", "qv", "cv")
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(pairwise_msim_np(joined, "qv", "cv"), k)
 
 
 def brute_force_topk(
@@ -371,11 +312,11 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k of every query vs the corpus.
 
-    queries is expected small: it is broadcast, so the corpus is
-    scanned once with no shuffle (verified via .explain:
-    BroadcastNestedLoopJoin -> per-row codegen dot products).
-    Output: (query_id, rank, neighbor_id, msim) where msim is the
-    similarity scaled to integer micro-units (portable comparison).
+    queries is expected small: it is collected to the driver and
+    shipped with the task closure, so the corpus is scanned once with
+    no shuffle.  Output: (query_id, rank, neighbor_id, msim) where msim
+    is the similarity scaled to integer micro-units (portable
+    comparison).
 
     exclude_self drops neighbor_id == query_id rows — correct when the
     queries ARE corpus rows (the default self-lookup shape).  Pass
@@ -384,47 +325,19 @@ def brute_force_topk(
     silently delete a legitimate neighbor.  (Same switch on srp_topk
     and ivf_topk.)
 
-    r6: scoring runs in one numpy mapInArrow stage over the corpus —
-    the broadcast query set becomes a collected (m, d) matrix, each
-    corpus batch scores all queries via the exact-fold kernels (bit-
-    identical doubles, see the kernel block above) and emits only its
-    local top-k rows per query, so the global window ranks ~batches*k
-    rows instead of N*Q.  Plan: BatchEvalPython/interpreted folds over
-    a BroadcastNestedLoopJoin -> one MapInArrow scan + tiny window.
-    The expression formulation survives as _brute_force_topk_expr (the
-    fallback for ragged/empty query sets and the parity gate's twin).
+    Scoring runs in one numpy mapInArrow stage over the corpus: the
+    query set becomes per-length matrices (_vector_groups), each corpus
+    batch scores all queries via the exact-fold kernels (bit-identical
+    doubles, see the kernel block above) and emits only its local top-k
+    rows per query, so the global window ranks ~batches*k rows instead
+    of N*Q.  Ragged, null and empty query vectors (and an empty query
+    set) take the same path: a length mismatch scores 0.
     """
-    cq = _collect_queries(queries, id_col, vec_col)
-    if cq is None:
-        return _brute_force_topk_expr(
-            emb, queries, k, id_col, vec_col, exclude_self
-        )
-    qids, qmat, qnorm = cq
-    scored = _score_corpus_topk(
-        emb, qids, qmat, qnorm, k, id_col, vec_col, exclude_self
+    qids, groups = _vector_groups(
+        queries.select(id_col, vec_col).toPandas(), id_col, vec_col
     )
-    return _rank_topk(scored, k)
-
-
-def _brute_force_topk_expr(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """The r5 expression formulation (interpreted per-pair folds);
-    fallback + parity twin of the numpy path."""
-    q = _qvec(queries, id_col, vec_col, broadcast=True)
-    c = _cvec(emb, id_col, vec_col)
-    scored = q.crossJoin(c)
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        _msim(F.col("qv"), F.col("cv")).alias("msim"),
+    scored = _score_corpus_topk(
+        emb, qids, groups, k, id_col, vec_col, exclude_self
     )
     return _rank_topk(scored, k)
 
@@ -432,8 +345,7 @@ def _brute_force_topk_expr(
 def _score_corpus_topk(
     emb: DataFrame,
     qids: np.ndarray,
-    qmat: np.ndarray,
-    qnorm: np.ndarray,
+    groups,
     k: int,
     id_col: str,
     vec_col: str,
@@ -448,25 +360,15 @@ def _score_corpus_topk(
         (f.name, f.dataType.simpleString()) for f in sel.schema.fields
     )[id_col]
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, msim bigint"
-    dim = qmat.shape[1]
-    m = qmat.shape[0]
 
     def gen(batches):
         for rb in batches:
             ids_arrow = rb.column(rb.schema.get_field_index(id_col))
             vec_col_a = rb.column(rb.schema.get_field_index(vec_col))
             ids = ids_arrow.to_numpy(zero_copy_only=False)
-            cmat, lens = _vec_matrix(vec_col_a, dim)
-            cnorm = _fold_norms(cmat)
-            msim = _msim_cross_np(cmat, cnorm, qmat, qnorm)
-            # rows whose vector length differs from the query dim score
-            # exactly 0 in the expression path (zip_with null-pads ->
-            # NULL dot -> coalesce 0) — not the zero-filled matrix value
-            bad = lens != dim
-            if bad.any():
-                msim[bad, :] = 0
+            msim = _msim_vs_groups(vec_col_a, rb.num_rows, groups)
             qi_out, ni_out, ms_out = [], [], []
-            for j in range(m):
+            for j in range(qids.shape[0]):
                 col = msim[:, j]
                 if exclude_self:
                     keep = np.flatnonzero(ids != qids[j])
@@ -512,6 +414,11 @@ def srp_sketch_udf(
     candidate = shares ANY band bucket.  P(candidate) = 1-(1-p^bits)^bands
     with p = 1 - angle/pi.  The planes are seeded per band, so band b
     is the same hash family on every call (oracle-parity friendly).
+
+    A null or wrong-length embedding gets an empty sketch: posexplode
+    yields no band rows, so it is never a candidate (brute force scores
+    such a row 0, below every positive threshold) and one bad row
+    cannot fail the job with a matmul shape error.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -524,7 +431,13 @@ def srp_sketch_udf(
 
     @pandas_udf(ArrayType(ArrayType(LongType())))
     def sketch(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray(vecs.tolist(), dtype=np.float64)
+        vl = vecs.tolist()
+        ok = np.array(
+            [v is not None and len(v) == dim for v in vl], dtype=bool
+        )
+        mat = np.zeros((len(vl), dim), dtype=np.float64)
+        if ok.any():
+            mat[ok] = [v for v, g in zip(vl, ok) if g]
         band_cols = []
         for pl in planes:
             proj = mat @ pl.T                     # (n, bits)
@@ -537,7 +450,10 @@ def srp_sketch_udf(
             band_cols.append(np.stack(probes, axis=1))  # (n, n_probes)
         # one C-level tolist over the stacked (n, bands, n_probes)
         # cube — no per-row Python append loop on the hot path
-        return pd.Series(np.stack(band_cols, axis=1).tolist())
+        out = np.stack(band_cols, axis=1).tolist()
+        if not ok.all():
+            out = [o if g else [] for o, g in zip(out, ok)]
+        return pd.Series(out)
 
     return sketch
 
@@ -568,7 +484,6 @@ def srp_topk(
     n_probes: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Bucketed ANN: banded SRP candidate join, exact cosine re-rank.
@@ -581,13 +496,10 @@ def srp_topk(
     tests/test_ann_recall.py.  destor analogue: sketch-first top-k
     (/root/reference/src/index/similarity_detection.c:49-126).
 
-    broadcast_queries: True (default) hints Spark to broadcast the
-    query band relation and the query vectors — correct ONLY for an
-    O(1)-sized query set (an online lookup batch).  Pass False for a
-    corpus-scale query set: no hint is planted, so Catalyst/AQE picks
-    a shuffled (band, key) equi-join and a shuffled re-rank join —
-    the shape that survives 10^12 queries (asserted in
-    tests/test_ann_recall.py::test_srp_topk_no_broadcast_path).
+    One plan serves an online lookup batch and a corpus-scale query
+    set alike: no broadcast hint is planted and nothing is collected,
+    so AQE broadcasts a small query side and shuffles a large one
+    (tests/test_ann_recall.py::test_srp_topk_plants_no_broadcast_hint).
     """
     sk_probe = srp_sketch_udf(dim, bits, bands, n_probes)
     sk_base = srp_sketch_udf(dim, bits, bands, 1)
@@ -595,25 +507,11 @@ def srp_topk(
     qb = _band_buckets(
         queries, "query_id", sk_probe, n_probes, id_col, vec_col
     )
-    if broadcast_queries:
-        qb = F.broadcast(qb)
     cand = qb.join(cb, ["band", "key"])
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
     cand = cand.select("query_id", "neighbor_id").distinct()
-    if broadcast_queries:
-        # bounded query set: numpy exact-fold re-rank (bit-identical
-        # msims, see the r6 kernel block) — one vector join instead of
-        # two plus no interpreted per-pair folds
-        cq = _collect_queries(queries, id_col, vec_col)
-        if cq is not None:
-            qids, qmat, qnorm = cq
-            return _rerank_candidates_np(
-                cand, emb, qids, qmat, qnorm, k, id_col, vec_col
-            )
-    q = _qvec(queries, id_col, vec_col, broadcast_queries)
-    c = _cvec(emb, id_col, vec_col)
-    return _rerank_candidates(cand, q, c, k)
+    return _rerank(cand, queries, emb, k, id_col, vec_col)
 
 
 def ivf_centroids(
@@ -648,19 +546,9 @@ def ivf_centroids(
     )
 
 
-def _cent_struct_array(cents: DataFrame):
-    """Collapse the centroid relation into ONE broadcastable row holding
-    array<struct<centroid_id, cvec>> — the IVF "index model"."""
-    return F.broadcast(
-        cents.agg(
-            F.collect_list(F.struct("centroid_id", "cvec")).alias("_cents")
-        )
-    )
-
-
 def ivf_assign(
     emb: DataFrame,
-    cents: DataFrame,
+    cents_pd: pd.DataFrame,
     nprobe: int = 1,
     id_alias: str = "vec_id",
     id_col: str = "vec_id",
@@ -669,86 +557,41 @@ def ivf_assign(
     """(id, cell) membership: every vector to its nprobe highest-cosine
     centroids, entirely map-side.
 
-    Scale shape: the K centroids ride along as ONE broadcast row of
-    array<struct>; per input row a higher-order `transform` scores all
-    K cells (struct(-msim, centroid_id)), `array_sort` + `slice` keep
-    the nprobe best — no shuffle, no per-vector window, no Python.
-    msim is integer micro-units so the argmax is portable to the DuckDB
-    oracle (ties broken by centroid_id ASC on both engines).  K is
-    bounded by the broadcast ceiling (K ~ sqrt(N) ~ 10^6 cells x 64
-    dims x 8 B ~ 500 MB at 10^12 docs).
+    cents_pd is the collected quantizer (ivf_centroids(...).toPandas(),
+    the IVF "index model").  One mapInArrow scan scores every batch
+    against all K centroids with the exact-fold kernels — integer
+    micro-cosine, so the argmax is portable to the DuckDB oracle —
+    and keeps the nprobe best: no shuffle, no per-vector window.
+    Columns are in centroid_id order, so the stable argsort breaks
+    ties by centroid_id ASC on both engines.  An empty centroid set
+    emits no rows.  K is bounded by the driver collect (K ~ sqrt(N) ~
+    10^6 cells x 64 dims x 8 B ~ 500 MB at 10^12 docs).
     """
-    v = emb.select(
-        F.col(id_col).alias(id_alias),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (-(
-                F.round(cosine_sim(F.col("_v"), c["cvec"]) * 1_000_000)
-                .cast("bigint")
-            )).alias("neg_msim"),
-            c["centroid_id"].alias("cell"),
-        ),
-    )
-    return (
-        v.crossJoin(_cent_struct_array(cents))
-        .select(
-            id_alias,
-            F.explode(
-                F.slice(F.array_sort(scored), 1, nprobe)
-            ).alias("_best"),
-        )
-        .select(id_alias, F.col("_best.cell").alias("cell"))
-    )
-
-
-def _ivf_assign_np(
-    emb: DataFrame,
-    cents_pd: "pd.DataFrame",
-    nprobe: int,
-    id_alias: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ivf_assign with exact-fold numpy scoring (r6): bit-identical to
-    the expression path — the fold kernels reproduce the JVM doubles
-    exactly (not just the argmax), HALF_UP micro-rounding, stable
-    tie-break centroid_id ASC.  One mapInArrow scan, no crossJoin
-    against the broadcast centroid struct."""
     import pyarrow as pa
 
-    order = np.argsort(cents_pd["centroid_id"].to_numpy(), kind="stable")
-    cent_ids = cents_pd["centroid_id"].to_numpy()[order]
-    cmat = np.asarray(
-        [np.asarray(v, dtype=np.float64)
-         for v in cents_pd["cvec"].to_numpy()[order]]
+    cent_ids, groups = _vector_groups(
+        cents_pd.sort_values("centroid_id", kind="stable"),
+        "centroid_id",
+        "cvec",
     )
-    cnorm = _fold_norms(cmat)
-    dim = cmat.shape[1]
     sel = emb.select(id_col, vec_col)
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in sel.schema.fields
     )[id_col]
     out_schema = f"{id_alias} {id_type}, cell {id_type}"
-    np_probe = min(nprobe, cmat.shape[0])
+    np_probe = min(nprobe, cent_ids.shape[0])
 
     def gen(batches):
         for rb in batches:
+            if np_probe == 0:
+                continue
             ids = rb.column(0).to_numpy(zero_copy_only=False)
-            mat, _lens = _vec_matrix(rb.column(1), dim)
-            vnorm = _fold_norms(mat)
-            msim = _msim_cross_np(mat, vnorm, cmat, cnorm)
-            # length-mismatched/null vectors: expression cosine is 0
-            # for every cell; the zero-filled matrix row also yields 0
-            # (denominator 0), so no extra masking is needed
+            msim = _msim_vs_groups(rb.column(1), rb.num_rows, groups)
             top = np.argsort(-msim, axis=1, kind="stable")[:, :np_probe]
-            cells = cent_ids[top]
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids, np_probe), from_pandas=True),
-                    pa.array(cells.reshape(-1), from_pandas=True),
+                    pa.array(cent_ids[top].reshape(-1), from_pandas=True),
                 ],
                 names=[id_alias, "cell"],
             )
@@ -764,7 +607,6 @@ def ivf_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF-partitioned ANN: cell-restricted candidate join + exact
@@ -783,45 +625,18 @@ def ivf_topk(
     restricted to champion-indexed containers rather than the full
     index (/root/reference/src/index/sparse_index.c).
     """
-    cents = ivf_centroids(emb, n_cells, id_col, vec_col)
-    if broadcast_queries:
-        # bounded query set (r6): the quantizer is already a collected
-        # model artifact (_cent_struct_array broadcasts it); collecting
-        # it as a matrix + the query set lets assignment and re-rank
-        # run through the exact-fold numpy kernels — bit-identical
-        # msims, no interpreted per-pair folds, one vector join
-        cq = _collect_queries(queries, id_col, vec_col)
-        if cq is not None:
-            qids, qmat, qnorm = cq
-            cents_pd = cents.toPandas()
-            corpus_cells = _ivf_assign_np(
-                emb, cents_pd, 1, "neighbor_id", id_col, vec_col
-            )
-            query_cells = F.broadcast(
-                _ivf_assign_np(
-                    queries, cents_pd, nprobe, "query_id", id_col, vec_col
-                )
-            )
-            cand = query_cells.join(corpus_cells, "cell")
-            if exclude_self:
-                cand = cand.filter(
-                    F.col("query_id") != F.col("neighbor_id")
-                )
-            cand = cand.select("query_id", "neighbor_id").distinct()
-            return _rerank_candidates_np(
-                cand, emb, qids, qmat, qnorm, k, id_col, vec_col
-            )
-    corpus_cells = ivf_assign(emb, cents, 1, "neighbor_id", id_col, vec_col)
-    query_cells = ivf_assign(queries, cents, nprobe, "query_id", id_col, vec_col)
-    if broadcast_queries:
-        query_cells = F.broadcast(query_cells)
+    cents_pd = ivf_centroids(emb, n_cells, id_col, vec_col).toPandas()
+    corpus_cells = ivf_assign(
+        emb, cents_pd, 1, "neighbor_id", id_col, vec_col
+    )
+    query_cells = ivf_assign(
+        queries, cents_pd, nprobe, "query_id", id_col, vec_col
+    )
     cand = query_cells.join(corpus_cells, "cell")
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
     cand = cand.select("query_id", "neighbor_id").distinct()
-    q = _qvec(queries, id_col, vec_col, broadcast_queries)
-    c = _cvec(emb, id_col, vec_col)
-    return _rerank_candidates(cand, q, c, k)
+    return _rerank(cand, queries, emb, k, id_col, vec_col)
 
 
 def near_dup_band_relation(

@@ -509,9 +509,10 @@ def semantic_dup_flags(
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: IVF-cell-partitioned keep-first.
 
-    Vectors are assigned to their nearest md5-sampled IVF centroid
-    (operators/ann.ivf_centroids / ivf_assign — the same quantizer the
-    ANN query uses, so the cell restriction is already oracle-proven);
+    Vectors are assigned to their nearest md5-sampled IVF centroid by
+    operators/ann.ivf_assign's map-side numpy scan over the collected
+    ivf_centroids quantizer (the same quantizer and assignment the ANN
+    query uses, so the cell restriction is already oracle-proven);
     within a cell, a vector is a semantic duplicate iff an EARLIER
     (smaller id) cell-mate has integer micro-cosine >= tau_micro, and
     dup_of is the smallest such id (-1 when none — no NULLs so the
@@ -529,14 +530,12 @@ def semantic_dup_flags(
         _fold_dot_cross,
         _fold_norms,
         _half_up_micro,
-        _ivf_assign_np,
+        ivf_assign,
         ivf_centroids,
     )
 
     cents_pd = ivf_centroids(emb, n_cells, id_col, vec_col).toPandas()
-    cells = _ivf_assign_np(
-        emb, cents_pd, 1, "vid", id_col=id_col, vec_col=vec_col
-    )
+    cells = ivf_assign(emb, cents_pd, 1, "vid", id_col, vec_col)
     m = cells.join(
         emb.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("_v")

@@ -79,14 +79,16 @@ def _shingles(tokens):
     )
 
 
-_SQL_SHINGLED = f"""
-  SELECT doc_id,
+def _sql_shingled_of(rel: str) -> str:
+    return f"""SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(w)-{K-1},0)+1),
                        i -> array_to_string(w[i:i+{K-1}], ' '))) AS sh
   FROM (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
-        FROM documents)
-  WHERE len(w) >= {K}
-"""
+        FROM {rel})
+  WHERE len(w) >= {K}"""
+
+
+_SQL_SHINGLED = _sql_shingled_of("documents")
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -652,15 +654,6 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_match") * 2 >= NUM_MH)
     )
-
-
-def _sql_shingled_of(rel: str) -> str:
-    return f"""SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w)-{K-1},0)+1),
-                       i -> array_to_string(w[i:i+{K-1}], ' '))) AS sh
-  FROM (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
-        FROM {rel})
-  WHERE len(w) >= {K}"""
 
 
 def _sql_mh_of(rel: str) -> str:
@@ -1249,30 +1242,31 @@ def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_MICRO_COS = """CAST(round(1000000.0 * coalesce(
+      list_sum(list_transform(range(1, len({a})+1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
+      / nullif(sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))
+       * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))), 0.0), 0.0)) AS BIGINT)"""
+
 SQL_EMBEDDING_NEAR_DUP_PAIRS = f"""
 WITH emb2 AS ({_SQL_PLANTED_EMB}),
 e AS (SELECT vec_id, embedding AS v FROM emb2),
 scored AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-    CAST(round(1000000.0 * coalesce(
-      list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]::DOUBLE * b.v[i]::DOUBLE))
-      / nullif(sqrt(list_sum(list_transform(a.v, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(b.v, x -> x::DOUBLE * x::DOUBLE))), 0.0), 0.0)) AS BIGINT) AS msim
+    {_SQL_MICRO_COS.format(a='a.v', b='b.v')} AS msim
   FROM e a, e b WHERE a.vec_id < b.vec_id)
 SELECT vec_a, vec_b, msim FROM scored WHERE msim >= 990000
 """
 
 
-SQL_ANN_COSINE_TOPK = """
+def _sql_brute_topk(where: str) -> str:
+    """Brute-force cosine top-10 of the queries selected by `where`."""
+    return f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id % 100 = 0),
+           WHERE {where}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
 scored AS (
   SELECT query_id, neighbor_id,
-    CAST(round(1000000.0 * coalesce(
-      list_sum(list_transform(range(1, len(qv)+1), i -> qv[i]::DOUBLE * cv[i]::DOUBLE))
-      / nullif(sqrt(list_sum(list_transform(qv, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(cv, x -> x::DOUBLE * x::DOUBLE))), 0.0), 0.0)) AS BIGINT) AS msim
+    {_SQL_MICRO_COS.format(a='qv', b='cv')} AS msim
   FROM q, c WHERE query_id != neighbor_id),
 ranked AS (SELECT query_id, neighbor_id, msim,
              row_number() OVER (PARTITION BY query_id
@@ -1280,6 +1274,9 @@ ranked AS (SELECT query_id, neighbor_id, msim,
            FROM scored)
 SELECT query_id, rank, neighbor_id, msim FROM ranked WHERE rank <= 10
 """
+
+
+SQL_ANN_COSINE_TOPK = _sql_brute_topk("vec_id % 100 = 0")
 
 
 _IVF_CELLS = 16
@@ -1303,11 +1300,6 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE, k=10
     )
 
-
-_SQL_MICRO_COS = """CAST(round(1000000.0 * coalesce(
-      list_sum(list_transform(range(1, len({a})+1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
-      / nullif(sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))), 0.0), 0.0)) AS BIGINT)"""
 
 SQL_IVF_ANN_TOPK = f"""
 WITH cents AS (
@@ -2046,8 +2038,8 @@ FROM f
 # Fixed query list for the ANN driver entry: a broadcast query set must
 # be O(1) in the corpus size, not a fraction of it (round-2 judge,
 # Wrong #3 — `vec_id % 100` is 1% of the corpus, a 10^10-row broadcast
-# at 10^12 vectors).  Callers with corpus-scale query sets use
-# srp_topk(broadcast_queries=False) instead.
+# at 10^12 vectors).  srp_topk itself takes a corpus-scale query set
+# too: it plants no broadcast hint and lets AQE shuffle.
 _ANN_QUERY_IDS = [0, 50, 100, 150, 200, 250, 300, 350]
 
 
@@ -2068,23 +2060,9 @@ def q_srp_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srp_topk(emb, queries, dim=64, k=10)
 
 
-SQL_SRP_ANN_TOPK = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id IN ({", ".join(map(str, _ANN_QUERY_IDS))})),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-    CAST(round(1000000.0 * coalesce(
-      list_sum(list_transform(range(1, len(qv)+1), i -> qv[i]::DOUBLE * cv[i]::DOUBLE))
-      / nullif(sqrt(list_sum(list_transform(qv, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(cv, x -> x::DOUBLE * x::DOUBLE))), 0.0), 0.0)) AS BIGINT) AS msim
-  FROM q, c WHERE query_id != neighbor_id),
-ranked AS (SELECT query_id, neighbor_id, msim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY msim DESC, neighbor_id ASC) AS rank
-           FROM scored)
-SELECT query_id, rank, neighbor_id, msim FROM ranked WHERE rank <= 10
-"""
+SQL_SRP_ANN_TOPK = _sql_brute_topk(
+    f"vec_id IN ({', '.join(map(str, _ANN_QUERY_IDS))})"
+)
 
 
 # Committed deterministic media table (synth.make_media_table): 40 rows,

@@ -1,17 +1,19 @@
-"""Parity gates for the r6 exact-fold numpy ANN kernels vs the r5
-expression formulations they replace.
+"""Parity gates for the exact-fold numpy ANN kernels vs the expression
+formulations (zip_with/aggregate cosine) they replace.
 
 The kernels claim BIT-identical doubles (same IEEE op sequence as the
 JVM zip_with/aggregate folds), so the gates assert exact frame
 equality — msim values included, not just rankings — on the driver
 fixture plus adversarial vectors (zero vectors, ragged lengths,
-nulls)."""
+nulls).  The expression references live here, not in production:
+_expr_topk (brute-force top-k) and _expr_cells (IVF assignment)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from destor_spark.operators import ann
@@ -32,10 +34,67 @@ def _pdf(df):
     )
 
 
+def _dbl(c):
+    return F.transform(c, lambda x: x.cast("double"))
+
+
+def _expr_msim(a, b):
+    """Expression micro-cosine over the double-cast vectors."""
+    return (
+        F.round(ann.cosine_sim(_dbl(a), _dbl(b)) * 1_000_000).cast("bigint")
+    )
+
+
+def _expr_topk(emb, queries, k, exclude_self=True):
+    """Expression brute-force top-k: crossJoin, per-pair expression
+    cosine in micro-units, the production ranking window."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+    )
+    scored = q.crossJoin(c)
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
+    return ann._rank_topk(
+        scored.select(
+            "query_id", "neighbor_id",
+            _expr_msim(F.col("qv"), F.col("cv")).alias("msim"),
+        ),
+        k,
+    )
+
+
+def _expr_cells(emb, cents, nprobe, alias):
+    """Expression IVF assignment: every vector's nprobe best centroids
+    by (msim DESC, centroid_id ASC)."""
+    w = Window.partitionBy(alias).orderBy(
+        F.desc("am"), F.asc("centroid_id")
+    )
+    return (
+        emb.select(F.col("vec_id").alias(alias), "embedding")
+        .crossJoin(cents)
+        .select(
+            alias, "centroid_id",
+            _expr_msim(F.col("embedding"), F.col("cvec")).alias("am"),
+        )
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= nprobe)
+        .select(alias, F.col("centroid_id").alias("cell"))
+    )
+
+
+def _cells_pdf(df, alias):
+    return (
+        df.toPandas().sort_values([alias, "cell"]).reset_index(drop=True)
+    )
+
+
 def test_brute_force_np_equals_expr(spark, emb):
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     got = _pdf(ann.brute_force_topk(emb, queries, k=10))
-    want = _pdf(ann._brute_force_topk_expr(emb, queries, k=10))
+    want = _pdf(_expr_topk(emb, queries, k=10))
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
@@ -48,49 +107,70 @@ def test_brute_force_np_adversarial(spark):
         (4, [-1.0, 0.0, 0.0]),       # negative cosine
         (5, [0.3, -0.2, 0.9]),
         (6, [1.0, 0.0, 0.0]),        # exact twin of 0 -> msim 1000000
+        (7, None),                   # null -> msim 0 everywhere
+        (8, []),                     # empty -> msim 0 everywhere
     ]
-    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    emb = spark.createDataFrame(pdf)
-    queries = emb.filter(F.col("vec_id") < 2)
-    got = _pdf(ann.brute_force_topk(emb, queries, k=5))
-    want = _pdf(ann._brute_force_topk_expr(emb, queries, k=5))
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # every query shape scores in the one kernel path: uniform 3-dim,
+    # all rows (ragged/null/empty queries mixed in), only the
+    # degenerate queries, and an empty query set
+    for queries in (
+        emb.filter(F.col("vec_id") < 2),
+        emb,
+        emb.filter(F.col("vec_id").isin(3, 7, 8)),
+        emb.filter(F.col("vec_id") < 0),
+    ):
+        got = _pdf(ann.brute_force_topk(emb, queries, k=5))
+        want = _pdf(_expr_topk(emb, queries, k=5))
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_ivf_assign_np_equals_expr(spark, emb):
     cents = ann.ivf_centroids(emb, 8)
-    want = (
-        ann.ivf_assign(emb, cents, nprobe=3, id_alias="vid")
-        .toPandas()
-        .sort_values(["vid", "cell"])
-        .reset_index(drop=True)
-    )
-    got = (
-        ann._ivf_assign_np(emb, cents.toPandas(), 3, "vid")
-        .toPandas()
-        .sort_values(["vid", "cell"])
-        .reset_index(drop=True)
-    )
+    want = _cells_pdf(_expr_cells(emb, cents, 3, "vid"), "vid")
+    got = _cells_pdf(ann.ivf_assign(emb, cents.toPandas(), 3, "vid"), "vid")
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_ivf_topk_np_equals_expr_path(spark, emb):
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    got = _pdf(ann.ivf_topk(emb, queries, n_cells=8, nprobe=3, k=10))
-    # force the r5 expression path via the no-broadcast branch guarded
-    # to distributed shapes (broadcast_queries=False)
-    cents = ann.ivf_centroids(emb, 8)
-    corpus_cells = ann.ivf_assign(emb, cents, 1, "neighbor_id")
-    query_cells = ann.ivf_assign(queries, cents, 3, "query_id")
+def _expr_ivf_topk(emb, queries, n_cells, nprobe, k):
+    """Expression IVF top-k: _expr_cells candidates re-ranked by the
+    expression cosine."""
+    cents = ann.ivf_centroids(emb, n_cells)
+    corpus_cells = _expr_cells(emb, cents, 1, "neighbor_id")
+    query_cells = _expr_cells(queries, cents, nprobe, "query_id")
     cand = (
         query_cells.join(corpus_cells, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = ann._qvec(queries, "vec_id", "embedding", True)
-    c = ann._cvec(emb, "vec_id", "embedding")
-    want = _pdf(ann._rerank_candidates(cand, q, c, 10))
+    scored = (
+        cand.join(
+            queries.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qv"),
+            ),
+            "query_id",
+        )
+        .join(
+            emb.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("cv"),
+            ),
+            "neighbor_id",
+        )
+        .select(
+            "query_id", "neighbor_id",
+            _expr_msim(F.col("qv"), F.col("cv")).alias("msim"),
+        )
+    )
+    return ann._rank_topk(scored, k)
+
+
+def test_ivf_topk_np_equals_expr_path(spark, emb):
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    got = _pdf(ann.ivf_topk(emb, queries, n_cells=8, nprobe=3, k=10))
+    want = _pdf(_expr_ivf_topk(emb, queries, 8, 3, 10))
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 

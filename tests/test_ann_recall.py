@@ -9,6 +9,7 @@ an approximate index without a measured recall is not shippable.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,6 +96,30 @@ def test_srp_near_dup_pairs_match_brute_force(spark):
     assert stats.filter(F.col("strategy") == "star").count() == 0
 
 
+def test_srp_degenerate_rows_emit_no_band_keys(spark):
+    """A null or wrong-length embedding gets no SRP band keys: the
+    sketch UDF's matmul cannot fail the job on it, and the row is never
+    a candidate (brute force scores it 0, below every threshold), so
+    the pair set is exactly the planted pair."""
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal(64)
+    rows = [
+        (0, base.tolist()),
+        (1, (base + 0.001 * rng.standard_normal(64)).tolist()),
+        (2, rng.standard_normal(64).tolist()),
+        (3, None),
+        (4, base[:32].tolist()),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = [
+        (r.vec_a, r.vec_b) for r in srp_near_dup_pairs(df, dim=64).collect()
+    ]
+    assert got == [(0, 1)]
+    top = srp_topk(df, df, dim=64, k=2).toPandas()
+    assert not {3, 4} & (set(top["query_id"]) | set(top["neighbor_id"]))
+    assert set(top[top["query_id"] == 0]["neighbor_id"]) >= {1}
+
+
 def test_bucketed_matches_bruteforce_on_driver_table(spark):
     """Driver-table consistency: the bucketed near-dup query returns
     the same pair set as its brute-force oracle twin at sf0.001 — and
@@ -112,26 +137,29 @@ def test_bucketed_matches_bruteforce_on_driver_table(spark):
     assert (bf["msim"] >= 990_000).all() and len(bf) == Q._PLANT_N
 
 
-def test_srp_topk_no_broadcast_path(spark):
-    """broadcast_queries=False must not plant a broadcast hint: with
-    auto-broadcast disabled the band join compiles to a shuffled join
-    (the only shape that survives a corpus-scale query set), while the
-    default still broadcasts."""
+def test_srp_topk_plants_no_broadcast_hint(spark):
+    """srp_topk plants no broadcast hint: with auto-broadcast disabled
+    every join compiles to a shuffled join (the only shape that
+    survives a corpus-scale query set), while under the default
+    threshold AQE broadcasts the small query side on its own.  Both
+    plans push the top-k down as a partial WindowGroupLimit."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") % 100 == 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuffled = srp_topk(
-            emb, qs, dim=64, k=10, broadcast_queries=False
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in shuffled
-        hinted = srp_topk(
-            emb, qs, dim=64, k=10, broadcast_queries=True
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hinted
+        shuffled = srp_topk(emb, qs, dim=64, k=10)
+        shuffled.collect()
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan
+        assert "WindowGroupLimit" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    adaptive = srp_topk(emb, qs, dim=64, k=10)
+    adaptive.collect()
+    plan = adaptive._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "WindowGroupLimit" in plan
 
 
 def test_champion_segments_pinned_nonzero(spark):
@@ -228,15 +256,19 @@ def test_zero_vector_never_kills_the_job(spark):
     """A zero-norm embedding has undefined cosine; the engine defines
     it as 0 (nullif/coalesce) instead of dying with DIVIDE_BY_ZERO
     under Spark 4's default ANSI mode — one degenerate media/embedding
-    row must not fail a corpus-scale ANN job.  Both the transform path
-    (ivf_assign) and the numpy path (_ivf_assign_np, used when the
-    query set is broadcast) must agree on degenerate input."""
+    row must not fail a corpus-scale ANN job.  ivf_assign and ivf_topk
+    must equal their expression references on degenerate vectors and
+    centroids (zero, null, empty, ragged); an empty table gives 0
+    semantic_dup_flags rows and an empty quantizer 0 cells."""
     from destor_spark.operators.ann import (
-        _ivf_assign_np,
         brute_force_topk,
         ivf_assign,
         ivf_centroids,
+        ivf_topk,
     )
+    from destor_spark.operators.curation import semantic_dup_flags
+
+    from test_ann_np import _cells_pdf, _expr_cells, _expr_ivf_topk, _pdf
 
     emb = spark.createDataFrame(
         [
@@ -253,13 +285,48 @@ def test_zero_vector_never_kills_the_job(spark):
     z = top[top["query_id"] == 2]
     assert (z["msim"] == 0).all()
     cents = ivf_centroids(emb, n_cells=2)
-    a1 = ivf_assign(emb, cents, 1).toPandas().sort_values("vec_id")
-    a2 = (
-        _ivf_assign_np(emb, cents.toPandas(), 1, "vec_id")
-        .toPandas()
-        .sort_values("vec_id")
+    want = _cells_pdf(_expr_cells(emb, cents, 1, "vec_id"), "vec_id")
+    got = _cells_pdf(ivf_assign(emb, cents.toPandas(), 1), "vec_id")
+    assert got["cell"].tolist() == want["cell"].tolist()
+
+    # degenerate corpus rows, some of them sampled as centroids: every
+    # id is a centroid at n_cells=8, so null, empty and ragged
+    # centroids are all in the quantizer
+    bad = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.0, 0.0]),
+            (3, [0.9, 0.1]),
+            (4, [0.0, 1.0]),
+            (5, None),
+            (6, []),
+            (7, [0.5, 0.5, 0.5]),
+        ],
+        "vec_id long, embedding array<double>",
     )
-    assert a1["cell"].tolist() == a2["cell"].tolist()
+    cents = ivf_centroids(bad, n_cells=8)
+    for nprobe in (1, 3):
+        want = _cells_pdf(_expr_cells(bad, cents, nprobe, "vid"), "vid")
+        got = _cells_pdf(
+            ivf_assign(bad, cents.toPandas(), nprobe, "vid"), "vid"
+        )
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    for n_cells in (3, 8):
+        pd.testing.assert_frame_equal(
+            _pdf(ivf_topk(bad, bad, n_cells=n_cells, nprobe=2, k=3)),
+            _pdf(_expr_ivf_topk(bad, bad, n_cells, 2, 3)),
+            check_dtype=False,
+        )
+    flags = semantic_dup_flags(bad, n_cells=8).select("vid", "cell")
+    pd.testing.assert_frame_equal(
+        _cells_pdf(flags, "vid"),
+        _cells_pdf(_expr_cells(bad, cents, 1, "vid"), "vid"),
+        check_dtype=False,
+    )
+
+    empty = bad.filter(F.col("vec_id") < 0)
+    assert semantic_dup_flags(empty).count() == 0
+    assert ivf_assign(bad, ivf_centroids(empty).toPandas()).count() == 0
 
 
 def test_exclude_self_switch(spark):

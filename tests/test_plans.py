@@ -191,19 +191,17 @@ def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
 
 
 def test_ivf_assign_is_map_side(spark):
-    """IVF cell assignment must compile to a broadcast of the single
-    centroid-array row plus per-row HOF scoring — NO shuffle exchange
-    of the corpus (the property that makes assignment O(N) map work at
-    10^12 rows).  The only exchange allowed is inside the centroid
-    TakeOrderedAndProject itself."""
+    """IVF cell assignment must compile to one MapInArrow over the
+    corpus scan with NO exchange at all (the property that makes
+    assignment O(N) map work at 10^12 rows): the centroids arrive as
+    the collected quantizer, not as a joined relation."""
     from destor_spark.operators.ann import ivf_assign, ivf_centroids
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = ivf_centroids(emb, n_cells=16)
-    plan = _plan(ivf_assign(emb, cents, nprobe=1))
-    corpus_side = plan.split("BroadcastExchange")[0]
-    assert "Exchange hashpartitioning" not in corpus_side, plan[:1500]
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    plan = _plan(ivf_assign(emb, cents.toPandas(), nprobe=1))
+    assert "MapInArrow" in plan and "FileScan parquet" in plan, plan[:1500]
+    assert "Exchange" not in plan, plan[:1500]
 
 
 def test_curation_plans_prune_and_broadcast(spark):

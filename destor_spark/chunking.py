@@ -147,10 +147,6 @@ def _window_tables(poly: int) -> np.ndarray:
     return W
 
 
-def _append8(fp: int, m: int, T: np.ndarray, shift: int) -> int:
-    return (((fp << 8) | m) ^ int(T[fp >> shift])) & _M64
-
-
 def window_fps(data: np.ndarray, poly: int = RABIN_POLY) -> np.ndarray:
     """FP[i] = fingerprint of the 48-byte window ending at byte 47+i
     (inclusive), for every full-window position in ``data`` (uint8)."""

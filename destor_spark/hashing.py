@@ -685,19 +685,3 @@ def _has_common_substring_py(a: str, b: str, k: int) -> bool:
                     return True
     return False
 
-
-def longest_common_substring_len(a: str, b: str) -> int:
-    """Length of the longest common contiguous substring (exact).
-
-    Binary search over has_common_substring (a length-k common substring
-    implies one of every shorter length, so the predicate is monotone).
-    O((|a|+|b|) log min(|a|,|b|)).
-    """
-    lo, hi = 0, min(len(a), len(b))
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if has_common_substring(a, b, mid):
-            lo = mid
-        else:
-            hi = mid - 1
-    return lo

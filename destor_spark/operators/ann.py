@@ -170,12 +170,11 @@ def _vec_matrix(col, dim: int):
     return mat, lens
 
 
-def _vector_groups(pdf: pd.DataFrame, id_col: str, vec_col: str):
+def _vector_groups(vecs: list):
     """A collected, model-sized vector set (brute-force queries, IVF
-    centroids) -> (ids, [(dim, cols, mat, norms)]): one group per
-    vector length, cols the group's positions in pdf order.  Null and
-    empty vectors form a dim <= 0 group that scores 0 everywhere."""
-    vecs = pdf[vec_col].tolist()
+    centroids) -> [(dim, cols, mat, norms)]: one group per vector
+    length, cols the group's positions in vecs.  Null and empty
+    vectors form a dim <= 0 group that scores 0 everywhere."""
     lens = np.array(
         [-1 if v is None else len(v) for v in vecs], dtype=np.int64
     )
@@ -186,7 +185,7 @@ def _vector_groups(pdf: pd.DataFrame, id_col: str, vec_col: str):
         if d > 0:
             mat[:] = [vecs[i] for i in cols]
         groups.append((int(d), cols, mat, _fold_norms(mat)))
-    return pdf[id_col].to_numpy(), groups
+    return groups
 
 
 def _msim_vs_groups(col, n: int, groups) -> np.ndarray:
@@ -331,11 +330,13 @@ def brute_force_topk(
     doubles, see the kernel block above) and emits only its local top-k
     rows per query, so the global window ranks ~batches*k rows instead
     of N*Q.  Ragged, null and empty query vectors (and an empty query
-    set) take the same path: a length mismatch scores 0.
+    set) take the same path: a length mismatch scores 0.  Ids travel as
+    Arrow arrays of the input's type, so a NULL id stays a NULL (with
+    exclude_self it never pairs, as NULL != x is NULL).
     """
-    qids, groups = _vector_groups(
-        queries.select(id_col, vec_col).toPandas(), id_col, vec_col
-    )
+    q = queries.select(id_col, vec_col).toArrow()
+    qids = q.column(0).combine_chunks()
+    groups = _vector_groups(q.column(1).to_pylist())
     scored = _score_corpus_topk(
         emb, qids, groups, k, id_col, vec_col, exclude_self
     )
@@ -344,7 +345,7 @@ def brute_force_topk(
 
 def _score_corpus_topk(
     emb: DataFrame,
-    qids: np.ndarray,
+    qids,
     groups,
     k: int,
     id_col: str,
@@ -362,32 +363,42 @@ def _score_corpus_topk(
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, msim bigint"
 
     def gen(batches):
+        import pyarrow.compute as pc
+
         for rb in batches:
-            ids_arrow = rb.column(rb.schema.get_field_index(id_col))
-            vec_col_a = rb.column(rb.schema.get_field_index(vec_col))
-            ids = ids_arrow.to_numpy(zero_copy_only=False)
-            msim = _msim_vs_groups(vec_col_a, rb.num_rows, groups)
+            ids = rb.column(0)
+            n = rb.num_rows
+            q = qids.cast(ids.type)
+            msim = _msim_vs_groups(rb.column(1), n, groups)
+            # position of each row in neighbor_id ASC order, NULLs
+            # first: the _rank_topk window's tie-break
+            id_rank = np.empty(n, dtype=np.int64)
+            id_rank[
+                pc.array_sort_indices(ids, null_placement="at_start")
+                .to_numpy()
+            ] = np.arange(n)
             qi_out, ni_out, ms_out = [], [], []
-            for j in range(qids.shape[0]):
+            for j in range(len(q)):
                 col = msim[:, j]
                 if exclude_self:
-                    keep = np.flatnonzero(ids != qids[j])
+                    ne = pc.fill_null(pc.not_equal(ids, q[j]), False)
+                    keep = np.flatnonzero(ne.to_numpy(zero_copy_only=False))
                 else:
-                    keep = np.arange(ids.shape[0])
+                    keep = np.arange(n)
                 if keep.size == 0:
                     continue
                 if keep.size > k:
-                    order = np.lexsort((ids[keep], -col[keep]))[:k]
+                    order = np.lexsort((id_rank[keep], -col[keep]))[:k]
                     keep = keep[order]
-                qi_out.append(np.full(keep.size, qids[j]))
-                ni_out.append(ids[keep])
+                qi_out.append(np.full(keep.size, j))
+                ni_out.append(keep)
                 ms_out.append(col[keep])
             if not qi_out:
                 continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(qi_out), from_pandas=True),
-                    pa.array(np.concatenate(ni_out), from_pandas=True),
+                    q.take(pa.array(np.concatenate(qi_out))),
+                    ids.take(pa.array(np.concatenate(ni_out))),
                     pa.array(np.concatenate(ms_out).astype(np.int64)),
                 ],
                 names=["query_id", "neighbor_id", "msim"],
@@ -569,29 +580,33 @@ def ivf_assign(
     """
     import pyarrow as pa
 
-    cent_ids, groups = _vector_groups(
-        cents_pd.sort_values("centroid_id", kind="stable"),
-        "centroid_id",
-        "cvec",
+    # NULLs first: centroid_id ASC as Spark orders it
+    cents = cents_pd.sort_values(
+        "centroid_id", kind="stable", na_position="first"
     )
+    groups = _vector_groups(cents["cvec"].tolist())
+    cent_ids = pa.array(cents["centroid_id"], from_pandas=True)
     sel = emb.select(id_col, vec_col)
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in sel.schema.fields
     )[id_col]
     out_schema = f"{id_alias} {id_type}, cell {id_type}"
-    np_probe = min(nprobe, cent_ids.shape[0])
+    np_probe = min(nprobe, len(cent_ids))
 
     def gen(batches):
         for rb in batches:
             if np_probe == 0:
                 continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            msim = _msim_vs_groups(rb.column(1), rb.num_rows, groups)
+            ids = rb.column(0)
+            n = rb.num_rows
+            msim = _msim_vs_groups(rb.column(1), n, groups)
             top = np.argsort(-msim, axis=1, kind="stable")[:, :np_probe]
+            # ids and cells keep the input's Arrow type (a NULL id
+            # stays NULL instead of becoming a NaN double)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(ids, np_probe), from_pandas=True),
-                    pa.array(cent_ids[top].reshape(-1), from_pandas=True),
+                    ids.take(pa.array(np.repeat(np.arange(n), np_probe))),
+                    cent_ids.cast(ids.type).take(pa.array(top.reshape(-1))),
                 ],
                 names=[id_alias, "cell"],
             )

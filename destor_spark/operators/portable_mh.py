@@ -178,8 +178,9 @@ def minhash_hex_from_text(
     text_col: str = "text",
 ) -> DataFrame:
     """(ids..., text) -> (ids..., mh array<string>) for docs with at
-    least k tokens — the fused equivalent of ``_portable_minhash`` over
-    the ``_shingles`` of each doc's ``_tokens`` in queries.py."""
+    least k tokens — the fused equivalent of the expression chain
+    (split on ' ', distinct k-shingles, per-permutation md5 minima)
+    kept as the parity reference in tests/test_portable_mh.py."""
     import pyarrow as pa
 
     sel = df.select(*id_cols, text_col)

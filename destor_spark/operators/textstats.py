@@ -1,105 +1,25 @@
-"""Text-analysis operators for training-data pipelines.
+"""Text-analysis primitives shared by the query surface and curation.
 
-All pure JVM built-ins (split/length/regexp/aggregate inside
-whole-stage codegen) so every one of them is also expressible as ANSI
-SQL for the DuckDB oracle (see destor_spark/queries.py).
-
-Operators: token counting, quality scoring (length/punct/stopword
-ratios), language-ID (stopword-list heuristic), document
-fingerprinting (content hash + shape stats).
+Pure JVM built-ins (split/filter inside whole-stage codegen), so every
+use is also expressible as ANSI SQL for the DuckDB oracle (see
+destor_spark/queries.py: q_lang_id, q_quality_scores, ...).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Tiny, frozen stopword lists — identical literals are embedded in the
-# DuckDB oracle SQL, so do not edit one without the other.
+# Tiny, frozen stopword lists — the DuckDB oracle SQL embeds these same
+# literals (queries._sql_inlist reads this dict).
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "that", "it", "for"],
     "de": ["der", "die", "und", "das", "ist", "ein", "zu", "den", "von", "mit"],
     "fr": ["le", "la", "et", "les", "des", "est", "un", "une", "du", "que"],
     "es": ["el", "la", "de", "que", "y", "los", "es", "un", "en", "una"],
 }
-LANGS = ["en", "de", "fr", "es"]
 
 
 def tokens(text: Column) -> Column:
     """Split on single spaces, drop empties (portable to DuckDB)."""
     return F.filter(F.split(text, " "), lambda t: t != F.lit(""))
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def stopword_count(text: Column, lang: str) -> Column:
-    words = STOPWORDS[lang]
-    return F.size(
-        F.filter(
-            tokens(text),
-            lambda t: t.isin(*words),
-        )
-    )
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc) -> n_chars, n_tokens, avg_token_len, stopword_ratio,
-    alpha_ratio — the standard cheap quality-filter features."""
-    t = F.col(text_col)
-    toks = tokens(t)
-    n_tok = F.size(toks)
-    total_tok_chars = F.aggregate(
-        toks, F.lit(0), lambda acc, x: acc + F.length(x)
-    )
-    n_alpha = F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
-    sw = stopword_count(t, "en")
-    return df.select(
-        "doc_id",
-        F.length(t).alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        F.round(
-            total_tok_chars / F.greatest(n_tok, F.lit(1)), 6
-        ).alias("avg_token_len"),
-        F.round(sw / F.greatest(n_tok, F.lit(1)), 6).alias("stopword_ratio"),
-        F.round(
-            n_alpha / F.greatest(F.length(t), F.lit(1)), 6
-        ).alias("alpha_ratio"),
-    )
-
-
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-vote language ID; deterministic argmax (score desc,
-    language name asc)."""
-    t = F.col(text_col)
-    scores = [stopword_count(t, lang).alias(f"sc_{lang}") for lang in LANGS]
-    scored = df.select("doc_id", *scores)
-    # argmax via array of (negated score, lang) structs -> array_min
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    (-F.col(f"sc_{lang}")).alias("neg"),
-                    F.lit(lang).alias("lang"),
-                )
-                for lang in LANGS
-            ]
-        )
-    )
-    return scored.select(
-        "doc_id",
-        *[F.col(f"sc_{lang}") for lang in LANGS],
-        best["lang"].alias("pred_lang"),
-    )
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Content fingerprint: md5 + shape stats (dedup-join key surface)."""
-    t = F.col(text_col)
-    return df.select(
-        "doc_id",
-        F.md5(t).alias("text_md5"),
-        F.length(t).alias("n_chars"),
-        token_count(t).alias("n_tokens"),
-    )

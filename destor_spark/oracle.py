@@ -4,9 +4,10 @@ FIXTURES.md section 3: golden outputs come from this oracle, run at the
 identical config; the Spark pipeline must reach dup-pair recall >= 0.99
 and matching cluster assignments.  Parity is by construction: the
 oracle calls the same numpy kernels (hashing.py, minhash.doc_signature)
-the Spark Arrow UDFs call, tokenizes with the same rule as
-operators/shingles.py, and applies the identical bucket cap/star and
-canonical-selection rules.
+the Spark Arrow UDFs call, tokenizes with the same ASCII-whitespace
+rule as the fused kernel (hashing.tokenize_xxh64) and the JVM
+whitespace split (tests/test_hash_parity.py), and applies the
+identical bucket cap/star and canonical-selection rules.
 
 destor analogue: restore as the correctness oracle — backup then
 restore must reproduce inputs byte-identically

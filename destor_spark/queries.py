@@ -8,13 +8,15 @@ DuckDB oracle.  Portability rules used throughout:
   * hashing: md5 hex strings (identical in both engines); 64-bit
     numeric hashes derived as ('0x'||substr(md5(x),1,15))::BIGINT in
     DuckDB == CAST(conv(substr(md5(x),1,15),16,10) AS BIGINT) in Spark.
-  * tokenization: split on single space, drop empty strings.
+  * tokenization: split on single space, drop empty strings
+    (textstats.tokens in Spark, _SQL_TOKENS in DuckDB).
   * floats never leave a query: every ratio/score is rounded into
     integer micro-units (ppm / cents) in BOTH engines, so value hashes
     cannot drift on float formatting.
   * every computed column is aliased identically on both sides.
 
-destor parity notes per query are in the builder docstrings.
+destor parity notes per query are in the q_* docstrings; each query
+is one _REGISTRY row (Spark query function, oracle SQL).
 """
 
 from __future__ import annotations
@@ -23,8 +25,10 @@ import os
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from destor_spark.operators.textstats import STOPWORDS, tokens
 
 K = 5  # words per shingle (cfg.shingle_size analogue for the SQL-portable pass)
 NUM_MH = 16  # portable MinHash permutations (md5-based, SQL-expressible)
@@ -40,6 +44,9 @@ MH_ROWS = 4
 # /root/reference/src/rewrite_phase/cap_rewrite.c:44-107).  The DuckDB
 # oracle applies the IDENTICAL predicate, so parity is exact.
 DF_CAP = 100
+# SQL form of textstats.tokens(text): split on single spaces, drop
+# empties — the one tokenizer literal every oracle query embeds.
+_SQL_TOKENS = "list_filter(string_split(text,' '), x -> x != '')"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,27 +72,60 @@ def _barrier(df: DataFrame, tag: str) -> DataFrame:
     return _materialize_gen(df, tag, _query_mat_root(df.sparkSession))
 
 
-def _tokens(text):
-    return F.filter(F.split(text, " "), lambda x: x != F.lit(""))
+def _capped(e0: DataFrame, key: str, tag: str) -> DataFrame:
+    """e0 minus its hot keys (df > DF_CAP), parquet-barriered under tag.
+
+    hot is tiny -> broadcast anti-join; e0 is scanned once for the
+    aggregate (map-side partial) and once for the join.  The barrier
+    keeps every consumer of the capped relation from re-running the
+    scan + tokenize + shingle lineage.  Oracle form: _sql_capped."""
+    hot = (
+        e0.groupBy(key)
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > DF_CAP)
+        .select(key)
+    )
+    return _barrier(e0.join(F.broadcast(hot), key, "left_anti"), tag)
 
 
-def _shingles(tokens):
-    """distinct word-K-gram strings; caller guarantees size>=K."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - F.lit(K - 1)),
-            lambda i: F.array_join(F.slice(tokens, i, K), " "),
-        )
+def _sql_capped(key: str) -> str:
+    """The hot/e CTE pair over e0(doc_id, key): _capped in SQL."""
+    return f"""hot AS (SELECT {key} FROM e0 GROUP BY {key} HAVING count(*) > {DF_CAP}),
+e AS (SELECT doc_id, {key} FROM e0
+      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.{key} = e0.{key}))"""
+
+
+def _n_match(a: str, b: str) -> Column:
+    """MinHash agreement count of two signature columns (destor's
+    shared-feature count, similarity_detection.c:85-98).  Oracle form:
+    _sql_n_match."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("bigint")),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
     )
 
 
-def _sql_shingled_of(rel: str) -> str:
+def _sql_n_match(a: str, b: str) -> str:
+    return f"""CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
+       i -> CASE WHEN {a}.mh[i] = {b}.mh[i] THEN 1 ELSE 0 END)) AS BIGINT)"""
+
+
+def _sql_shingles_of_w(rel: str) -> str:
+    """(doc_id, sh): distinct K-shingles of rel(doc_id, w)'s token
+    lists with at least K tokens."""
     return f"""SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(w)-{K-1},0)+1),
                        i -> array_to_string(w[i:i+{K-1}], ' '))) AS sh
-  FROM (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
-        FROM {rel})
+  FROM {rel}
   WHERE len(w) >= {K}"""
+
+
+def _sql_shingled_of(rel: str) -> str:
+    """(doc_id, sh): distinct K-shingles of rel(doc_id, text)."""
+    return _sql_shingles_of_w(
+        f"(SELECT doc_id, {_SQL_TOKENS} AS w FROM {rel})"
+    )
 
 
 _SQL_SHINGLED = _sql_shingled_of("documents")
@@ -125,10 +165,10 @@ def _kgram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh) — the portable md5 MinHash relation, computed by
     the fused Arrow kernel (operators/portable_mh.py) instead of the
-    r5 expression chain `_portable_minhash` over `_shingles`.
-    Signatures are bit-identical (min over positions == min over the
-    distinct set; md5 kernel parity pinned in tests/test_md5np.py,
-    operator parity in tests/test_portable_mh.py); at sf1 the
+    r5 expression chain (the parity reference in
+    tests/test_portable_mh.py).  Signatures are bit-identical (min
+    over positions == min over the distinct set; md5 kernel parity
+    pinned in tests/test_md5np.py); at sf1 the
     expression form evaluated ~10^8 JVM Md5 calls and dominated every
     portable-minhash query (guide section 4.2: hand whole batches to
     vectorized kernels)."""
@@ -261,6 +301,20 @@ def _planted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_PLANTED_DELTA = f"""
+  SELECT doc_id + {_INC_BASE_HIT_OFF} AS doc_id, text
+  FROM documents WHERE doc_id % 5 = 0
+  UNION ALL
+  SELECT doc_id + {_INC_NOVEL_OFF}, text || ' v2'
+  FROM documents WHERE doc_id % 7 = 3
+  UNION ALL
+  SELECT doc_id + {_INC_PAIR_OFF_A}, text || ' v3'
+  FROM documents WHERE doc_id % 11 = 5
+  UNION ALL
+  SELECT doc_id + {_INC_PAIR_OFF_B}, text || ' v3'
+  FROM documents WHERE doc_id % 11 = 5"""
+
+
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch incremental dedup (operators/incremental.py): a new crawl
     batch is assigned against the EXISTING corpus without recomputing
@@ -278,18 +332,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_INCREMENTAL_DEDUP = f"""
-WITH delta AS (
-  SELECT doc_id + {_INC_BASE_HIT_OFF} AS doc_id, text
-  FROM documents WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + {_INC_NOVEL_OFF}, text || ' v2'
-  FROM documents WHERE doc_id % 7 = 3
-  UNION ALL
-  SELECT doc_id + {_INC_PAIR_OFF_A}, text || ' v3'
-  FROM documents WHERE doc_id % 11 = 5
-  UNION ALL
-  SELECT doc_id + {_INC_PAIR_OFF_B}, text || ' v3'
-  FROM documents WHERE doc_id % 11 = 5),
+WITH delta AS ({_SQL_PLANTED_DELTA}),
 base_index AS (
   -- COALESCE mirrors the engine's null-text rule (incremental.py):
   -- md5(NULL) is NULL and NULL keys never equi-join
@@ -323,19 +366,9 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow kernel (operators/portable_mh.exploded_kgrams_from_text) —
     # the r5 interpreted transform/array_join/array_distinct chain cost
     # 16 s per pass at sf1 and ran twice (hot agg + anti-join input)
-    e0 = _kgram_docs(spark, sf_dir)
-    # df cap: drop boilerplate shingles (see DF_CAP).  hot is tiny ->
-    # broadcast anti-join; e0 is scanned once for the aggregate (map-side
-    # partial) and once for the join.
-    hot = (
-        e0.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > DF_CAP)
-        .select("s")
-    )
-    # barrier: e is consumed twice below (sizes + the grouped pair
-    # pass); without it each consumer re-runs scan+tokenize+shingle
-    e = _barrier(e0.join(F.broadcast(hot), "s", "left_anti"), "ngram_e")
+    # df cap: drop boilerplate shingles (see DF_CAP); e is consumed
+    # twice below (sizes + the grouped pair pass)
+    e = _capped(_kgram_docs(spark, sf_dir), "s", "ngram_e")
     sizes = e.groupBy("doc_id").agg(F.count("*").alias("n"))
     # r6: one groupBy(s) + JVM pair combos instead of the e-vs-e
     # self-join (which shuffled + sorted e twice) — see _grouped_pairs
@@ -369,9 +402,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_NGRAM_JACCARD_PAIRS = f"""
 WITH d AS ({_SQL_SHINGLED}),
 e0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > {DF_CAP}),
-e AS (SELECT doc_id, s FROM e0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.s = e0.s)),
+{_sql_capped('s')},
 sizes AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
           FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -411,20 +442,14 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-splitting the joined text yields the identical token list and
     # hence identical shingles.
     d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    w = _tokens(F.col("text"))
+    w = tokens(F.col("text"))
     exc = d.filter(F.col("doc_id") % 13 == 2).select(
         (F.col("doc_id") + _CONT_EXC_OFF).alias("doc_id"),
         F.array_join(F.slice(w, 1, _CONT_EXC_WORDS), " ").alias("text"),
     )
     # digests=True: shingles are pure identities here (see _kgram_docs)
     e0 = exploded_kgrams_from_text(d.unionByName(exc), K, digests=True)
-    hot = (
-        e0.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > DF_CAP)
-        .select("s")
-    )
-    e = _barrier(e0.join(F.broadcast(hot), "s", "left_anti"), "cont_e")
+    e = _capped(e0, "s", "cont_e")
     sizes = e.groupBy("doc_id").agg(F.count("*").alias("n"))
     # r6: shared-shingle counts are symmetric, so the ordered (doc_src,
     # doc_in) relation is the unordered grouped-pair relation emitted
@@ -458,21 +483,16 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CONTAINMENT_PAIRS = f"""
-WITH w0 AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+WITH w0 AS (SELECT doc_id, {_SQL_TOKENS} AS w
             FROM documents),
 wall AS (
   SELECT doc_id, w FROM w0
   UNION ALL
   SELECT doc_id + {_CONT_EXC_OFF}, w[1:{_CONT_EXC_WORDS}]
   FROM w0 WHERE doc_id % 13 = 2),
-d AS (SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w)-{K-1},0)+1),
-                           i -> array_to_string(w[i:i+{K-1}], ' '))) AS sh
-      FROM wall WHERE len(w) >= {K}),
+d AS ({_sql_shingles_of_w('wall')}),
 e0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > {DF_CAP}),
-e AS (SELECT doc_id, s FROM e0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.s = e0.s)),
+{_sql_capped('s')},
 sizes AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
 inter AS (SELECT a.doc_id AS doc_src, b.doc_id AS doc_in, count(*) AS n_common
           FROM e a JOIN e b ON a.s = b.s AND a.doc_id != b.doc_id
@@ -514,59 +534,38 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             mh.select(F.col("doc_id").alias("doc_b"), F.col("mh").alias("mb")),
             "doc_b",
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.aggregate(
-                F.zip_with(
-                    "ma", "mb", lambda x, y: (x == y).cast("bigint")
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("n_match"),
-        )
+        .select("doc_a", "doc_b", _n_match("ma", "mb").alias("n_match"))
         .filter(F.col("n_match") * 2 >= NUM_MH)
     )
     return out
 
 
-SQL_MINHASH_LSH_PAIRS = f"""
-WITH d AS ({_SQL_SHINGLED}),
-mh AS (SELECT doc_id,
+def _sql_mh_of(rel: str) -> str:
+    return f"""SELECT doc_id,
         list_transform(range({NUM_MH}), p ->
           list_aggregate(list_transform(sh, s -> md5(p::varchar || ':' || s)), 'min')) AS mh
-       FROM d),
-bands AS (SELECT doc_id, b AS band,
+       FROM {rel}"""
+
+
+def _sql_bands_of(rel: str) -> str:
+    return f"""SELECT doc_id, b AS band,
             array_to_string(mh[b*{MH_ROWS}+1 : b*{MH_ROWS}+{MH_ROWS}], '|') AS key
-          FROM mh, unnest(range({MH_BANDS})) AS t(b)),
+          FROM {rel}, unnest(range({MH_BANDS})) AS t(b)"""
+
+
+SQL_MINHASH_LSH_PAIRS = f"""
+WITH d AS ({_SQL_SHINGLED}),
+mh AS ({_sql_mh_of('d')}),
+bands AS ({_sql_bands_of('mh')}),
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
               AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b,
-  CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
-       i -> CASE WHEN ma.mh[i] = mb.mh[i] THEN 1 ELSE 0 END)) AS BIGINT) AS n_match
+SELECT doc_a, doc_b, {_sql_n_match('ma', 'mb')} AS n_match
 FROM cand
 JOIN mh ma ON cand.doc_a = ma.doc_id
 JOIN mh mb ON cand.doc_b = mb.doc_id
-WHERE CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
-       i -> CASE WHEN ma.mh[i] = mb.mh[i] THEN 1 ELSE 0 END)) AS BIGINT) * 2 >= {NUM_MH}
+WHERE {_sql_n_match('ma', 'mb')} * 2 >= {NUM_MH}
 """
-
-
-def _portable_minhash(sh_df: DataFrame) -> DataFrame:
-    """(doc_id, sh) -> (doc_id, mh): md5-string minima, NUM_MH perms."""
-    return sh_df.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(NUM_MH - 1)),
-            lambda p: F.array_min(
-                F.transform(
-                    F.col("sh"),
-                    lambda s: F.md5(F.concat(p.cast("string"), F.lit(":"), s)),
-                )
-            ),
-        ).alias("mh"),
-    )
 
 
 def _mh_bands(mh_df: DataFrame) -> DataFrame:
@@ -605,8 +604,8 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from destor_spark.operators.portable_mh import minhash_hex_from_text
 
     # r6: both signature tables via the fused md5 Arrow kernel
-    # (bit-identical to _portable_minhash over _shingles — same text,
-    # same md5 family)
+    # (bit-identical to the r5 expression chain — same text, same md5
+    # family)
     mh_base = _barrier(_mh_docs(spark, sf_dir), "inc_mh_base")
     mh_delta = _barrier(
         minhash_hex_from_text(
@@ -644,44 +643,14 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_base",
         )
         .select(
-            "doc_delta",
-            "doc_base",
-            F.aggregate(
-                F.zip_with("md", "mb", lambda x, y: (x == y).cast("bigint")),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("n_match"),
+            "doc_delta", "doc_base", _n_match("md", "mb").alias("n_match")
         )
         .filter(F.col("n_match") * 2 >= NUM_MH)
     )
 
 
-def _sql_mh_of(rel: str) -> str:
-    return f"""SELECT doc_id,
-        list_transform(range({NUM_MH}), p ->
-          list_aggregate(list_transform(sh, s -> md5(p::varchar || ':' || s)), 'min')) AS mh
-       FROM {rel}"""
-
-
-def _sql_bands_of(rel: str) -> str:
-    return f"""SELECT doc_id, b AS band,
-            array_to_string(mh[b*{MH_ROWS}+1 : b*{MH_ROWS}+{MH_ROWS}], '|') AS key
-          FROM {rel}, unnest(range({MH_BANDS})) AS t(b)"""
-
-
 SQL_INCREMENTAL_NEAR_DUP = f"""
-WITH delta AS (
-  SELECT doc_id + {_INC_BASE_HIT_OFF} AS doc_id, text
-  FROM documents WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + {_INC_NOVEL_OFF}, text || ' v2'
-  FROM documents WHERE doc_id % 7 = 3
-  UNION ALL
-  SELECT doc_id + {_INC_PAIR_OFF_A}, text || ' v3'
-  FROM documents WHERE doc_id % 11 = 5
-  UNION ALL
-  SELECT doc_id + {_INC_PAIR_OFF_B}, text || ' v3'
-  FROM documents WHERE doc_id % 11 = 5),
+WITH delta AS ({_SQL_PLANTED_DELTA}),
 d_base AS ({_SQL_SHINGLED}),
 d_delta AS ({_sql_shingled_of('delta')}),
 mh_base AS ({_sql_mh_of('d_base')}),
@@ -691,14 +660,11 @@ bands_delta AS ({_sql_bands_of('mh_delta')}),
 cand AS (SELECT DISTINCT d.doc_id AS doc_delta, b.doc_id AS doc_base
          FROM bands_delta d JOIN bands_base b
            ON d.band = b.band AND d.key = b.key)
-SELECT doc_delta, doc_base,
-  CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
-       i -> CASE WHEN md.mh[i] = mb.mh[i] THEN 1 ELSE 0 END)) AS BIGINT) AS n_match
+SELECT doc_delta, doc_base, {_sql_n_match('md', 'mb')} AS n_match
 FROM cand
 JOIN mh_delta md ON cand.doc_delta = md.doc_id
 JOIN mh_base mb ON cand.doc_base = mb.doc_id
-WHERE CAST(list_sum(list_transform(range(1, {NUM_MH}+1),
-       i -> CASE WHEN md.mh[i] = mb.mh[i] THEN 1 ELSE 0 END)) AS BIGINT) * 2 >= {NUM_MH}
+WHERE {_sql_n_match('md', 'mb')} * 2 >= {NUM_MH}
 """
 
 
@@ -711,7 +677,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     over md5-derived token hashes) — SQL-checkable twin of the 64-bit
     shingle SimHash in operators/simhash.py."""
     d = _t(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("w"))
+    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
     h = tok.select("doc_id", _tok_hash64().alias("hv"))
     bit_sums = [
         F.sum(
@@ -731,8 +697,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SIMHASH = (
-    "WITH tok AS (SELECT doc_id, unnest(list_filter(string_split(text,' '),"
-    " x -> x != '')) AS w FROM documents),\n"
+    f"WITH tok AS (SELECT doc_id, unnest({_SQL_TOKENS}) AS w FROM documents),\n"
     "h AS (SELECT doc_id, ('0x' || substr(md5(w),1,15))::BIGINT AS hv FROM tok),\n"
     "bits AS (SELECT doc_id, "
     + ", ".join(
@@ -748,48 +713,44 @@ SQL_SIMHASH = (
 )
 
 
+# Span width (tokens) of the substring_span_pairs / sa_longest_span
+# candidate grams: oracle-parity-critical, so both engines read it here.
+SPAN_W = 7
+
+
 def _capped_token_grams(spark: SparkSession, sf_dir: str, tag: str):
-    """(docs, grams): the 7-token contiguous-gram relation with DF_CAP
-    hot-gram removal — ONE definition shared by q_substring_span_pairs
-    and q_sa_longest_span (the gram width and the cap predicate are
-    oracle-parity-critical, so they must not fork between the two).
-    `grams` is parquet-barriered: it feeds the grouped pair pass plus
-    the hot aggregate, and without the barrier the kernel lineage
-    re-runs once per consumer subtree (the same fix as
-    ngram_e/cont_e/champ_e).
-    """
+    """(doc_id, gram): the SPAN_W-token contiguous-gram relation with
+    DF_CAP hot-gram removal — ONE definition shared by
+    q_substring_span_pairs and q_sa_longest_span (oracle form:
+    _SQL_CAPPED_GRAMS).  r6: distinct gram explode via the fused Arrow
+    kernel (see _kgram_docs); digests=True: grams are pure identities
+    in both consumers."""
     from destor_spark.operators.portable_mh import exploded_kgrams_from_text
 
-    W = 7
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("w")
-    )
-    # r6: distinct 7-gram explode via the fused Arrow kernel (see
-    # _kgram_docs — same machinery, W-wide grams, out_col 'gram');
-    # digests=True: grams are pure identities in both consumers
     g0 = exploded_kgrams_from_text(
         _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text"),
-        W,
+        SPAN_W,
         out_col="gram",
         digests=True,
     )
-    # df cap on grams, same rationale + identical oracle predicate as
-    # q_ngram_jaccard_pairs (see DF_CAP).
-    hot = (
-        g0.groupBy("gram")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > DF_CAP)
-        .select("gram")
-    )
-    g = _barrier(g0.join(F.broadcast(hot), "gram", "left_anti"), tag)
-    return d, g
+    return _capped(g0, "gram", tag)
+
+
+# t(doc_id, w) token lists and the capped gram relation e(doc_id, gram)
+_SQL_CAPPED_GRAMS = f"""t AS (SELECT doc_id, {_SQL_TOKENS} AS w
+           FROM documents),
+e0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
+        range(1, greatest(len(w)-{SPAN_W - 1},0)+1),
+        i -> array_to_string(w[i:i+{SPAN_W - 1}],' ')))) AS gram
+      FROM t WHERE len(w) >= {SPAN_W}),
+{_sql_capped('gram')}"""
 
 
 def q_substring_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shared token-span pairs (7-token contiguous runs) — the
     SQL-checkable twin of the anchored-gram substring pass
     (operators/substring.py; destor byte-precision dedup)."""
-    _d, g = _capped_token_grams(spark, sf_dir, "span_g")
+    g = _capped_token_grams(spark, sf_dir, "span_g")
     # r6: one groupBy(gram) + JVM combos instead of the double-shuffled
     # self-join (see _grouped_pairs); identical counts
     return _grouped_pairs(g, "gram").withColumnRenamed(
@@ -798,17 +759,9 @@ def q_substring_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SUBSTRING_SPAN_PAIRS = f"""
-WITH t AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
-           FROM documents),
-g0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        range(1, greatest(len(w)-6,0)+1),
-        i -> array_to_string(w[i:i+6],' ')))) AS gram
-      FROM t WHERE len(w) >= 7),
-hot AS (SELECT gram FROM g0 GROUP BY gram HAVING count(*) > {DF_CAP}),
-g AS (SELECT doc_id, gram FROM g0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.gram = g0.gram))
+WITH {_SQL_CAPPED_GRAMS}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_spans
-FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
+FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
 GROUP BY 1, 2
 """
 
@@ -857,7 +810,7 @@ def q_sa_longest_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable by construction).  Char-level production form with span
     offsets: operators/substring.longest_span_pairs.
     """
-    _d, g = _capped_token_grams(spark, sf_dir, "sa_g")
+    g = _capped_token_grams(spark, sf_dir, "sa_g")
     # r6: grouped pair generation (one groupBy(gram) shuffle) instead
     # of the double-shuffled self-join; the n_common count is dropped —
     # only the distinct pair set feeds the SA verify.  The verify joins
@@ -892,17 +845,9 @@ def q_sa_longest_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 # longest run is max count over (diag, island) groups.  Independent
 # algorithm, same exact answer.
 SQL_SA_LONGEST_SPAN = f"""
-WITH t AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
-           FROM documents),
-g0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        range(1, greatest(len(w)-6,0)+1),
-        i -> array_to_string(w[i:i+6],' ')))) AS gram
-      FROM t WHERE len(w) >= 7),
-hot AS (SELECT gram FROM g0 GROUP BY gram HAVING count(*) > {DF_CAP}),
-g AS (SELECT doc_id, gram FROM g0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.gram = g0.gram)),
+WITH {_SQL_CAPPED_GRAMS},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id),
+         FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id),
 pos AS (SELECT doc_id, unnest(w) AS tok,
                unnest(range(1, len(w)+1)) AS i
         FROM t),
@@ -952,20 +897,7 @@ def q_topk_similar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TOPK_SIMILAR_DOCS = f"""
-WITH d AS ({_SQL_SHINGLED}),
-e0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > {DF_CAP}),
-e AS (SELECT doc_id, s FROM e0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.s = e0.s)),
-sizes AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-          FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-pairs AS (
-  SELECT doc_a, doc_b,
-         CAST(round(1000000.0 * n_common / (sa.n + sb.n - n_common)) AS BIGINT) AS jaccard_ppm
-  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(round(1000000.0 * n_common / (sa.n + sb.n - n_common)) AS BIGINT) >= 300000),
+WITH pairs AS ({SQL_NGRAM_JACCARD_PAIRS}),
 sym AS (SELECT doc_a AS doc_id, doc_b AS neighbor, jaccard_ppm FROM pairs
         UNION ALL
         SELECT doc_b AS doc_id, doc_a AS neighbor, jaccard_ppm FROM pairs)
@@ -988,36 +920,29 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5("text").alias("text_md5"),
         F.length("text").alias("n_chars2"),
-        F.size(_tokens(F.col("text"))).alias("n_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
     )
 
 
-SQL_DOC_FINGERPRINT = """
+SQL_DOC_FINGERPRINT = f"""
 SELECT doc_id, md5(text) AS text_md5, length(text) AS n_chars2,
-       len(list_filter(string_split(text,' '), x -> x != '')) AS n_tokens
+       len({_SQL_TOKENS}) AS n_tokens
 FROM documents
 """
 
-_STOP = {
-    "en": ["the", "and", "of", "to", "a", "in", "is", "that", "it", "for"],
-    "de": ["der", "die", "und", "das", "ist", "ein", "zu", "den", "von", "mit"],
-    "fr": ["le", "la", "et", "les", "des", "est", "un", "une", "du", "que"],
-    "es": ["el", "la", "de", "que", "y", "los", "es", "un", "en", "una"],
-}
-
 
 def _sw_count(toks, lang: str):
-    return F.size(F.filter(toks, lambda t: t.isin(*_STOP[lang])))
+    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID; tie-break priority en>de>fr>es via an
     explicit CASE chain (identical in the SQL)."""
     d = _t(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     scored = d.select(
         "doc_id",
-        *[_sw_count(toks, lang).alias(f"sc_{lang}") for lang in _STOP],
+        *[_sw_count(toks, lang).alias(f"sc_{lang}") for lang in STOPWORDS],
     )
     en, de, fr, es = (F.col(f"sc_{x}") for x in ("en", "de", "fr", "es"))
     pred = (
@@ -1032,11 +957,11 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_inlist(lang: str) -> str:
-    return ", ".join(f"'{w}'" for w in _STOP[lang])
+    return ", ".join(f"'{w}'" for w in STOPWORDS[lang])
 
 
 SQL_LANG_ID = f"""
-WITH t AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS w
            FROM documents),
 s AS (SELECT doc_id,
   len(list_filter(w, x -> x IN ({_sql_inlist('en')}))) AS sc_en,
@@ -1057,7 +982,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheap quality-filter features, integer ppm units."""
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
-    toks = _tokens(t)
+    toks = tokens(t)
     n_tok = F.size(toks)
     tok_chars = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     n_alpha = F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
@@ -1083,7 +1008,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_QUALITY_SCORES = f"""
 WITH t AS (SELECT doc_id, text,
-             list_filter(string_split(text,' '), x -> x != '') AS w
+             {_SQL_TOKENS} AS w
            FROM documents)
 SELECT doc_id,
   length(text) AS n_chars2,
@@ -1101,7 +1026,7 @@ FROM t
 def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(_tokens(F.col("text"))).alias("token"))
+        d.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("token"))
@@ -1109,9 +1034,9 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_TOPK = """
+SQL_TOKEN_TOPK = f"""
 SELECT token, count(*) AS cnt
-FROM (SELECT unnest(list_filter(string_split(text,' '), x -> x != '')) AS token
+FROM (SELECT unnest({_SQL_TOKENS}) AS token
       FROM documents)
 GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 20
 """
@@ -1140,7 +1065,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-job chunk/byte counters (jcr.h:19-61) — the unit here is the
     token budget instead of bytes."""
     d = _t(spark, sf_dir, "documents")
-    n_ws = F.size(_tokens(F.col("text")))
+    n_ws = F.size(tokens(F.col("text")))
     n_bpe = F.size(
         F.regexp_extract_all(F.col("text"), F.lit(_BPE_RE), F.lit(0))
     )
@@ -1155,14 +1080,14 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_STATS = r"""
+SQL_TOKEN_STATS = rf"""
 SELECT doc_id, n_ws_tokens, n_bpe_tokens, n_chars,
        CAST(round(1000000.0 * n_bpe_tokens / greatest(n_ws_tokens, 1))
             AS BIGINT) AS fertility_ppm
 FROM (
   SELECT doc_id,
-         len(list_filter(string_split(text,' '), x -> x != '')) AS n_ws_tokens,
-         len(regexp_extract_all(text, ' ?\p{L}+| ?\p{N}+| ?[^ \t\n\x0B\f\r\p{L}\p{N}]+')) AS n_bpe_tokens,
+         len({_SQL_TOKENS}) AS n_ws_tokens,
+         len(regexp_extract_all(text, '{_BPE_RE}')) AS n_bpe_tokens,
          length(text) AS n_chars
   FROM documents)
 """
@@ -1755,7 +1680,7 @@ def _sql_dedup_pipeline(cc_rounds: int) -> str:
 WITH pages AS MATERIALIZED (SELECT doc_id, lpad(doc_id::VARCHAR, 10, '0') AS url,
                       coalesce(text, '') AS text
                FROM documents),
-tok AS (SELECT url, list_filter(string_split(text, ' '), x -> x != '') AS w
+tok AS (SELECT url, {_SQL_TOKENS} AS w
         FROM pages),
 shg AS (SELECT url,
           list_distinct(list_transform(range(1, greatest(len(w)-{K-1},0)+1),
@@ -1787,9 +1712,7 @@ cand AS (SELECT DISTINCT url_a, url_b FROM (
 ver AS (SELECT url_a, url_b FROM cand
         JOIN mh a ON a.url = cand.url_a
         JOIN mh b ON b.url = cand.url_b
-        WHERE CAST(list_sum(list_transform(range(1, {NUM_MH}+1), i ->
-                CASE WHEN a.mh[i] = b.mh[i] THEN 1 ELSE 0 END)) AS BIGINT) * 2
-              >= {NUM_MH}),
+        WHERE {_sql_n_match('a', 'b')} * 2 >= {NUM_MH}),
 hx AS (SELECT url, sha256(text) AS h FROM pages),
 eh AS (SELECT h, min(url) AS head FROM hx GROUP BY h HAVING count(*) >= 2),
 ee AS (SELECT e.head AS url_a, x.url AS url_b
@@ -1827,18 +1750,10 @@ def q_champion_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from destor_spark.operators.champions import greedy_champions
 
     # r6: exploded shingles via the fused Arrow kernel (see _kgram_docs)
-    e0 = _kgram_docs(spark, sf_dir)
     # df cap (see DF_CAP): destor scores on SAMPLED features, never on
     # corpus-wide boilerplate — and a hot shingle would blow up the
-    # query-candidate hit join
-    hot = (
-        e0.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > DF_CAP)
-        .select("s")
-    )
-    # barrier: greedy_champions joins e against itself
-    e = _barrier(e0.join(F.broadcast(hot), "s", "left_anti"), "champ_e")
+    # query-candidate hit join; greedy_champions joins e against itself
+    e = _capped(_kgram_docs(spark, sf_dir), "s", "champ_e")
     return greedy_champions(e, None, k=3)
 
 
@@ -1848,9 +1763,7 @@ def q_champion_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_CHAMPION_SEGMENTS = f"""
 WITH d AS ({_SQL_SHINGLED}),
 e0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > {DF_CAP}),
-e AS (SELECT doc_id, s FROM e0
-      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.s = e0.s)),
+{_sql_capped('s')},
 h1 AS (SELECT a.doc_id AS q, b.doc_id AS cand, a.s
        FROM e a JOIN e b ON a.s = b.s AND a.doc_id != b.doc_id),
 r1 AS (SELECT q, cand, count(*) AS n_hits,
@@ -1988,7 +1901,7 @@ def q_uniform_sample_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     features are folded to one md5 fingerprint per doc; identical list
     semantics in the DuckDB oracle."""
     d = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", _tokens(F.col("text")).alias("w")
+        "doc_id", tokens(F.col("text")).alias("w")
     )
     sh = d.filter(F.size("w") >= K).select(
         "doc_id",
@@ -2017,7 +1930,7 @@ def q_uniform_sample_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_UNIFORM_SAMPLE_FINGERPRINT = f"""
-WITH d AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+WITH d AS (SELECT doc_id, {_SQL_TOKENS} AS w
            FROM documents),
 s AS (SELECT doc_id,
              list_transform(range(1, greatest(len(w)-{K-1},0)+1),
@@ -2326,7 +2239,7 @@ def q_optimized_min_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     role; identical arithmetic in the DuckDB oracle.  All JVM-side
     (array ops inside codegen), one row per doc, no shuffle."""
     d = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", _tokens(F.col("text")).alias("w")
+        "doc_id", tokens(F.col("text")).alias("w")
     )
     sh = d.filter(F.size("w") >= K).select(
         "doc_id",
@@ -2381,7 +2294,7 @@ def q_optimized_min_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_OPTIMIZED_MIN_FEATURES = f"""
-WITH d AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+WITH d AS (SELECT doc_id, {_SQL_TOKENS} AS w
            FROM documents),
 s AS (SELECT doc_id,
              list_transform(range(1, greatest(len(w)-{K-1},0)+1),
@@ -2429,9 +2342,9 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_GOPHER_REPETITION = """
+SQL_GOPHER_REPETITION = f"""
 WITH t AS (SELECT doc_id, length(text) AS n_chars,
-                  list_filter(string_split(text,' '), x -> x != '') AS w
+                  {_SQL_TOKENS} AS w
            FROM documents),
 base AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
                 n_chars, w FROM t),
@@ -2466,8 +2379,8 @@ def q_segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segment_dedup_stats(_t(spark, sf_dir, "documents"))
 
 
-SQL_SEGMENT_DEDUP_STATS = """
-WITH t AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+SQL_SEGMENT_DEDUP_STATS = f"""
+WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS w
            FROM documents),
 sized AS (SELECT doc_id, w, len(w) // 8 AS nseg FROM t),
 segs AS (SELECT doc_id,
@@ -2512,8 +2425,8 @@ def q_segment_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_SEGMENT_CLEAN_CORPUS = """
-WITH t AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+SQL_SEGMENT_CLEAN_CORPUS = f"""
+WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS w
            FROM documents),
 sized AS (SELECT doc_id, w, len(w) // 8 AS nseg FROM t),
 segs AS (SELECT doc_id,
@@ -2526,7 +2439,7 @@ rn AS (SELECT doc_id, pos, seg,
                                  ORDER BY doc_id, pos) AS r
        FROM segs),
 kept AS (SELECT doc_id,
-                list_sort(list({'pos': pos, 'seg': seg})) AS ks
+                list_sort(list({{'pos': pos, 'seg': seg}})) AS ks
          FROM rn WHERE r = 1 GROUP BY doc_id),
 joined AS (
   SELECT s.doc_id,
@@ -2741,14 +2654,14 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DECONTAMINATION = """
-WITH bw AS (SELECT list_filter(string_split(text,' '), x -> x != '') AS w
+SQL_DECONTAMINATION = f"""
+WITH bw AS (SELECT {_SQL_TOKENS} AS w
             FROM documents WHERE doc_id % 10 = 3),
 bg AS (SELECT DISTINCT unnest(list_distinct(list_transform(
            range(1, len(w) - 11),
            i -> md5(array_to_string(w[i:i+12], ' '))))) AS g
        FROM bw WHERE len(w) >= 13),
-cw AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x != '') AS w
+cw AS (SELECT doc_id, {_SQL_TOKENS} AS w
        FROM documents WHERE doc_id % 10 != 3),
 cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
            range(1, len(w) - 11),
@@ -2943,111 +2856,79 @@ FROM cells c LEFT JOIN dups d USING (vid)
 # registry
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "exact_dup_groups": q_exact_dup_groups,
-    "dedup_ratio": q_dedup_ratio,
-    "incremental_dedup": q_incremental_dedup,
-    "incremental_near_dup": q_incremental_near_dup,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "containment_pairs": q_containment_pairs,
-    "topk_similar_docs": q_topk_similar_docs,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "simhash": q_simhash,
-    "substring_span_pairs": q_substring_span_pairs,
-    "sa_longest_span": q_sa_longest_span,
-    "doc_fingerprint": q_doc_fingerprint,
-    "lang_id": q_lang_id,
-    "quality_scores": q_quality_scores,
-    "token_topk": q_token_topk,
-    "token_stats": q_token_stats,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ivf_ann_topk": q_ivf_ann_topk,
-    "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-    "events_rollup": q_events_rollup,
-    "sessionize": q_sessionize,
-    "rollup_events": q_rollup_events,
-    "cube_events": q_cube_events,
-    "grouping_sets_events": q_grouping_sets_events,
-    "topk_orders_per_customer": q_topk_orders_per_customer,
-    "pricing_summary": q_pricing_summary,
-    "join_enrich": q_join_enrich,
-    "purchasers_no_errors": q_purchasers_no_errors,
-    "value_quantiles": q_value_quantiles,
-    "dedup_pipeline_assignments": q_dedup_pipeline_assignments,
-    "srp_ann_topk": q_srp_ann_topk,
-    "embedding_near_dup_bucketed": q_embedding_near_dup_bucketed,
-    "champion_segments": q_champion_segments,
-    "uniform_sample_fingerprint": q_uniform_sample_fingerprint,
-    "cfl_monitor": q_cfl_monitor,
-    "exact_media_dedup": q_exact_media_dedup,
-    "rewrite_decisions": q_rewrite_decisions,
-    "bloom_fp_lookup": q_bloom_fp_lookup,
-    "cdc_chunk_certificate": q_cdc_chunk_certificate,
-    "optimized_min_features": q_optimized_min_features,
-    "gopher_repetition": q_gopher_repetition,
-    "segment_dedup_stats": q_segment_dedup_stats,
-    "url_dup_groups": q_url_dup_groups,
-    "semantic_dedup": q_semantic_dedup,
-    "corpus_curation_decisions": q_corpus_curation_decisions,
-    "segment_clean_corpus": q_segment_clean_corpus,
-    "decontamination": q_decontamination,
-    "pii_scrub": q_pii_scrub,
-    "source_mixture": q_source_mixture,
-}
-
-ORACLE_SQL: dict[str, str] = {
-    "exact_dup_groups": SQL_EXACT_DUP_GROUPS,
-    "dedup_ratio": SQL_DEDUP_RATIO,
-    "incremental_dedup": SQL_INCREMENTAL_DEDUP,
-    "incremental_near_dup": SQL_INCREMENTAL_NEAR_DUP,
-    "ngram_jaccard_pairs": SQL_NGRAM_JACCARD_PAIRS,
-    "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "topk_similar_docs": SQL_TOPK_SIMILAR_DOCS,
-    "minhash_lsh_pairs": SQL_MINHASH_LSH_PAIRS,
-    "simhash": SQL_SIMHASH,
-    "substring_span_pairs": SQL_SUBSTRING_SPAN_PAIRS,
-    "sa_longest_span": SQL_SA_LONGEST_SPAN,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "lang_id": SQL_LANG_ID,
-    "quality_scores": SQL_QUALITY_SCORES,
-    "token_topk": SQL_TOKEN_TOPK,
-    "token_stats": SQL_TOKEN_STATS,
-    "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "ivf_ann_topk": SQL_IVF_ANN_TOPK,
-    "embedding_near_dup_pairs": SQL_EMBEDDING_NEAR_DUP_PAIRS,
-    "events_rollup": SQL_EVENTS_ROLLUP,
-    "sessionize": SQL_SESSIONIZE,
-    "rollup_events": SQL_ROLLUP_EVENTS,
-    "cube_events": SQL_CUBE_EVENTS,
-    "grouping_sets_events": SQL_GROUPING_SETS_EVENTS,
-    "topk_orders_per_customer": SQL_TOPK_ORDERS,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "join_enrich": SQL_JOIN_ENRICH,
-    "purchasers_no_errors": SQL_PURCHASERS_NO_ERRORS,
-    "value_quantiles": SQL_VALUE_QUANTILES,
-    "champion_segments": SQL_CHAMPION_SEGMENTS,
-    "uniform_sample_fingerprint": SQL_UNIFORM_SAMPLE_FINGERPRINT,
-    "cfl_monitor": SQL_CFL_MONITOR,
-    # bucketed near-dup: same oracle as brute force — on the planted
-    # corpus the two are deterministically equal (see the query doc)
-    "embedding_near_dup_bucketed": SQL_EMBEDDING_NEAR_DUP_PAIRS,
-    "dedup_pipeline_assignments": SQL_DEDUP_PIPELINE_ASSIGNMENTS,
+# One row per query: name -> (Spark query function, DuckDB oracle SQL).
+_REGISTRY: dict[
+    str, tuple[Callable[[SparkSession, str], DataFrame], str]
+] = {
+    "exact_dup_groups": (q_exact_dup_groups, SQL_EXACT_DUP_GROUPS),
+    "dedup_ratio": (q_dedup_ratio, SQL_DEDUP_RATIO),
+    "incremental_dedup": (q_incremental_dedup, SQL_INCREMENTAL_DEDUP),
+    "incremental_near_dup": (q_incremental_near_dup, SQL_INCREMENTAL_NEAR_DUP),
+    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, SQL_NGRAM_JACCARD_PAIRS),
+    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
+    "topk_similar_docs": (q_topk_similar_docs, SQL_TOPK_SIMILAR_DOCS),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, SQL_MINHASH_LSH_PAIRS),
+    "simhash": (q_simhash, SQL_SIMHASH),
+    "substring_span_pairs": (q_substring_span_pairs, SQL_SUBSTRING_SPAN_PAIRS),
+    "sa_longest_span": (q_sa_longest_span, SQL_SA_LONGEST_SPAN),
+    "doc_fingerprint": (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    "lang_id": (q_lang_id, SQL_LANG_ID),
+    "quality_scores": (q_quality_scores, SQL_QUALITY_SCORES),
+    "token_topk": (q_token_topk, SQL_TOKEN_TOPK),
+    "token_stats": (q_token_stats, SQL_TOKEN_STATS),
+    "ann_cosine_topk": (q_ann_cosine_topk, SQL_ANN_COSINE_TOPK),
+    "ivf_ann_topk": (q_ivf_ann_topk, SQL_IVF_ANN_TOPK),
+    "embedding_near_dup_pairs": (
+        q_embedding_near_dup_pairs, SQL_EMBEDDING_NEAR_DUP_PAIRS
+    ),
+    "events_rollup": (q_events_rollup, SQL_EVENTS_ROLLUP),
+    "sessionize": (q_sessionize, SQL_SESSIONIZE),
+    "rollup_events": (q_rollup_events, SQL_ROLLUP_EVENTS),
+    "cube_events": (q_cube_events, SQL_CUBE_EVENTS),
+    "grouping_sets_events": (q_grouping_sets_events, SQL_GROUPING_SETS_EVENTS),
+    "topk_orders_per_customer": (q_topk_orders_per_customer, SQL_TOPK_ORDERS),
+    "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
+    "join_enrich": (q_join_enrich, SQL_JOIN_ENRICH),
+    "purchasers_no_errors": (q_purchasers_no_errors, SQL_PURCHASERS_NO_ERRORS),
+    "value_quantiles": (q_value_quantiles, SQL_VALUE_QUANTILES),
+    "dedup_pipeline_assignments": (
+        q_dedup_pipeline_assignments, SQL_DEDUP_PIPELINE_ASSIGNMENTS
+    ),
     # brute force restricted to the fixed query list is an EXACT oracle
     # here: SRP recall for these queries is deterministically 1.0 at
     # the driver SFs (gated by test_srp_driver_query_equals_brute)
-    "srp_ann_topk": SQL_SRP_ANN_TOPK,
-    "exact_media_dedup": SQL_EXACT_MEDIA_DEDUP,
-    "rewrite_decisions": SQL_REWRITE_DECISIONS,
-    "bloom_fp_lookup": SQL_BLOOM_FP_LOOKUP,
-    "cdc_chunk_certificate": SQL_CDC_CHUNK_CERTIFICATE,
-    "optimized_min_features": SQL_OPTIMIZED_MIN_FEATURES,
-    "gopher_repetition": SQL_GOPHER_REPETITION,
-    "segment_dedup_stats": SQL_SEGMENT_DEDUP_STATS,
-    "url_dup_groups": SQL_URL_DUP_GROUPS,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "corpus_curation_decisions": SQL_CORPUS_CURATION_DECISIONS,
-    "segment_clean_corpus": SQL_SEGMENT_CLEAN_CORPUS,
-    "decontamination": SQL_DECONTAMINATION,
-    "pii_scrub": SQL_PII_SCRUB,
-    "source_mixture": SQL_SOURCE_MIXTURE,
+    "srp_ann_topk": (q_srp_ann_topk, SQL_SRP_ANN_TOPK),
+    # bucketed near-dup: same oracle as brute force — on the planted
+    # corpus the two are deterministically equal (see the query doc)
+    "embedding_near_dup_bucketed": (
+        q_embedding_near_dup_bucketed, SQL_EMBEDDING_NEAR_DUP_PAIRS
+    ),
+    "champion_segments": (q_champion_segments, SQL_CHAMPION_SEGMENTS),
+    "uniform_sample_fingerprint": (
+        q_uniform_sample_fingerprint, SQL_UNIFORM_SAMPLE_FINGERPRINT
+    ),
+    "cfl_monitor": (q_cfl_monitor, SQL_CFL_MONITOR),
+    "exact_media_dedup": (q_exact_media_dedup, SQL_EXACT_MEDIA_DEDUP),
+    "rewrite_decisions": (q_rewrite_decisions, SQL_REWRITE_DECISIONS),
+    "bloom_fp_lookup": (q_bloom_fp_lookup, SQL_BLOOM_FP_LOOKUP),
+    "cdc_chunk_certificate": (
+        q_cdc_chunk_certificate, SQL_CDC_CHUNK_CERTIFICATE
+    ),
+    "optimized_min_features": (
+        q_optimized_min_features, SQL_OPTIMIZED_MIN_FEATURES
+    ),
+    "gopher_repetition": (q_gopher_repetition, SQL_GOPHER_REPETITION),
+    "segment_dedup_stats": (q_segment_dedup_stats, SQL_SEGMENT_DEDUP_STATS),
+    "url_dup_groups": (q_url_dup_groups, SQL_URL_DUP_GROUPS),
+    "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
+    "corpus_curation_decisions": (
+        q_corpus_curation_decisions, SQL_CORPUS_CURATION_DECISIONS
+    ),
+    "segment_clean_corpus": (q_segment_clean_corpus, SQL_SEGMENT_CLEAN_CORPUS),
+    "decontamination": (q_decontamination, SQL_DECONTAMINATION),
+    "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
+    "source_mixture": (q_source_mixture, SQL_SOURCE_MIXTURE),
 }
+
+QUERIES = {name: q for name, (q, _sql) in _REGISTRY.items()}
+ORACLE_SQL = {name: sql for name, (_q, sql) in _REGISTRY.items()}

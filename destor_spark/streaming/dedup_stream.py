@@ -128,7 +128,11 @@ def run_incremental_dedup(
         own keys land in (partition pruning — asserted in
         tests/test_streaming.py) and only REWRITES those partitions
         (dynamic partition overwrite), so per-batch IO is bounded by
-        the batch's bucket footprint, not the corpus.
+        the batch's bucket footprint, not the corpus — while that
+        footprint is small: K distinct band keys leave
+        n_key_buckets·(1 - 1/n_key_buckets)^K partitions untouched on
+        average, below 1 of 64 once K ≳ 265 (about 17 docs at 16
+        bands), so a 300-doc trigger reads and rewrites all of them.
       * FIFO newest-k retention: each (band, key) keeps only the
         value_len most recent members by arrival (batch id, then
         warc_ts, url) — exactly destor's index_value_length FIFO rule

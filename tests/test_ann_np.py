@@ -132,18 +132,16 @@ def test_ivf_assign_np_equals_expr(spark, emb):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def _expr_ivf_topk(emb, queries, n_cells, nprobe, k):
+def _expr_ivf_topk(emb, queries, n_cells, nprobe, k, exclude_self=True):
     """Expression IVF top-k: _expr_cells candidates re-ranked by the
     expression cosine."""
     cents = ann.ivf_centroids(emb, n_cells)
     corpus_cells = _expr_cells(emb, cents, 1, "neighbor_id")
     query_cells = _expr_cells(queries, cents, nprobe, "query_id")
-    cand = (
-        query_cells.join(corpus_cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    cand = query_cells.join(corpus_cells, "cell")
+    if exclude_self:
+        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
+    cand = cand.select("query_id", "neighbor_id").distinct()
     scored = (
         cand.join(
             queries.select(
@@ -172,6 +170,42 @@ def test_ivf_topk_np_equals_expr_path(spark, emb):
     got = _pdf(ann.ivf_topk(emb, queries, n_cells=8, nprobe=3, k=10))
     want = _pdf(_expr_ivf_topk(emb, queries, 8, 3, 10))
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_null_vec_id_equals_expr(spark):
+    """A NULL vec_id stays a NULL id through the numpy kernels (it used
+    to reach Spark as a NaN double under a bigint schema and fail the
+    job): brute_force_topk, ivf_topk and ivf_assign equal their
+    expression references, with and without exclude_self.  The NULL
+    row's vector ties row 0's, so the neighbor_id ASC (NULLs first)
+    tie-break decides the k=1 answers; md5(NULL) sorts first, so the
+    NULL row is also a centroid."""
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.6, 0.8, 0.0]),
+        (None, [1.0, 0.0, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ann.ivf_centroids(emb, 3)
+    got = _cells_pdf(ann.ivf_assign(emb, cents.toPandas(), 2, "vid"), "vid")
+    want = _cells_pdf(_expr_cells(emb, cents, 2, "vid"), "vid")
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    for exclude_self in (True, False):
+        for k in (1, 3):
+            got = _pdf(
+                ann.brute_force_topk(emb, emb, k, exclude_self=exclude_self)
+            )
+            want = _pdf(_expr_topk(emb, emb, k, exclude_self))
+            pd.testing.assert_frame_equal(got, want, check_dtype=False)
+            got = _pdf(
+                ann.ivf_topk(
+                    emb, emb, n_cells=3, nprobe=2, k=k,
+                    exclude_self=exclude_self,
+                )
+            )
+            want = _pdf(_expr_ivf_topk(emb, emb, 3, 2, k, exclude_self))
+            pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_pairwise_msim_np_equals_expr(spark):

@@ -7,8 +7,28 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from destor_spark.hashing import xxh64_str
-from destor_spark.operators.shingles import with_token_hashes
 from destor_spark.oracle import _TokenHasher, tokenize
+
+# Java \s is ASCII-only — oracle.tokenize mirrors this with
+# re.compile(r"\s+", re.ASCII); a Python Unicode \s would also split
+# on \xa0/U+2000-range spaces, which the extractor deliberately
+# preserves as rendered characters
+TOKEN_SPLIT_RE = r"\s+"
+
+
+def tokens_col(text):
+    """JVM tokenizer reference: text -> array<string> of non-empty
+    whitespace-separated tokens (split/filter in codegen)."""
+    return F.filter(F.split(text, TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
+
+
+def with_token_hashes(df, text_col="text", out_col="token_hashes"):
+    """JVM token-hash reference: xxhash64 (seed 42) of every token."""
+    return df.withColumn(
+        out_col,
+        F.transform(tokens_col(F.col(text_col)), lambda t: F.xxhash64(t)),
+    )
+
 
 SAMPLES = [
     "",

@@ -97,7 +97,7 @@ def test_tokenize_ascii_whitespace_only(spark):
     from pyspark.sql import functions as F
 
     import destor_spark.oracle as O
-    from destor_spark.operators.shingles import tokens_col
+    from test_hash_parity import tokens_col
 
     for s in ["foo\xa0bar", "a b", "x y", "p \t\n q"]:
         engine = (

@@ -15,6 +15,7 @@ from destor_spark.operators.portable_mh import (
     minhash_hex_from_text,
     pipeline_sigs_from_text,
 )
+from destor_spark.operators.textstats import tokens
 
 ADVERSARIAL = [
     (1, "plain five word doc here ok"),
@@ -37,13 +38,40 @@ def adv_docs(spark):
     return spark.createDataFrame(pdf)
 
 
+def _shingles(toks, k=Q.K):
+    """distinct word-k-gram strings; caller guarantees size>=k."""
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
+            lambda i: F.array_join(F.slice(toks, i, k), " "),
+        )
+    )
+
+
+def _md5_minima(sh):
+    """array<string> shingles -> md5-string minima, NUM_MH perms."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(Q.NUM_MH - 1)),
+        lambda p: F.array_min(
+            F.transform(
+                sh, lambda s: F.md5(F.concat(p.cast("string"), F.lit(":"), s))
+            )
+        ),
+    )
+
+
+def _portable_minhash(sh_df):
+    """(doc_id, sh) -> (doc_id, mh)."""
+    return sh_df.select("doc_id", _md5_minima(F.col("sh")).alias("mh"))
+
+
 def _expr_mh(docs):
     """The r5 expression formulation (ground truth)."""
-    d = docs.select("doc_id", Q._tokens(F.col("text")).alias("w"))
+    d = docs.select("doc_id", tokens(F.col("text")).alias("w"))
     sh = d.filter(F.size("w") >= Q.K).select(
-        "doc_id", Q._shingles(F.col("w")).alias("sh")
+        "doc_id", _shingles(F.col("w")).alias("sh")
     )
-    return Q._portable_minhash(sh)
+    return _portable_minhash(sh)
 
 
 def _sorted_pdf(df):
@@ -74,22 +102,9 @@ def test_mh_parity_fixture_sf(spark):
 def _expr_kgrams(docs, k):
     """The r5 expression formulation of the exploded distinct k-gram
     relation (ground truth for exploded_kgrams_from_text)."""
-    d = docs.select("doc_id", Q._tokens(F.col("text")).alias("w"))
-    return (
-        d.filter(F.size("w") >= k)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("w") - F.lit(k - 1)),
-                        lambda i: F.array_join(
-                            F.slice(F.col("w"), i, k), " "
-                        ),
-                    )
-                )
-            ).alias("s"),
-        )
+    d = docs.select("doc_id", tokens(F.col("text")).alias("w"))
+    return d.filter(F.size("w") >= k).select(
+        "doc_id", F.explode(_shingles(F.col("w"), k)).alias("s")
     )
 
 
@@ -140,8 +155,8 @@ def test_kgrams_parity_fixture(spark):
 
 
 def _expr_pipeline_sigs(pages):
-    toks = Q._tokens(F.col("text"))
-    sh = F.when(F.size(toks) >= Q.K, Q._shingles(toks)).otherwise(
+    toks = tokens(F.col("text"))
+    sh = F.when(F.size(toks) >= Q.K, _shingles(toks)).otherwise(
         F.array().cast("array<string>")
     )
     raw = pages.select(
@@ -154,17 +169,7 @@ def _expr_pipeline_sigs(pages):
         "url",
         "warc_ts",
         "content_sha",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(Q.NUM_MH - 1)),
-            lambda p: F.array_min(
-                F.transform(
-                    F.col("sh"),
-                    lambda s: F.md5(
-                        F.concat(p.cast("string"), F.lit(":"), s)
-                    ),
-                )
-            ),
-        ).alias("sig"),
+        _md5_minima(F.col("sh")).alias("sig"),
         F.size("sh").alias("n_shingles"),
     )
     return sigs.withColumn(

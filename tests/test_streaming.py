@@ -156,9 +156,9 @@ def test_event_time_retention_bounds_store(spark, cfg, tmp_path):
 
 
 def test_store_scan_is_pruned(spark, cfg, tmp_path):
-    """Per-batch scan bytes stay bounded as the store grows: a batch
-    reads only the kb partitions its own keys touch (partition
-    pruning), never the whole band store."""
+    """Per-batch store IO stays bounded as the store grows: a batch
+    rewrites only the kb partitions its own keys touch, never the
+    whole band store — observed on the stream's own files."""
     from pyspark.sql import functions as F
 
     in_dir = str(tmp_path / "in_prune")
@@ -170,43 +170,59 @@ def test_store_scan_is_pruned(spark, cfg, tmp_path):
     )
     from destor_spark.streaming.dedup_stream import run_incremental_dedup
 
+    band_store = os.path.join(state, "band_store")
+
+    def part_files():
+        return {
+            d: sorted(
+                f for f in os.listdir(os.path.join(band_store, d))
+                if f.startswith("part-")
+            )
+            for d in os.listdir(band_store)
+            if d.startswith("kb=")
+        }
+
     run_incremental_dedup(spark, in_dir, state, cfg)
+    before = part_files()
     # tiny second batch: touches few key buckets
     pages.iloc[380:382].to_parquet(
         os.path.join(in_dir, "tiny.parquet"), index=False
     )
     run_incremental_dedup(spark, in_dir, state, cfg)
+    after = part_files()
 
-    band_store = os.path.join(state, "band_store")
-    store = spark.read.parquet(band_store)
-    total_files = len(store.inputFiles())
-    # replicate the batch's pruned read: kb partitions of 5 docs' keys
+    # the kb partitions the 2 docs' band keys land in
     from destor_spark.operators import lsh as lsh_op
     from destor_spark.plans.pipeline import signatures_stage
 
     tiny = spark.createDataFrame(pages.iloc[380:382])
     sigs = signatures_stage(tiny, cfg)
-    kbs = [
-        r["kb"]
+    touched = {
+        f"kb={r['kb']}"
         for r in lsh_op.explode_bands(sigs)
         .select(F.pmod("key", F.lit(64)).alias("kb"))
         .distinct()
         .collect()
-    ]
-    pruned = store.filter(F.col("kb").isin(kbs))
-    # (a) kb is a PARTITION filter in the physical plan (directory-level
-    # pruning, no file of an untouched kb is even opened) ...
+    }
+    untouched = set(before) - touched
+    # (a) the trigger left every partition it does not touch as it was
+    # (same part files), and there are such partitions ...
+    assert untouched, (sorted(touched), len(before))
+    for d in untouched:
+        assert after[d] == before[d], d
+    # ... (b) it rewrote every partition it does touch ...
+    for d in touched:
+        assert d in after and after[d] != before.get(d), d
+    # ... and (c) kb is a PARTITION filter in the physical plan of a
+    # kb-restricted store read (directory-level pruning, no file of an
+    # untouched kb is even opened).
+    pruned = spark.read.parquet(band_store).filter(
+        F.col("kb").isin([int(d[3:]) for d in touched])
+    )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "kb" in plan.split(
         "PartitionFilters"
     )[1].split("]")[0], plan
-    # ... and (b) the files actually contributing rows are a strict
-    # subset of the store (inputFiles() ignores filters, so count the
-    # files the pruned scan really touches).
-    files_read = (
-        pruned.select(F.input_file_name().alias("f")).distinct().count()
-    )
-    assert 0 < files_read < total_files, (files_read, total_files)
 
 
 def test_stream_exact_dedup_watermark(spark, tmp_path):

@@ -50,14 +50,15 @@ def _span_with_anchor(seed: int, span_len: int) -> str:
 def test_kernel_exactness():
     assert H.has_common_substring("abcdef", "xxcdexx", 3)
     assert not H.has_common_substring("abcdef", "xxcdexx", 4)
-    assert H.longest_common_substring_len("abcdef", "xxcdexx") == 3
-    assert H.longest_common_substring_len("", "abc") == 0
+    assert H.has_common_substring("", "abc", 0)
+    assert not H.has_common_substring("", "abc", 1)
     assert not H.has_common_substring("", "", 1)
     assert H.has_common_substring("same", "same", 4)
     # repeated content: many hash-table hits, still exact
     a = "ab" * 300
     b = "ba" * 300
-    assert H.longest_common_substring_len(a, b) == 599
+    assert H.has_common_substring(a, b, 599)
+    assert not H.has_common_substring(a, b, 600)
 
 
 def test_kernel_matches_bruteforce():
@@ -70,7 +71,9 @@ def test_kernel_matches_bruteforce():
             for j in range(i + 1, len(a) + 1):
                 if a[i:j] in b:
                     brute = max(brute, j - i)
-        assert H.longest_common_substring_len(a, b) == brute, (a, b)
+        # exact at the brute-force length: True at L, False at L+1
+        assert H.has_common_substring(a, b, brute), (a, b)
+        assert not H.has_common_substring(a, b, brute + 1), (a, b)
 
 
 @pytest.fixture(scope="module")

@@ -551,7 +551,9 @@ def ivf_centroids(
             ),
             F.md5(F.col(id_col).cast("string")).alias("_h"),
         )
-        .orderBy("_h", "centroid_id")
+        # NULLs last, as in the DuckDB quantizer: md5(NULL) is NULL,
+        # and a NULL centroid_id would make its cell never equi-join
+        .orderBy(F.asc_nulls_last("_h"), F.asc_nulls_last("centroid_id"))
         .limit(n_cells)
         .drop("_h")
     )
@@ -717,7 +719,7 @@ def srp_near_dup_pairs(
 
     ex = near_dup_band_relation(emb, dim, bits, bands, id_col, vec_col)
     cfg = DedupConfig(bucket_cap=bucket_cap)
-    cand, _stats = bucket_pairs(ex, cfg)
+    cand = bucket_pairs(ex, cfg)
     v = emb.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),

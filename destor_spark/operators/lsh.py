@@ -25,8 +25,9 @@ cap_rewrite.c:44-107):
                              oracle applies the identical rule, so
                              assignment parity is preserved.
 
-bucket_stats (band, key, size, strategy) is returned alongside the
-pairs for lineage/metrics (destor jcr analogue).
+bucket_stats (band, key, size, strategy) is the per-bucket inventory
+for lineage/metrics (destor jcr analogue), produced by
+bucket_stats_only.
 """
 
 from __future__ import annotations
@@ -55,16 +56,15 @@ def explode_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
-def bucket_pairs(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
+def bucket_pairs(ex: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Generic bucketed pair generation with the cap/star skew strategy.
 
     ex: (url, warc_ts, band, key) membership relation.
-    Returns (pairs(url_a, url_b), bucket_stats(band, key, size, strategy));
-    pairs are distinct across buckets, url-normalized (url_a < url_b
-    lexicographic — see _norm_pair; in-bucket ordering and star-head
-    selection remain by (warc_ts, url), first-copy-wins).
+    Returns pairs(url_a, url_b), distinct across buckets and
+    url-normalized (url_a < url_b lexicographic — see _norm_pair;
+    in-bucket ordering and star-head selection remain by (warc_ts,
+    url), first-copy-wins).  The bucket inventory is
+    bucket_stats_only's.
 
     One groupBy collects each bucket and the pairs are generated
     JVM-side from the sorted member array: 2 shuffles total.  A bucket
@@ -84,20 +84,10 @@ def bucket_pairs(
         )
         .filter(F.size("ms") >= 2)
     )
-    bucket_stats = grouped.select(
-        "band",
-        "key",
-        # cast: F.size is int32 while bucket_stats_only derives size
-        # from F.count (int64) — the two producers of this relation
-        # must agree on schema, not just values (checkpointed stats
-        # tables get restored and compared across runs)
-        F.size("ms").cast("long").alias("size"),
-        _strategy(F.size("ms"), cfg).alias("strategy"),
-    )
     pair_array = F.when(
         F.size("ms") <= cfg.bucket_cap, _combos(F.col("ms"))
     ).otherwise(_star(F.col("ms")))
-    pairs = (
+    return (
         grouped.select(F.explode(pair_array).alias("p"))
         .select("p.url_a", "p.url_b")
         # a url present TWICE in one bucket (streaming store + re-crawl
@@ -108,7 +98,6 @@ def bucket_pairs(
         .select(*_norm_pair())
         .distinct()
     )
-    return pairs, bucket_stats
 
 
 def _strategy(size_col, cfg: DedupConfig):
@@ -126,14 +115,13 @@ def _strategy(size_col, cfg: DedupConfig):
 
 
 def bucket_stats_only(ex: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """The bucket_stats relation WITHOUT the pair relation.
+    """bucket_stats(band, key, size, strategy): every bucket of >= 2
+    members, the strategy bucket_pairs applies to it.
 
-    Row-identical to the stats output of bucket_pairs, but the shuffle
-    carries (band, key, partial_count) instead of member-struct arrays
-    (map-side combine on a plain count) — the right physics when a
-    consumer needs only the bucket inventory (run_checkpointed's HAR
-    lineage stage), where re-running the collect_list groupBy would
-    repeat the job's largest shuffle just to persist a tiny table."""
+    The shuffle carries (band, key, partial_count) instead of
+    member-struct arrays (map-side combine on a plain count): the
+    bucket inventory never re-runs the collect_list groupBy, the
+    job's largest shuffle, just to persist a tiny table."""
     sizes = (
         ex.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -186,5 +174,7 @@ def _star(ms):
 def candidate_pairs(
     sigs: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """MinHash-LSH candidates: explode bands, then bucketed pair gen."""
-    return bucket_pairs(explode_bands(sigs), cfg)
+    """MinHash-LSH candidates: explode bands, then bucketed pair gen.
+    Returns (pairs, bucket_stats)."""
+    ex = explode_bands(sigs)
+    return bucket_pairs(ex, cfg), bucket_stats_only(ex, cfg)

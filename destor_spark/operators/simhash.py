@@ -157,7 +157,7 @@ def simhash_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """
     from destor_spark.operators.lsh import bucket_pairs
 
-    cand, _stats = bucket_pairs(explode_blocks(sigs, cfg), cfg)
+    cand = bucket_pairs(explode_blocks(sigs, cfg), cfg)
     s = sigs.select("url", "simhash")
     a = s.select(F.col("url").alias("url_a"), F.col("simhash").alias("ha"))
     b = s.select(F.col("url").alias("url_b"), F.col("simhash").alias("hb"))

@@ -135,7 +135,7 @@ def candidate_substring_pairs(
     (>= gram_len chars — which is < L; see substring_pairs)."""
     from destor_spark.operators.lsh import bucket_pairs
 
-    pairs, _stats = bucket_pairs(anchored_grams(pages, cfg), cfg)
+    pairs = bucket_pairs(anchored_grams(pages, cfg), cfg)
     return pairs
 
 

@@ -7,8 +7,7 @@ delete, the next backup) resume from durable state
 /root/reference/src/destor.c:78-213).
 
 Spark restatement: every pipeline stage writes its output as parquet
-(Iceberg when a catalog is configured — same call sites, see
-sources/catalog.py) plus a manifest json carrying
+(write_barrier) plus a manifest json carrying
 (run_id, stage, rows, per-partition row counts, wall seconds).  A
 re-entrant run loads any stage whose manifest says complete instead of
 recomputing — resume-equals-fresh is pinned by tests/test_resume.py.

@@ -257,16 +257,13 @@ def dedup_stages(
         Stage(
             "candidate_pairs",
             ("signatures",),
-            lambda sigs: lsh_op.candidate_pairs(sigs, cfg)[0],
+            lambda sigs: lsh_op.bucket_pairs(lsh_op.explode_bands(sigs), cfg),
         ),
         # bucket_stats persisted per run: the destor-HAR pattern — this
         # run's hot-bucket inventory informs the next run's salting and
         # is part of the per-partition lineage (har_rewrite.c:17-180
         # inherits the previous backup's sparse-container list the same
-        # way).  bucket_stats_only, not candidate_pairs(...)[1]: the
-        # tuple form would re-run the whole collect_list explode/groupBy
-        # — the job's largest shuffle — a second time just to persist
-        # this small table.
+        # way).
         Stage(
             "bucket_stats",
             ("signatures",),

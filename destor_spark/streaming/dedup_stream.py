@@ -36,7 +36,8 @@ from destor_spark.config import DedupConfig
 from destor_spark.operators import exact as exact_op
 from destor_spark.operators import lsh as lsh_op
 from destor_spark.operators import verify as verify_op
-from destor_spark.plans.pipeline import signatures_stage
+from destor_spark.plans.checkpoint import _footer_stats, write_barrier
+from destor_spark.plans.pipeline import _mat_root, signatures_stage
 
 WEB_PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -108,6 +109,34 @@ def _check_store_layout(state_dir: str) -> None:
         )
 
 
+def read_band_store(
+    spark: SparkSession, band_store: str, new_bands: DataFrame
+) -> DataFrame:
+    """The band-store members in the kb partitions new_bands touches.
+
+    The store is read with the schema the stream writes (no
+    schema-inference job), and the touched kb values stay a broadcast
+    left-semi join instead of a driver collect: dynamic partition
+    pruning turns the join into a kb partition filter, so untouched
+    kb= directories are never opened."""
+    kbs = F.broadcast(new_bands.select("kb").distinct())
+    store = spark.read.schema(new_bands.schema).parquet(band_store)
+    return store.join(kbs, "kb", "left_semi")
+
+
+def _write_store(
+    df: DataFrame, barrier_dir: str, store: str, part: str
+) -> None:
+    """Dynamic-partition-overwrite df into store, partitioned on part —
+    unless the barrier it comes from holds no rows (its parquet footers
+    say so, no Spark job).  A store dir exists only once it holds
+    rows: whether there is state to read is os.path.exists, and an
+    empty write would create the dir while rewriting no partition."""
+    w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    if _footer_stats(barrier_dir)[0]:
+        w.partitionBy(part).parquet(store)
+
+
 def run_incremental_dedup(
     spark: SparkSession,
     in_dir: str,
@@ -125,11 +154,13 @@ def run_incremental_dedup(
       * band_store/ — the exploded (url, warc_ts, bid, band, key)
         membership relation, hash-partitioned on kb = pmod(key,
         n_key_buckets).  A micro-batch only READS the kb partitions its
-        own keys land in (partition pruning — asserted in
-        tests/test_streaming.py) and only REWRITES those partitions
-        (dynamic partition overwrite), so per-batch IO is bounded by
-        the batch's bucket footprint, not the corpus — while that
-        footprint is small: K distinct band keys leave
+        own keys land in — read_band_store left-semi-joins the store
+        to the broadcast set of the batch's kb values, and dynamic
+        partition pruning turns that join into a kb partition filter
+        (asserted in tests/test_streaming.py) — and only REWRITES those
+        partitions (dynamic partition overwrite), so per-batch IO is
+        bounded by the batch's bucket footprint, not the corpus — while
+        that footprint is small: K distinct band keys leave
         n_key_buckets·(1 - 1/n_key_buckets)^K partitions untouched on
         average, below 1 of 64 once K ≳ 265 (about 17 docs at 16
         bands), so a 300-doc trigger reads and rewrites all of them.
@@ -153,6 +184,11 @@ def run_incremental_dedup(
     from the current batch (old-old pairs were emitted when first
     seen), so the pair store grows with new data only.  availableNow
     trigger => terminates when the backlog drains.
+
+    Every fact the batch needs about what it wrote comes from what it
+    wrote: whether the batch, its retained band rows or its verified
+    pairs are empty is read from the barrier's parquet footers (no
+    Spark job), and an empty barrier writes no store.
 
     At-least-once safety: the pair and signature stores are partitioned
     by batch id and written with dynamic partition overwrite, so a
@@ -191,9 +227,6 @@ def run_incremental_dedup(
         bytes stay bounded by the FIFO k plus one batch's width.
     None (default) disables event-time retention (FIFO only).
     """
-    from destor_spark.plans.checkpoint import write_barrier
-    from destor_spark.plans.pipeline import _mat_root
-
     band_store = os.path.join(state_dir, "band_store")
     sig_store = os.path.join(state_dir, "signatures")
     pair_store = os.path.join(state_dir, "pairs")
@@ -224,14 +257,11 @@ def run_incremental_dedup(
     def _process_inner(
         batch: DataFrame, batch_id: int, root: str
     ) -> None:
-        sigs = write_barrier(
-            signatures_stage(batch, cfg),
-            os.path.join(root, f"b{batch_id}_sigs"),
-        )
-        if not sigs.head(1):
-            # foreachBatch can deliver an empty micro-batch; writing
-            # empty stores would leave _SUCCESS-only parquet dirs that
-            # crash the next batch's read (UNABLE_TO_INFER_SCHEMA)
+        pre = os.path.join(root, f"b{batch_id}_")  # barrier dir prefix
+        sigs = write_barrier(signatures_stage(batch, cfg), pre + "sigs")
+        if not _footer_stats(pre + "sigs")[0]:
+            # foreachBatch can deliver an empty micro-batch: it writes
+            # no store and moves no watermark
             return
         drop_horizon = None
         if age is not None:
@@ -327,14 +357,9 @@ def run_incremental_dedup(
                     "timestamp"
                 )
             )
-        touched_kbs = [
-            r["kb"] for r in new_bands.select("kb").distinct().collect()
-        ]
 
         if os.path.exists(band_store):
-            old = spark.read.parquet(band_store).filter(
-                F.col("kb").isin(touched_kbs)
-            )
+            old = read_band_store(spark, band_store, new_bands)
             if drop_horizon is not None:
                 # State VISIBLE to this batch's pair generation is
                 # governed by the LAGGING watermark — the value that
@@ -374,7 +399,7 @@ def run_incremental_dedup(
             merged.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= value_len)
             .drop("rn"),
-            os.path.join(root, f"b{batch_id}_retained"),
+            pre + "retained",
         )
         # STATE EVICTION is deliberately LAZY: batch N's rewrite keeps
         # every member its join could see (the lag-filtered visible set
@@ -392,23 +417,16 @@ def run_incremental_dedup(
         # which restores state version N-1 when batch N replays.  The
         # extra bytes are bounded: one batch's width per touched
         # partition, on top of the FIFO k.
-        if retained.head(1):
-            # an all-dropped batch (every row beyond the horizon) must
-            # not create an empty-store dir; dynamic overwrite with an
-            # empty frame rewrites nothing anyway
-            (
-                retained.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("kb")
-                .parquet(band_store)
-            )
+        # (an all-dropped batch, every row beyond the horizon, retains
+        # nothing and so writes no band store)
+        _write_store(retained, pre + "retained", band_store, "kb")
 
         # candidates: only buckets this batch touched, only retained members
         new_keys = new_bands.select("band", "key").distinct()
         members = retained.join(
             F.broadcast(new_keys), ["band", "key"], "left_semi"
         ).select("url", "warc_ts", "band", "key")
-        pairs, _stats = lsh_op.bucket_pairs(members, cfg)
+        pairs = lsh_op.bucket_pairs(members, cfg)
         new_urls = sigs.select("url")
         pairs = write_barrier(  # barrier: url semi-join + verify_pairs
             pairs.join(
@@ -426,7 +444,7 @@ def run_incremental_dedup(
                 )
             )
             .distinct(),
-            os.path.join(root, f"b{batch_id}_pairs"),
+            pre + "pairs",
         )
 
         # verification: the stored signatures of the pairs' urls, read
@@ -460,30 +478,19 @@ def run_incremental_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        verified = write_barrier(  # barrier: consumed by head(1) + write
-            verify_op.verify_pairs(pairs, all_sigs, cfg),
-            os.path.join(root, f"b{batch_id}_verified"),
+        verified = write_barrier(  # barrier: footers decide the write
+            verify_op.verify_pairs(pairs, all_sigs, cfg), pre + "verified"
         )
         # Durable outputs are partitioned by batch id and written with
         # dynamic partition overwrite: an at-least-once replay of batch
         # N rewrites exactly the bid=N partitions instead of appending
         # the same rows twice (blind append double-counted pairs and
         # duplicated signature rows on retry).
-        if verified.head(1):
-            (
-                verified.withColumn("bid", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bid")
-                .parquet(pair_store)
-            )
-        (
-            sigs.withColumn("bid", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bid")
-            .parquet(sig_store)
-        )
+        bid = F.lit(batch_id)
+        for df, name, store in (
+            (verified, "verified", pair_store), (sigs, "sigs", sig_store)
+        ):
+            _write_store(df.withColumn("bid", bid), pre + name, store, "bid")
 
     q = (
         src.writeStream.foreachBatch(_process)

@@ -178,8 +178,7 @@ def test_null_vec_id_equals_expr(spark):
     job): brute_force_topk, ivf_topk and ivf_assign equal their
     expression references, with and without exclude_self.  The NULL
     row's vector ties row 0's, so the neighbor_id ASC (NULLs first)
-    tie-break decides the k=1 answers; md5(NULL) sorts first, so the
-    NULL row is also a centroid."""
+    tie-break decides the k=1 answers."""
     rows = [
         (0, [1.0, 0.0, 0.0]),
         (1, [0.6, 0.8, 0.0]),
@@ -206,6 +205,27 @@ def test_null_vec_id_equals_expr(spark):
             )
             want = _pdf(_expr_ivf_topk(emb, emb, 3, 2, k, exclude_self))
             pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_ivf_full_probe_with_null_id_equals_brute_force(spark):
+    """A NULL-id corpus row never becomes a centroid (md5(NULL) sorts
+    last, as in the DuckDB quantizer), so with every cell probed
+    ivf_topk finds exactly the brute-force neighbours.  A NULL
+    centroid_id used to strand its whole cell (the `cell` equi-join
+    never matches NULL), here losing neighbour 0."""
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (None, [1.0, 0.0, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assert ann.ivf_centroids(emb, 2).toPandas().centroid_id.notna().all()
+    queries = emb.filter(F.col("vec_id") == 1)
+    got = _pdf(ann.ivf_topk(emb, queries, n_cells=2, nprobe=2, k=3))
+    want = _pdf(ann.brute_force_topk(emb, queries, k=3))
+    assert list(want.neighbor_id) == [0, 3]
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_pairwise_msim_np_equals_expr(spark):

@@ -81,7 +81,7 @@ def test_srp_near_dup_pairs_match_brute_force(spark):
     recall caveat)."""
     from destor_spark.config import DedupConfig
     from destor_spark.operators.ann import near_dup_band_relation
-    from destor_spark.operators.lsh import bucket_pairs
+    from destor_spark.operators.lsh import bucket_stats_only
 
     df, brute = _planted_corpus(spark)
     assert brute, "fixture must plant near-dup pairs"
@@ -90,7 +90,7 @@ def test_srp_near_dup_pairs_match_brute_force(spark):
         for r in srp_near_dup_pairs(df, dim=64).collect()
     }
     assert got == brute
-    _, stats = bucket_pairs(
+    stats = bucket_stats_only(
         near_dup_band_relation(df, dim=64), DedupConfig(bucket_cap=64)
     )
     assert stats.filter(F.col("strategy") == "star").count() == 0

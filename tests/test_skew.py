@@ -75,9 +75,9 @@ def test_star_strategy_engages_and_matches_oracle(spark, hot_corpus):
 def test_star_hot_flag_and_stats_only_parity(spark, hot_corpus):
     """bucket_hard_cap: buckets beyond it are flagged strategy=
     'star_hot' in bucket_stats while the PAIR rule stays identical to
-    star; and bucket_stats_only (the count-only aggregate used by the
-    checkpointed lineage stage) returns row-identical stats to the
-    collect_list path."""
+    star; and bucket_stats_only (the one producer of bucket_stats,
+    a count-only aggregate) returns exactly the bucket inventory of
+    the membership relation, computed here in pandas."""
     from destor_spark.operators import lsh as lsh_op
     from destor_spark.plans.pipeline import signatures_stage
 
@@ -87,29 +87,32 @@ def test_star_hot_flag_and_stats_only_parity(spark, hot_corpus):
     ex = lsh_op.explode_bands(sigs).localCheckpoint()
 
     hot = DedupConfig(bucket_hard_cap=100)
-    pairs_b, _ = lsh_op.bucket_pairs(ex, cfg)
-    pairs_h, stats_h = lsh_op.bucket_pairs(ex, hot)
-    sh = stats_h.toPandas()
+    pairs_b = lsh_op.bucket_pairs(ex, cfg)
+    pairs_h = lsh_op.bucket_pairs(ex, hot)
+    so_df = lsh_op.bucket_stats_only(ex, hot)
+    sh = so_df.toPandas()
     assert (sh["strategy"] == "star_hot").any(), "flag never engaged"
     assert set(sh["strategy"]) <= {"all_pairs", "star", "star_hot"}
     # pair semantics unchanged by the flag
     assert pairs_b.exceptAll(pairs_h).count() == 0
     assert pairs_h.exceptAll(pairs_b).count() == 0
-    # stats_only row-identical to the tuple stats (same cfg) —
-    # and SCHEMA-identical: the two producers of this relation
-    # (bucket_pairs F.size, stats_only count) must agree on types
-    # too, or checkpointed stats tables from different paths conflict
-    # on restore/union
-    so_df = lsh_op.bucket_stats_only(ex, hot)
-    assert [
-        (f.name, f.dataType.simpleString()) for f in so_df.schema
-    ] == [
-        (f.name, f.dataType.simpleString()) for f in stats_h.schema
+    # stats_only row-identical to the pandas inventory of ex, with
+    # size as bigint (checkpointed stats tables are restored and
+    # compared across runs)
+    assert [(f.name, f.dataType.simpleString()) for f in so_df.schema] == [
+        ("band", "int"), ("key", "bigint"), ("size", "bigint"),
+        ("strategy", "string"),
     ]
-    so = so_df.toPandas()
     key = ["band", "key"]
+    inv = ex.toPandas().groupby(key).size().rename("size").reset_index()
+    inv = inv[inv["size"] >= 2]
+    inv["strategy"] = np.where(
+        inv["size"] <= hot.bucket_cap,
+        "all_pairs",
+        np.where(inv["size"] > hot.bucket_hard_cap, "star_hot", "star"),
+    )
     a = sh.sort_values(key).reset_index(drop=True)
-    b = so.sort_values(key).reset_index(drop=True)
+    b = inv.sort_values(key).reset_index(drop=True)
     assert len(a) == len(b)
     assert (a["size"].to_numpy() == b["size"].to_numpy()).all()
     assert (a["strategy"].to_numpy() == b["strategy"].to_numpy()).all()

@@ -213,16 +213,74 @@ def test_store_scan_is_pruned(spark, cfg, tmp_path):
     # ... (b) it rewrote every partition it does touch ...
     for d in touched:
         assert d in after and after[d] != before.get(d), d
-    # ... and (c) kb is a PARTITION filter in the physical plan of a
-    # kb-restricted store read (directory-level pruning, no file of an
-    # untouched kb is even opened).
-    pruned = spark.read.parquet(band_store).filter(
-        F.col("kb").isin([int(d[3:]) for d in touched])
+    # ... and (c) the stream's own store read (read_band_store, a
+    # broadcast left-semi join on the batch's kb values) carries kb as
+    # a DYNAMIC partition filter in its physical plan: directory-level
+    # pruning, no file of an untouched kb is even opened.
+    from destor_spark.streaming.dedup_stream import read_band_store
+
+    new_bands = lsh_op.explode_bands(sigs).select(
+        "url",
+        "warc_ts",
+        F.lit(1).alias("bid"),
+        "band",
+        "key",
+        F.pmod("key", F.lit(64)).alias("kb"),
     )
+    pruned = read_band_store(spark, band_store, new_bands)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "kb" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0], plan
+    part_filters = plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert "dynamicpruningexpression(kb#" in part_filters, plan
+
+
+def test_zero_row_file_writes_no_store(spark, cfg, tmp_path):
+    """A trigger over a zero-row file is an empty micro-batch: it
+    creates no store dir and no watermark record (only the stream's
+    checkpoint), and the next file's trigger then yields the same
+    stores as a run that never saw the empty file (bid aside: the
+    empty trigger used batch id 0)."""
+    import json
+
+    pages, _ = make_corpus(seed=3, n_docs=20)
+    runs = {}
+    for name, files in (
+        ("with_empty", [pages.iloc[:0], pages]),
+        ("plain", [pages]),
+    ):
+        in_dir = str(tmp_path / f"in_{name}")
+        state = str(tmp_path / f"state_{name}")
+        os.makedirs(in_dir)
+        for i, df in enumerate(files):
+            df.to_parquet(os.path.join(in_dir, f"f{i}.parquet"), index=False)
+            run_incremental_dedup(
+                spark, in_dir, state, cfg, max_event_age="3650 days"
+            )
+            if len(df) == 0:
+                assert os.listdir(state) == ["_checkpoint"], os.listdir(state)
+        runs[name] = state
+
+    def stores(state):
+        out = {}
+        for store, key in (
+            ("band_store", ["url", "band", "key"]),
+            ("signatures", ["url"]),
+            ("pairs", ["url_a", "url_b"]),
+        ):
+            df = pd.read_parquet(os.path.join(state, store))
+            bids = set(df.pop("bid").astype(int))
+            out[store] = (bids, df.sort_values(key).reset_index(drop=True))
+        with open(os.path.join(state, "watermark.json")) as f:
+            out["watermark"] = json.load(f)["watermark"]
+        return out
+
+    got, want = stores(runs["with_empty"]), stores(runs["plain"])
+    assert got["watermark"] == want["watermark"]
+    for store in ("band_store", "signatures", "pairs"):
+        assert got[store][0] == {1} and want[store][0] == {0}, store
+        assert len(want[store][1]), store
+        pd.testing.assert_frame_equal(
+            got[store][1], want[store][1], check_dtype=False
+        )
 
 
 def test_stream_exact_dedup_watermark(spark, tmp_path):

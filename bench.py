@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -161,19 +160,15 @@ def bench_simhash_passes(spark, pages_path: str) -> dict[str, float]:
     number the combo path exists to improve."""
     from destor_spark.config import DedupConfig
     from destor_spark.operators.simhash import simhash_pairs
-    from destor_spark.plans.checkpoint import write_barrier
-    from destor_spark.plans.pipeline import _mat_root, signatures_stage
+    from destor_spark.plans.checkpoint import Barriers
+    from destor_spark.plans.pipeline import signatures_stage
 
     pages = spark.read.parquet(pages_path)
-    # a per-call barrier dir, removed once timed: the default bench calls
+    # per-call barriers, removed once timed: the default bench calls
     # this once per repeat, and each signatures barrier would otherwise
     # stay on disk until interpreter exit
-    root = _mat_root(spark)
-    try:
-        sigs = write_barrier(
-            signatures_stage(pages, DedupConfig()),
-            os.path.join(root, "bench_simhash_sigs"),
-        )
+    with Barriers(spark) as b:
+        sigs = b(signatures_stage(pages, DedupConfig()), "bench_simhash_sigs")
         out = {}
         for label, cfg in (
             ("simhash_pass_pigeonhole", DedupConfig()),
@@ -182,8 +177,6 @@ def bench_simhash_passes(spark, pages_path: str) -> dict[str, float]:
             t0 = time.time()
             simhash_pairs(sigs, cfg).count()
             out[label] = round(time.time() - t0, 3)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 

@@ -86,46 +86,32 @@ def auto_index_config(cfg: DedupConfig, n_live: int) -> DedupConfig:
     return dataclasses.replace(cfg, simhash_combo_blocks=combo)
 
 
-def combo_sets(cfg: DedupConfig) -> list[tuple[int, ...]]:
-    """Deterministic (blocks - radius)-subsets of block indices."""
-    return list(
-        combinations(
-            range(cfg.simhash_combo_blocks),
-            cfg.simhash_combo_blocks - cfg.simhash_radius,
-        )
-    )
+def index_tables(cfg: DedupConfig) -> tuple[int, list[tuple[int, ...]]]:
+    """(block width, the block-index subset behind each bucket table).
+
+    The pigeonhole is the combination index whose tables are single
+    blocks: simhash_blocks tables of one block each.  The combination
+    index (simhash_combo_blocks = c) has one table per deterministic
+    (c - radius)-subset of its c blocks."""
+    c = cfg.simhash_combo_blocks
+    if not c:
+        n = cfg.simhash_blocks
+        return cfg.simhash_bits // n, [(i,) for i in range(n)]
+    width = cfg.simhash_bits // c
+    return width, list(combinations(range(c), c - cfg.simhash_radius))
 
 
 def explode_blocks(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, warc_ts, simhash) -> (url, warc_ts, band, key) membership.
 
-    Classic pigeonhole (simhash_combo_blocks == 0): one bucket per
-    block, key = block value.  Combination index: one bucket per
-    block-subset, key = the subset's block values concatenated
-    LSB-first (width*(blocks-radius) bits in one long).
+    One bucket per index table (index_tables): band = 10_000 + table
+    index, key = the table's block values concatenated LSB-first
+    (width bits each, one long), a single block as-is.  The offset
+    keeps band ids apart from MinHash's should the two ever share a
+    bucket_pairs call.
     """
     live = sigs.filter(F.col("n_shingles") > 0)  # empty docs: no sketch
-
-    if not cfg.simhash_combo_blocks:
-        width = cfg.simhash_bits // cfg.simhash_blocks
-        mask = (1 << width) - 1
-        blocks = F.array(
-            *[
-                F.shiftrightunsigned(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias(f"b{i}")
-                for i in range(cfg.simhash_blocks)
-            ]
-        )
-        return (
-            live.select(
-                "url", "warc_ts", F.posexplode(blocks).alias("band", "key")
-            )
-            # offset band ids so SimHash buckets never merge with MinHash
-            .withColumn("band", F.col("band") + F.lit(10_000))
-        )
-
-    width = cfg.simhash_bits // cfg.simhash_combo_blocks
+    width, tables = index_tables(cfg)
     mask = (1 << width) - 1
 
     def _block(i: int):
@@ -133,20 +119,16 @@ def explode_blocks(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
             F.lit(mask)
         )
 
-    def _combo_key(combo: tuple[int, ...]):
-        key = F.lit(0).cast("bigint")
-        for pos, i in enumerate(combo):
-            key = key.bitwiseOR(
-                F.shiftleft(_block(i), pos * width).cast("bigint")
-            )
+    def _key(table: tuple[int, ...]):
+        key = _block(table[0])
+        for pos, i in enumerate(table[1:], 1):
+            key = key.bitwiseOR(F.shiftleft(_block(i), pos * width))
         return key
 
-    keys = F.array(*[_combo_key(c) for c in combo_sets(cfg)])
-    return (
-        live.select("url", "warc_ts", F.posexplode(keys).alias("band", "key"))
-        # 10_100+: distinct namespace vs pigeonhole (10_000+) and MinHash
-        .withColumn("band", F.col("band") + F.lit(10_100))
-    )
+    keys = F.array(*[_key(t) for t in tables])
+    return live.select(
+        "url", "warc_ts", F.posexplode(keys).alias("band", "key")
+    ).withColumn("band", F.col("band") + F.lit(10_000))
 
 
 def simhash_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -199,43 +199,27 @@ def run_oracle(
         # star-pairing the two schemes emit different candidate sets,
         # so the parity gate would silently compare different
         # algorithms exactly in the regime it exists to check
-        from destor_spark.operators.simhash import auto_index_config
+        from destor_spark.operators.simhash import (
+            auto_index_config,
+            index_tables,
+        )
 
         cfg = auto_index_config(
             cfg, sum(1 for n in nshingles if n > 0)
         )
+        # the index tables of simhash.explode_blocks, bit for bit
+        width, tables = index_tables(cfg)
+        mask = (1 << width) - 1
         sbuckets: dict[tuple[int, int], list[str]] = defaultdict(list)
-        if not cfg.simhash_combo_blocks:
-            width = cfg.simhash_bits // cfg.simhash_blocks
-            mask = (1 << width) - 1
-            for u, sh, n in zip(urls, simhashes, nshingles):
-                if n == 0:
-                    continue
-                us = sh & 0xFFFFFFFFFFFFFFFF
-                for i in range(cfg.simhash_blocks):
-                    sbuckets[
-                        (10_000 + i, (us >> (i * width)) & mask)
-                    ].append(u)
-        else:
-            # combination index — mirror of simhash.explode_blocks
-            from destor_spark.operators.simhash import combo_sets
-
-            width = cfg.simhash_bits // cfg.simhash_combo_blocks
-            mask = (1 << width) - 1
-            combos = combo_sets(cfg)
-            for u, sh, n in zip(urls, simhashes, nshingles):
-                if n == 0:
-                    continue
-                us = sh & 0xFFFFFFFFFFFFFFFF
-                blocks = [
-                    (us >> (i * width)) & mask
-                    for i in range(cfg.simhash_combo_blocks)
-                ]
-                for ci, combo in enumerate(combos):
-                    key = 0
-                    for pos, i in enumerate(combo):
-                        key |= blocks[i] << (pos * width)
-                    sbuckets[(10_100 + ci, key)].append(u)
+        for u, sh, n in zip(urls, simhashes, nshingles):
+            if n == 0:
+                continue
+            us = sh & 0xFFFFFFFFFFFFFFFF
+            for ti, table in enumerate(tables):
+                key = 0
+                for pos, i in enumerate(table):
+                    key |= ((us >> (i * width)) & mask) << (pos * width)
+                sbuckets[(10_000 + ti, key)].append(u)
         scand = _bucket_pairs(sbuckets, order, cfg.bucket_cap)
         sh_by_url = dict(zip(urls, simhashes))
         for ua, ub in scand:

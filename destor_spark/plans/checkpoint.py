@@ -19,13 +19,25 @@ per ready stage — destor's backup phases run concurrently the same way
 (do_backup.c:32-41), so independent stages share the cluster's slots
 instead of each leaving most of them idle.  Concurrency is the graph's
 width; there is no knob.
+
+write_barrier is the one barrier primitive, with two lifetimes:
+
+  * durable — StageRunner: a stage's barrier plus its manifest under
+    the caller's checkpoint dir, kept for resume;
+  * ephemeral — Barriers: one fresh dir under the session base
+    (SPARK_GRAFT_MAT_DIR if set), removed by close() or on leaving a
+    `with` block.  run_pipeline, the stream micro-batch, the query
+    surface and bench.py write every intermediate barrier through one.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import queue
+import shutil
+import tempfile
 import threading
 import time
 from typing import Callable, NamedTuple
@@ -77,6 +89,50 @@ def _footer_stats(data_dir: str) -> tuple[dict[str, int], int, int]:
                 pid = str(int(name.split("-")[1]))
                 part_rows[pid] = part_rows.get(pid, 0) + rows
     return part_rows, data_size, n_files
+
+
+_SESSION_ROOTS: dict[str, str] = {}
+
+
+def _session_base(spark: SparkSession) -> str:
+    """One dir per SparkSession for its ephemeral barriers, removed at
+    interpreter exit."""
+    app_id = spark.sparkContext.applicationId
+    base = _SESSION_ROOTS.get(app_id)
+    if base is None:
+        base = tempfile.mkdtemp(
+            prefix="destor_mat_", dir=os.environ.get("SPARK_GRAFT_MAT_DIR")
+        )
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        _SESSION_ROOTS[app_id] = base
+    return base
+
+
+class Barriers:
+    """Ephemeral barriers in one fresh dir under the session base.
+
+    b(df, name) writes a barrier (write_barrier); b.rows(name) is its
+    row count from the parquet footers, with no Spark job; close(), or
+    leaving a `with` block, removes the dir.  Close only once every
+    DataFrame b returned is fully consumed: they read from its files."""
+
+    def __init__(self, spark: SparkSession):
+        self.root = tempfile.mkdtemp(dir=_session_base(spark))
+
+    def __call__(self, df: DataFrame, name: str) -> DataFrame:
+        return write_barrier(df, os.path.join(self.root, name))
+
+    def rows(self, name: str) -> int:
+        return sum(_footer_stats(os.path.join(self.root, name))[0].values())
+
+    def close(self) -> None:
+        shutil.rmtree(self.root, ignore_errors=True)
+
+    def __enter__(self) -> Barriers:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 class Stage(NamedTuple):
@@ -137,13 +193,6 @@ class StageRunner:
             # pre-fingerprint layout) — recompute rather than resume
             return False
         return True
-
-    def run(
-        self, stage: str, fn, required_cols: tuple[str, ...] = ()
-    ) -> DataFrame:
-        """fn() -> DataFrame; materialized once, loaded on resume.  A
-        one-stage graph."""
-        return self.run_graph([Stage(stage, (), fn, required_cols)])[stage]
 
     def run_graph(self, stages: list[Stage]) -> dict[str, DataFrame]:
         """Run a stage graph; returns every stage's committed DataFrame.

@@ -29,13 +29,7 @@ Two runners execute that one list:
 
 from __future__ import annotations
 
-import atexit
 import functools
-import itertools
-import os
-import shutil
-import tempfile
-import threading
 from dataclasses import dataclass, field, fields
 from typing import Callable
 
@@ -51,7 +45,7 @@ from destor_spark.operators import minhash as minhash_op
 from destor_spark.operators import simhash as simhash_op
 from destor_spark.operators import substring as substring_op
 from destor_spark.operators import verify as verify_op
-from destor_spark.plans.checkpoint import Stage, StageRunner, write_barrier
+from destor_spark.plans.checkpoint import Barriers, Stage, StageRunner
 
 
 @dataclass
@@ -62,113 +56,18 @@ class PipelineResult:
     verified_pairs: DataFrame
     bucket_stats: DataFrame
     assignments: DataFrame
-    mat_root: str | None = field(default=None, repr=False)
+    barriers: Barriers = field(repr=False)
+
+    @property
+    def mat_root(self) -> str:
+        return self.barriers.root
 
     def cleanup(self) -> None:
         """Delete this run's stage-barrier parquet dirs.  Call once every
         member DataFrame is fully consumed — they read from these files.
         (Long-lived processes invoking run_pipeline repeatedly would
         otherwise accumulate intermediates until interpreter exit.)"""
-        if self.mat_root:
-            shutil.rmtree(self.mat_root, ignore_errors=True)
-
-
-_SESSION_ROOTS: dict[str, str] = {}
-_RUN_IDS = itertools.count()
-
-
-def _session_base(spark: SparkSession) -> str:
-    app_id = spark.sparkContext.applicationId
-    base = _SESSION_ROOTS.get(app_id)
-    if base is None:
-        base = tempfile.mkdtemp(
-            prefix="destor_mat_", dir=os.environ.get("SPARK_GRAFT_MAT_DIR")
-        )
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        _SESSION_ROOTS[app_id] = base
-    return base
-
-
-def _mat_root(spark: SparkSession) -> str:
-    """Per-run barrier dir under ONE base dir per SparkSession (removed
-    at interpreter exit; individual runs via PipelineResult.cleanup())."""
-    root = os.path.join(_session_base(spark), f"run{next(_RUN_IDS)}")
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-def _query_mat_root(spark: SparkSession) -> str:
-    """Stable barrier dir for the driver-query surface: one fixed dir
-    per session.  Unlike _mat_root's run{N} counter, repeated
-    invocations of the same query REUSE the same per-tag slot (via
-    _materialize_gen's generation counter), so a long-lived driver
-    calling q_ngram_jaccard_pairs in a loop holds one barrier's worth
-    of disk per tag instead of accumulating run dirs until exit."""
-    root = os.path.join(_session_base(spark), "queries")
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-_TAG_GENS: dict[tuple[str, str], int] = {}
-_TAG_INFLIGHT: set[tuple[str, str]] = set()
-_TAG_LOCK = threading.Lock()
-
-
-def _materialize_gen(df: DataFrame, tag: str, root: str) -> DataFrame:
-    """Generation-versioned barrier for the reusable query root.
-
-    Writing mode=overwrite IN PLACE would break sequential
-    re-invocation: a DataFrame returned by an EARLIER invocation of the
-    same query reads deleted files after a re-invocation.  Here every
-    invocation writes a fresh `<tag>_g<N>` dir (the counter is
-    session-global and lock-guarded) and the PREVIOUS generation is
-    deleted only after the new write commits, so disk held per tag
-    stays bounded at one generation.
-
-    Contract — SEQUENTIAL single consumer per tag: a barrier DataFrame
-    from invocation N-1 becomes unreadable once invocation N commits,
-    so fully consume (or re-run) a query's result before re-invoking
-    it.  CONCURRENT invocations of the same query in one session are
-    NOT supported: invocation N's post-commit cleanup removes gen N-1
-    while a still-running invocation N-1 may be writing or reading it.
-    Overlap is detected under the lock and logged rather than silently
-    corrupting.
-    """
-    app_id = df.sparkSession.sparkContext.applicationId
-    key = (app_id, tag)
-    with _TAG_LOCK:
-        gen = _TAG_GENS.get(key, 0) + 1
-        _TAG_GENS[key] = gen
-        if key in _TAG_INFLIGHT:
-            import warnings
-
-            warnings.warn(
-                f"concurrent invocations of query barrier '{tag}' in one "
-                "session are unsupported (sequential single-consumer "
-                "contract); the overlapping run may fail on a removed "
-                f"generation dir ({tag}_g{gen - 1})",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        _TAG_INFLIGHT.add(key)
-    try:
-        out = write_barrier(df, os.path.join(root, f"{tag}_g{gen}"))
-        # sweep EVERY older generation, not just gen-1: a failed write
-        # at gen N leaves g{N-1} behind (the retry then runs as N+1 and
-        # its gen-1 cleanup would only remove the failed g{N}), so a
-        # long-lived driver with transient write failures would
-        # accumulate one orphaned barrier dir per failure per tag
-        for name in os.listdir(root):
-            if name.startswith(f"{tag}_g") and name != f"{tag}_g{gen}":
-                tail = name[len(tag) + 2:]
-                if tail.isdigit() and int(tail) < gen:
-                    shutil.rmtree(
-                        os.path.join(root, name), ignore_errors=True
-                    )
-        return out
-    finally:
-        with _TAG_LOCK:
-            _TAG_INFLIGHT.discard(key)
+        self.barriers.close()
 
 
 def signatures_stage(
@@ -363,14 +262,18 @@ def run_pipeline(
     use_simhash: bool = True,
     use_substring: bool = False,
 ) -> PipelineResult:
-    """dedup_stages in memory, barriers in a per-run dir (mat_root)."""
-    root = _mat_root(pages.sparkSession)
-    out = run_stages(
-        dedup_stages(pages, cfg, use_simhash, use_substring),
-        lambda df, name: write_barrier(df, os.path.join(root, name)),
-    )
-    keep = {f.name for f in fields(PipelineResult)} - {"mat_root"}
-    return PipelineResult(mat_root=root, **{k: out[k] for k in keep})
+    """dedup_stages in memory, barriers in a per-run Barriers dir
+    (mat_root), removed at once if a stage fails."""
+    b = Barriers(pages.sparkSession)
+    try:
+        out = run_stages(
+            dedup_stages(pages, cfg, use_simhash, use_substring), b
+        )
+    except BaseException:
+        b.close()
+        raise
+    keep = {f.name for f in fields(PipelineResult)} - {"barriers"}
+    return PipelineResult(barriers=b, **{k: out[k] for k in keep})
 
 
 def config_fingerprint(

@@ -22,6 +22,8 @@ is one _REGISTRY row (Spark query function, oracle SQL).
 from __future__ import annotations
 
 import os
+import threading
+import warnings
 
 from collections.abc import Callable
 
@@ -29,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from destor_spark.operators.textstats import STOPWORDS, tokens
+from destor_spark.plans.checkpoint import Barriers
 
 K = 5  # words per shingle (cfg.shingle_size analogue for the SQL-portable pass)
 NUM_MH = 16  # portable MinHash permutations (md5-based, SQL-expressible)
@@ -53,23 +56,55 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+_SLOTS: dict[tuple[str, str], Barriers] = {}
+_INFLIGHT: set[tuple[str, str]] = set()
+_SLOT_LOCK = threading.Lock()
+
+
 def _barrier(df: DataFrame, tag: str) -> DataFrame:
     """Parquet stage barrier for reused array-heavy frames.
 
     persist() of array<string>/array<bigint> columns goes through the
     per-element generic columnar-cache encoders on build AND every read;
     the parquet round-trip is ~2x faster both ways (measured, see
-    plans/checkpoint.write_barrier).  Uses the session's stable query root
-    with a per-tag GENERATION counter (plans/pipeline._materialize_gen):
-    repeated driver invocations of one query hold a single barrier's
-    worth of disk per tag, concurrent invocations get distinct dirs,
-    and a prior invocation's barrier stays readable until the new one
-    commits.  Fully consume a query's result before re-invoking it —
-    generation N-1's files are deleted when generation N lands.
-    """
-    from destor_spark.plans.pipeline import _materialize_gen, _query_mat_root
+    plans/checkpoint.write_barrier).
 
-    return _materialize_gen(df, tag, _query_mat_root(df.sparkSession))
+    One live barrier per (session, tag): each invocation writes into a
+    fresh Barriers, which replaces the tag's slot only once its write
+    has committed; the previous one is then closed.  So repeated
+    driver invocations hold one barrier's worth of disk per tag, the
+    previous barrier stays readable until the new one commits, and a
+    failed write removes its own dir and leaves the slot untouched.
+
+    Contract — SEQUENTIAL single consumer per tag: fully consume (or
+    re-run) a query's result before re-invoking it, since invocation
+    N's commit removes N-1's files.  Concurrent invocations of one tag
+    in one session are unsupported; an overlap is detected under the
+    lock and warned about rather than silently corrupting.
+    """
+    key = (df.sparkSession.sparkContext.applicationId, tag)
+    b: Barriers | None = Barriers(df.sparkSession)
+    with _SLOT_LOCK:
+        if key in _INFLIGHT:
+            warnings.warn(
+                f"concurrent invocations of query barrier '{tag}' in one "
+                "session are unsupported (sequential single-consumer "
+                "contract); the overlapping run may read a removed "
+                "barrier",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        _INFLIGHT.add(key)
+    try:
+        out = b(df, tag)
+        with _SLOT_LOCK:  # committed: b becomes the slot's old value
+            b, _SLOTS[key] = _SLOTS.get(key), b
+    finally:
+        with _SLOT_LOCK:
+            _INFLIGHT.discard(key)
+        if b is not None:  # the replaced barrier, or the failed one
+            b.close()
+    return out
 
 
 def _capped(e0: DataFrame, key: str, tag: str) -> DataFrame:

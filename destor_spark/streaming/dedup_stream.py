@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pandas as pd
 
@@ -36,8 +35,8 @@ from destor_spark.config import DedupConfig
 from destor_spark.operators import exact as exact_op
 from destor_spark.operators import lsh as lsh_op
 from destor_spark.operators import verify as verify_op
-from destor_spark.plans.checkpoint import _footer_stats, write_barrier
-from destor_spark.plans.pipeline import _mat_root, signatures_stage
+from destor_spark.plans.checkpoint import Barriers
+from destor_spark.plans.pipeline import signatures_stage
 
 WEB_PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -124,16 +123,15 @@ def read_band_store(
     return store.join(kbs, "kb", "left_semi")
 
 
-def _write_store(
-    df: DataFrame, barrier_dir: str, store: str, part: str
-) -> None:
+def _write_store(df: DataFrame, rows: int, store: str, part: str) -> None:
     """Dynamic-partition-overwrite df into store, partitioned on part —
-    unless the barrier it comes from holds no rows (its parquet footers
-    say so, no Spark job).  A store dir exists only once it holds
-    rows: whether there is state to read is os.path.exists, and an
-    empty write would create the dir while rewriting no partition."""
+    unless the barrier it comes from holds no rows (rows: its count
+    from the parquet footers, Barriers.rows, no Spark job).  A store
+    dir exists only once it holds rows: whether there is state to read
+    is os.path.exists, and an empty write would create the dir while
+    rewriting no partition."""
     w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    if _footer_stats(barrier_dir)[0]:
+    if rows:
         w.partitionBy(part).parquet(store)
 
 
@@ -245,21 +243,15 @@ def run_incremental_dedup(
     band_cols = ["url", "warc_ts", "bid", "band", "key"]
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        # per-batch barrier dir, removed before the batch returns: a
-        # long-lived driver must not accumulate b{id}_* intermediates
-        # (the band/sig/pair STORES are the durable state, not these)
-        root = _mat_root(spark)
-        try:
-            _process_inner(batch, batch_id, root)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+        # per-batch barriers, removed before the batch returns: a
+        # long-lived driver must not accumulate intermediates (the
+        # band/sig/pair STORES are the durable state, not these)
+        with Barriers(spark) as b:
+            _process_inner(batch, batch_id, b)
 
-    def _process_inner(
-        batch: DataFrame, batch_id: int, root: str
-    ) -> None:
-        pre = os.path.join(root, f"b{batch_id}_")  # barrier dir prefix
-        sigs = write_barrier(signatures_stage(batch, cfg), pre + "sigs")
-        if not _footer_stats(pre + "sigs")[0]:
+    def _process_inner(batch: DataFrame, batch_id: int, b: Barriers) -> None:
+        sigs = b(signatures_stage(batch, cfg), "sigs")
+        if not b.rows("sigs"):
             # foreachBatch can deliver an empty micro-batch: it writes
             # no store and moves no watermark
             return
@@ -395,11 +387,11 @@ def run_incremental_dedup(
         w = Window.partitionBy("band", "key").orderBy(
             F.desc("bid"), F.desc("warc_ts"), F.desc("url")
         )
-        retained = write_barrier(  # barrier: store is read AND rewritten
+        retained = b(  # barrier: store is read AND rewritten
             merged.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= value_len)
             .drop("rn"),
-            pre + "retained",
+            "retained",
         )
         # STATE EVICTION is deliberately LAZY: batch N's rewrite keeps
         # every member its join could see (the lag-filtered visible set
@@ -419,7 +411,7 @@ def run_incremental_dedup(
         # partition, on top of the FIFO k.
         # (an all-dropped batch, every row beyond the horizon, retains
         # nothing and so writes no band store)
-        _write_store(retained, pre + "retained", band_store, "kb")
+        _write_store(retained, b.rows("retained"), band_store, "kb")
 
         # candidates: only buckets this batch touched, only retained members
         new_keys = new_bands.select("band", "key").distinct()
@@ -428,7 +420,7 @@ def run_incremental_dedup(
         ).select("url", "warc_ts", "band", "key")
         pairs = lsh_op.bucket_pairs(members, cfg)
         new_urls = sigs.select("url")
-        pairs = write_barrier(  # barrier: url semi-join + verify_pairs
+        pairs = b(  # barrier: url semi-join + verify_pairs
             pairs.join(
                 F.broadcast(new_urls.withColumnRenamed("url", "url_a")),
                 "url_a",
@@ -444,7 +436,7 @@ def run_incremental_dedup(
                 )
             )
             .distinct(),
-            pre + "pairs",
+            "pairs",
         )
 
         # verification: the stored signatures of the pairs' urls, read
@@ -478,8 +470,8 @@ def run_incremental_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        verified = write_barrier(  # barrier: footers decide the write
-            verify_op.verify_pairs(pairs, all_sigs, cfg), pre + "verified"
+        verified = b(  # barrier: footers decide the write
+            verify_op.verify_pairs(pairs, all_sigs, cfg), "verified"
         )
         # Durable outputs are partitioned by batch id and written with
         # dynamic partition overwrite: an at-least-once replay of batch
@@ -490,7 +482,7 @@ def run_incremental_dedup(
         for df, name, store in (
             (verified, "verified", pair_store), (sigs, "sigs", sig_store)
         ):
-            _write_store(df.withColumn("bid", bid), pre + name, store, "bid")
+            _write_store(df.withColumn("bid", bid), b.rows(name), store, "bid")
 
     q = (
         src.writeStream.foreachBatch(_process)

@@ -5,7 +5,13 @@ checkable."""
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
+
+from destor_spark.plans.checkpoint import _session_base
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,53 +111,93 @@ def test_single_text_scan_in_pipeline(spark, cfg, tmp_path):
     assert "html" not in plan
 
 
-def test_query_barriers_do_not_accumulate_run_dirs(spark):
-    """Repeated driver-query invocations must hold ONE barrier dir per
-    tag (generation-versioned: the new gen replaces the old after it
-    commits), not allocate a fresh run{N} each call — a long-lived
-    driver would otherwise leak intermediates until exit."""
-    import os
+def _barrier_dirs(spark) -> Counter:
+    """Barrier name -> how many live Barriers dirs under the session
+    base hold a barrier of that name."""
+    base = _session_base(spark)
+    return Counter(
+        name
+        for d in os.listdir(base)
+        for name in os.listdir(os.path.join(base, d))
+    )
 
-    from destor_spark.plans.pipeline import _session_base
+
+def _tree(root: str) -> set[str]:
+    """Every dir under root, relative to it."""
+    return {os.path.relpath(dp, root) for dp, _, _ in os.walk(root)}
+
+
+def test_query_barriers_do_not_accumulate_run_dirs(spark):
+    """Repeated driver-query invocations must hold ONE live barrier dir
+    per tag (each new Barriers replaces the tag's previous one after it
+    commits), not a fresh dir per call — a long-lived driver would
+    otherwise leak intermediates until exit."""
+    from destor_spark import queries
     from destor_spark.queries import q_ngram_jaccard_pairs
 
     q_ngram_jaccard_pairs(spark, SF).count()
-    base = _session_base(spark)
-    qroot = os.path.join(base, "queries")
-    before = sorted(os.listdir(qroot))
+    first = dict(queries._SLOTS)
+    n_dirs = len(os.listdir(_session_base(spark)))
     q_ngram_jaccard_pairs(spark, SF).count()
     q_ngram_jaccard_pairs(spark, SF).count()
-    after = sorted(os.listdir(qroot))
-    # same COUNT of dirs (one live generation per tag); generation
-    # suffixes advance
-    assert len(after) == len(before)
-    assert {d.rsplit("_g", 1)[0] for d in after} == {
-        d.rsplit("_g", 1)[0] for d in before
+    # the query's slots moved to new dirs, and the dir count did not grow
+    assert any(queries._SLOTS[k] is not b for k, b in first.items())
+    assert len(os.listdir(_session_base(spark))) == n_dirs
+    live = _barrier_dirs(spark)
+    assert {t: live[t] for _, t in queries._SLOTS} == {
+        t: 1 for _, t in queries._SLOTS
     }
-    assert after != before  # the generation counter actually moved
 
 
 def test_query_barrier_previous_generation_survives_until_commit(spark):
     """A barrier DataFrame from invocation N-1 must stay readable while
-    invocation N is still being computed (the old overwrite-in-place
-    scheme deleted its files at the START of the new write); after N
-    commits, N-1's files are gone (bounded disk)."""
-    import os
-
-    from destor_spark.plans.pipeline import (
-        _materialize_gen,
-        _query_mat_root,
-    )
+    invocation N is still being computed — here N is computed FROM
+    N-1's files; after N commits, N-1's dir is gone (bounded disk)."""
+    from destor_spark.queries import _barrier
 
     df = spark.range(100).withColumn("v", F.col("id") * 2)
-    root = _query_mat_root(spark)
-    first = _materialize_gen(df, "gen_probe", root)
+    first = _barrier(df, "gen_probe")
     assert first.count() == 100
-    second = _materialize_gen(df.filter("id < 50"), "gen_probe", root)
-    # new generation committed -> old files deleted, new readable
+    second = _barrier(first.filter("id < 50"), "gen_probe")
     assert second.count() == 50
-    live = [d for d in os.listdir(root) if d.startswith("gen_probe_g")]
-    assert len(live) == 1
+    assert _barrier_dirs(spark)["gen_probe"] == 1
+
+
+def test_query_barrier_failed_write_keeps_previous(spark):
+    """A query-barrier write that fails removes its own dir at once and
+    leaves the tag's previous barrier live and readable."""
+    from destor_spark.queries import _barrier
+
+    first = _barrier(spark.range(100), "fail_probe")
+    before = _tree(_session_base(spark))
+    bad = spark.range(100).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        _barrier(bad, "fail_probe")
+    assert _tree(_session_base(spark)) == before
+    assert first.count() == 100
+
+
+def test_run_pipeline_failure_leaves_no_barrier_dir(spark, cfg, monkeypatch):
+    """A run_pipeline whose connected components stage raises removes
+    the barriers it already wrote (signatures, edges) before the error
+    reaches the caller."""
+    from destor_spark.operators import cluster as cluster_op
+    from destor_spark.plans.pipeline import run_pipeline
+    from destor_spark.synth import make_corpus
+
+    def _boom(*args):
+        raise RuntimeError("components failed")
+
+    monkeypatch.setattr(cluster_op, "connected_components", _boom)
+    pages = spark.createDataFrame(make_corpus(5, 60)[0])
+    before = _tree(_session_base(spark))
+    with pytest.raises(RuntimeError, match="components failed"):
+        run_pipeline(pages, cfg)
+    assert _tree(_session_base(spark)) == before
 
 
 def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
@@ -159,11 +205,9 @@ def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
     schema-inference job.  That schema must equal what inference over
     the written files returns, types and nullability included: a
     signatures barrier (array<bigint>, string) plus a struct column and
-    a non-nullable column, through both ephemeral barriers."""
-    import os
-
-    from destor_spark.plans.checkpoint import write_barrier
-    from destor_spark.plans.pipeline import _materialize_gen, signatures_stage
+    a non-nullable column, through write_barrier and through Barriers."""
+    from destor_spark.plans.checkpoint import Barriers, write_barrier
+    from destor_spark.plans.pipeline import signatures_stage
     from destor_spark.synth import make_corpus
 
     pages = spark.createDataFrame(make_corpus(5, 60)[0])
@@ -183,11 +227,12 @@ def test_barrier_reread_schema_equals_inferred(spark, cfg, tmp_path):
     assert got.schema == spark.read.parquet(os.path.join(root, "sigs")).schema
     assert got.count() == 60
 
-    got = _materialize_gen(sigs, "schema_probe", root)
-    (gen_dir,) = [
-        d for d in os.listdir(root) if d.startswith("schema_probe_g")
-    ]
-    assert got.schema == spark.read.parquet(os.path.join(root, gen_dir)).schema
+    with Barriers(spark) as b:
+        got = b(sigs, "schema_probe")
+        path = os.path.join(b.root, "schema_probe")
+        assert got.schema == spark.read.parquet(path).schema
+        assert b.rows("schema_probe") == 60
+    assert not os.path.exists(b.root)
 
 
 def test_ivf_assign_is_map_side(spark):

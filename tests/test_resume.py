@@ -267,17 +267,17 @@ def test_recompute_invalidates_manifest_before_overwrite(
     spark, tmp_path
 ):
     """A crash mid-recompute must not leave the PREVIOUS 'complete'
-    manifest pointing at destroyed data: run() flips the manifest to
+    manifest pointing at destroyed data: run_graph flips the manifest to
     'recomputing' before the data overwrite, so the old config's
     resume path recomputes instead of reading garbage."""
     import json
 
-    from destor_spark.plans.checkpoint import StageRunner
+    from destor_spark.plans.checkpoint import Stage, StageRunner
 
     base = str(tmp_path / "ck")
     r1 = StageRunner(spark, base, run_id="r1", context_fp="cfgA")
     df = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    r1.run("s", lambda: df)
+    r1.run_graph([Stage("s", (), lambda: df)])["s"]
     assert r1.completed("s")
 
     # recompute under cfgB whose write FAILS mid-execution (a UDF
@@ -292,7 +292,7 @@ def test_recompute_invalidates_manifest_before_overwrite(
         F.udf(_boom, "long")("id").alias("doc_id")
     )
     try:
-        r2.run("s", lambda: bad)
+        r2.run_graph([Stage("s", (), lambda: bad)])["s"]
     except Exception:
         pass
     # the stale cfgA manifest must be gone (status=recomputing)

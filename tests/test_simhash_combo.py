@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from destor_spark.config import DedupConfig
-from destor_spark.operators.simhash import combo_sets, simhash_pairs
+from destor_spark.operators.simhash import index_tables, simhash_pairs
 from destor_spark.oracle import run_oracle
 from destor_spark.plans.pipeline import run_pipeline, signatures_stage
 from destor_spark.synth import make_corpus
@@ -19,10 +19,13 @@ COMBO_CFG = DedupConfig(simhash_combo_blocks=8)
 
 
 def test_combo_sets_shape():
-    cs = combo_sets(COMBO_CFG)
+    width, cs = index_tables(COMBO_CFG)
+    assert width == 8
     assert len(cs) == 56  # C(8, 8-3)
     assert all(len(c) == 5 for c in cs)
     assert len(set(cs)) == 56
+    # the default pigeonhole: 4 single-block tables of 16 bits
+    assert index_tables(DedupConfig()) == (16, [(0,), (1,), (2,), (3,)])
 
 
 def _pairs(df) -> set[frozenset]:

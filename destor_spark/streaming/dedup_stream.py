@@ -11,8 +11,10 @@ documents:
        role of destor's bounded fingerprint cache, fast15 sec 4.1)
     -> signature stage (same Arrow UDF as batch — code reuse is total)
     -> foreachBatch: LSH pairs of the micro-batch vs the accumulated
-       signature table (the "kv index" as a growing parquet table),
-       append new assignments.
+       band store (the "kv index": one FIFO-bounded parquet generation
+       that each trigger reads and rewrites whole, as destor keeps one
+       hash table), verified against the signature store and written
+       per batch id.
 
 The micro-batch join against accumulated state is destor's
 index-buffer + kv-store cascade (src/index/index.c:150-216) with the
@@ -24,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pandas as pd
 
@@ -35,12 +38,15 @@ from destor_spark.config import DedupConfig
 from destor_spark.operators import exact as exact_op
 from destor_spark.operators import lsh as lsh_op
 from destor_spark.operators import verify as verify_op
-from destor_spark.plans.checkpoint import Barriers
+from destor_spark.plans.checkpoint import Barriers, write_barrier
 from destor_spark.plans.pipeline import signatures_stage
 
 WEB_PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+# the band store's commit record: names the one live generation dir
+# (band_store/g<gen>); the leading "_" keeps parquet readers off it
+_LIVE = "_live.json"
 
 
 def stream_exact_dedup(
@@ -77,13 +83,21 @@ def stream_exact_dedup(
 def _check_store_layout(state_dir: str) -> None:
     """Refuse to resume a state_dir written by a legacy layout (flat
     pairs/part-*.parquet; signatures/ as flat part-files or split into
-    ub=* url-hash buckets).  Writing the current layout next to
-    old-layout files would leave a mix that crashes partition discovery
-    on the NEXT batch ("Conflicting directory structures") — failing up
-    front with a named remedy beats a delayed, cryptic read error."""
+    ub=* url-hash buckets; band_store/ split into kb=* key buckets).
+    Writing the current layout next to old-layout files would leave a
+    mix that crashes partition discovery on the NEXT batch
+    ("Conflicting directory structures") or, for the band store, hides
+    the old members from every later trigger — failing up front with a
+    named remedy beats a delayed, cryptic read error or a silent
+    recall loss."""
     pair_store = os.path.join(state_dir, "pairs")
     sig_store = os.path.join(state_dir, "signatures")
+    band_store = os.path.join(state_dir, "band_store")
     legacy = []
+    if os.path.isdir(band_store) and any(
+        f.startswith("kb=") for f in os.listdir(band_store)
+    ):
+        legacy.append("band_store/ is split into kb= key buckets")
     if os.path.isdir(pair_store) and any(
         f.startswith("part-") for f in os.listdir(pair_store)
     ):
@@ -100,31 +114,47 @@ def _check_store_layout(state_dir: str) -> None:
             "state_dir uses the legacy pre-bid store layout ("
             + "; ".join(legacy)
             + ").  The at-least-once layout partitions pairs and "
-            "signatures by bid alone; mixing layouts corrupts "
-            "partition discovery.  Rebuild the store (delete "
-            f"{state_dir} and replay the input), or migrate by "
-            "rewriting each store with its bid column as the only "
-            "partition."
+            "signatures by bid alone and keeps band_store as one "
+            "live generation; mixing layouts corrupts partition "
+            f"discovery.  Rebuild the store (delete {state_dir} and "
+            "replay the input), or migrate by rewriting pairs and "
+            "signatures with their bid column as the only partition "
+            "and band_store's rows, kb dropped, into band_store/g0 "
+            f"named by band_store/{_LIVE}."
         )
 
 
-def read_band_store(
-    spark: SparkSession, band_store: str, new_bands: DataFrame
-) -> DataFrame:
-    """The band-store members in the kb partitions new_bands touches.
-
-    The store is read with the schema the stream writes (no
-    schema-inference job), and the touched kb values stay a broadcast
-    left-semi join instead of a driver collect: dynamic partition
-    pruning turns the join into a kb partition filter, so untouched
-    kb= directories are never opened."""
-    kbs = F.broadcast(new_bands.select("kb").distinct())
-    store = spark.read.schema(new_bands.schema).parquet(band_store)
-    return store.join(kbs, "kb", "left_semi")
+def _write_json(path: str, obj: dict) -> None:
+    """Replace the json file at path atomically (tmp + os.replace): a
+    crash leaves the old record or the new one, never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
-def _write_store(df: DataFrame, rows: int, store: str, part: str) -> None:
-    """Dynamic-partition-overwrite df into store, partitioned on part —
+def _live_gen(band_store: str) -> int | None:
+    """The generation the commit record names; None before the first
+    commit."""
+    rec = os.path.join(band_store, _LIVE)
+    if not os.path.exists(rec):
+        return None
+    with open(rec) as f:
+        return json.load(f)["gen"]
+
+
+def _commit_gen(band_store: str, gen: int) -> None:
+    """Make band_store/g<gen> the live generation, then remove every
+    other generation dir: the superseded one, and any a crashed
+    attempt left uncommitted."""
+    _write_json(os.path.join(band_store, _LIVE), {"gen": gen})
+    for d in os.listdir(band_store):
+        if d[:1] == "g" and d[1:].isdigit() and d != f"g{gen}":
+            shutil.rmtree(os.path.join(band_store, d), ignore_errors=True)
+
+
+def _write_store(df: DataFrame, rows: int, store: str) -> None:
+    """Dynamic-partition-overwrite df into store, partitioned on bid —
     unless the barrier it comes from holds no rows (rows: its count
     from the parquet footers, Barriers.rows, no Spark job).  A store
     dir exists only once it holds rows: whether there is state to read
@@ -132,7 +162,7 @@ def _write_store(df: DataFrame, rows: int, store: str, part: str) -> None:
     rewriting no partition."""
     w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if rows:
-        w.partitionBy(part).parquet(store)
+        w.partitionBy("bid").parquet(store)
 
 
 def run_incremental_dedup(
@@ -141,35 +171,38 @@ def run_incremental_dedup(
     state_dir: str,
     cfg: DedupConfig,
     value_len: int = 64,
-    n_key_buckets: int = 64,
     max_event_age: str | None = None,
     files_per_trigger: int = 4,
 ) -> None:
-    """foreachBatch incremental LSH dedup with a BOUNDED, PRUNED store.
+    """foreachBatch incremental LSH dedup with a BOUNDED store.
 
     Store layout (the destor kv index, restated for files):
 
       * band_store/ — the exploded (url, warc_ts, bid, band, key)
-        membership relation, hash-partitioned on kb = pmod(key,
-        n_key_buckets).  A micro-batch only READS the kb partitions its
-        own keys land in — read_band_store left-semi-joins the store
-        to the broadcast set of the batch's kb values, and dynamic
-        partition pruning turns that join into a kb partition filter
-        (asserted in tests/test_streaming.py) — and only REWRITES those
-        partitions (dynamic partition overwrite), so per-batch IO is
-        bounded by the batch's bucket footprint, not the corpus — while
-        that footprint is small: K distinct band keys leave
-        n_key_buckets·(1 - 1/n_key_buckets)^K partitions untouched on
-        average, below 1 of 64 once K ≳ 265 (about 17 docs at 16
-        bands), so a 300-doc trigger reads and rewrites all of them.
+        membership relation as ONE live generation, band_store/g<k>,
+        named by the commit record band_store/_live.json.  Each
+        trigger reads the live generation whole (with the schema it
+        was written with, no schema-inference job), writes the FIFO-
+        retained union with its own band rows into a fresh g<k+1>, and
+        moves the record to it once the batch's pair and signature
+        stores are written (tmp + os.replace, as watermark.json);
+        every other generation dir is then removed.  destor's
+        similarity index is likewise one hash table
+        (src/index/kvstore_htable.c).  Per-trigger IO is the live
+        store, which FIFO value_len bounds per bucket, not the corpus.
+        The store is not split by key: a 300-doc trigger touches
+        every one of 64 key buckets, so such a split prunes nothing
+        and costs a file per bucket per trigger.  The price is that a
+        trigger under ~17 docs, which would touch only some buckets,
+        rewrites the whole store too.
       * FIFO newest-k retention: each (band, key) keeps only the
         value_len most recent members by arrival (batch id, then
         warc_ts, url) — exactly destor's index_value_length FIFO rule
-        (/root/reference/src/index/kvstore_htable.c:44-53, "value[0]
-        keeps the latest ID").  Retention is applied on the touched
-        partitions at every rewrite, so the physical store is bounded
-        too.  Consequence (destor-identical): a document evicted from
-        a bucket cannot match FUTURE arrivals through that bucket.
+        (src/index/kvstore_htable.c:44-53, "value[0] keeps the latest
+        ID").  Retention is applied at every rewrite, so the physical
+        store is bounded too.  Consequence (destor-identical): a
+        document evicted from a bucket cannot match FUTURE arrivals
+        through that bucket.
       * signatures/ — (url, warc_ts, sig, ...) partitioned on bid
         alone; verification left-semi-joins the store on the candidate
         pairs' urls.  It has no url-hash partition level: with 64
@@ -184,15 +217,18 @@ def run_incremental_dedup(
     trigger => terminates when the backlog drains.
 
     Every fact the batch needs about what it wrote comes from what it
-    wrote: whether the batch, its retained band rows or its verified
-    pairs are empty is read from the barrier's parquet footers (no
-    Spark job), and an empty barrier writes no store.
+    wrote: whether the batch or its verified pairs are empty is read
+    from the barrier's parquet footers (no Spark job), and an empty
+    barrier writes no pair or signature store.
 
     At-least-once safety: the pair and signature stores are partitioned
     by batch id and written with dynamic partition overwrite, so a
     micro-batch replayed after a crash rewrites its own bid partitions
-    instead of appending duplicates; the band-store rewrite dedups
-    replayed (identical) rows before applying FIFO retention.
+    instead of appending duplicates.  A crash before the band store's
+    commit leaves the old generation live, and the retry overwrites
+    the uncommitted g<k+1>; a replay after it re-unions rows the live
+    generation already holds, identical on every column, which the
+    rewrite dedups before applying FIFO retention.
     Verification always uses the NEWEST signature per url, so a
     re-crawled page matches future candidates under its latest text.
 
@@ -214,9 +250,9 @@ def run_incremental_dedup(
         inside the horizon that GOVERNS the batch (Spark cleans state
         at batch end, so batch N's join sees everything batch N-1's
         cleanup kept);
-      * STATE EVICTION, LAZY at the next touch: the visibility filter
-        doubles as the physical drop — a partition's event-expired
-        members leave the files at its next rewrite, exactly one
+      * STATE EVICTION, LAZY at the next rewrite: the visibility
+        filter doubles as the physical drop — event-expired members
+        leave the store at the next trigger's rewrite, exactly one
         horizon step after Spark's batch-end cleanup would have
         removed them.  Deferring the drop past the batch keeps
         at-least-once replay exact (a replayed batch joins against
@@ -318,29 +354,18 @@ def run_incremental_dedup(
             if prev is not None:
                 drop_horizon = prev - age
             if wm is not None:
-                tmp = wm_path + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(
-                        {
-                            "watermark": wm.isoformat(),
-                            "bid": batch_id,
-                            "fp": batch_fp,
-                            "prev": (
-                                prev.isoformat()
-                                if prev is not None
-                                else None
-                            ),
-                        },
-                        f,
-                    )
-                os.replace(tmp, wm_path)
+                _write_json(wm_path, {
+                    "watermark": wm.isoformat(),
+                    "bid": batch_id,
+                    "fp": batch_fp,
+                    "prev": prev.isoformat() if prev is not None else None,
+                })
         new_bands = lsh_op.explode_bands(sigs).select(
             "url",
             "warc_ts",
             F.lit(batch_id).alias("bid"),
             "band",
             "key",
-            F.pmod("key", F.lit(n_key_buckets)).alias("kb"),
         )
         if drop_horizon is not None:
             # late-data drop: too-late rows join no bucket
@@ -350,8 +375,11 @@ def run_incremental_dedup(
                 )
             )
 
-        if os.path.exists(band_store):
-            old = read_band_store(spark, band_store, new_bands)
+        live = _live_gen(band_store)
+        if live is not None:
+            old = spark.read.schema(new_bands.schema).parquet(
+                os.path.join(band_store, f"g{live}")
+            )
             if drop_horizon is not None:
                 # State VISIBLE to this batch's pair generation is
                 # governed by the LAGGING watermark — the value that
@@ -365,53 +393,51 @@ def run_incremental_dedup(
                 # document.  This filter is ALSO the physical eviction
                 # point: members it excludes are left out of the
                 # rewrite below, so event-expired state is dropped at
-                # the partition's next touch (see the rewrite comment
+                # the next trigger's rewrite (see the rewrite comment
                 # for why eviction must lag a batch).
                 old = old.filter(
                     F.col("warc_ts")
                     >= F.lit(drop_horizon.isoformat()).cast("timestamp")
                 )
-            merged = old.select(*band_cols, "kb").unionByName(new_bands)
+            merged = old.unionByName(new_bands)
         else:
             merged = new_bands
 
-        # foreachBatch is at-least-once: a batch replayed after a crash
-        # between the band-store rewrite and the stream commit re-unions
-        # rows the store already holds.  Replayed rows are IDENTICAL on
-        # every column (bid included), so a key-wide dropDuplicates on
-        # the touched partitions makes the rewrite idempotent — without
-        # it, duplicates burn FIFO slots twice.
+        # foreachBatch is at-least-once: a batch replayed after its
+        # band-store commit but before the stream's own commit re-unions
+        # rows the live generation already holds.  Replayed rows are
+        # IDENTICAL on every column (bid included), so a key-wide
+        # dropDuplicates makes the rewrite idempotent — without it,
+        # duplicates burn FIFO slots twice.
         merged = merged.dropDuplicates(band_cols)
 
         # FIFO newest-k per (band, key): arrival order = (bid, warc_ts, url)
         w = Window.partitionBy("band", "key").orderBy(
             F.desc("bid"), F.desc("warc_ts"), F.desc("url")
         )
-        retained = b(  # barrier: store is read AND rewritten
+        gen = 0 if live is None else live + 1
+        retained = write_barrier(  # the next generation, not yet live
             merged.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= value_len)
             .drop("rn"),
-            "retained",
+            os.path.join(band_store, f"g{gen}"),
         )
         # STATE EVICTION is deliberately LAZY: batch N's rewrite keeps
         # every member its join could see (the lag-filtered visible set
         # trimmed by FIFO) and drops event-expired members only at the
-        # partition's NEXT touch, where the then-lagging horizon —
+        # NEXT trigger's rewrite, where the then-lagging horizon —
         # which equals this batch's advanced horizon — excludes them
         # from `old`.  Physically evicting with the advanced horizon
         # here looks equivalent one batch later but breaks
-        # at-least-once REPLAY: an attempt that rewrote the store and
-        # crashed before its pair write would leave the replay joining
-        # against an already-evicted store, silently losing the pairs
-        # the first attempt found.  Deferring the physical drop means
-        # a replayed batch always sees its pre-batch visible state —
-        # the file-store simulation of Spark's VERSIONED state store,
-        # which restores state version N-1 when batch N replays.  The
-        # extra bytes are bounded: one batch's width per touched
-        # partition, on top of the FIFO k.
-        # (an all-dropped batch, every row beyond the horizon, retains
-        # nothing and so writes no band store)
-        _write_store(retained, b.rows("retained"), band_store, "kb")
+        # at-least-once REPLAY: an attempt that committed the store and
+        # crashed before the stream's commit would leave the replay
+        # joining against an already-evicted store, silently losing
+        # the pairs the first attempt found.  Deferring the physical
+        # drop means a replayed batch always sees its pre-batch visible
+        # state — the file-store simulation of Spark's VERSIONED state
+        # store, which restores state version N-1 when batch N replays.
+        # The extra bytes are bounded: one batch's width on top of the
+        # FIFO k.
 
         # candidates: only buckets this batch touched, only retained members
         new_keys = new_bands.select("band", "key").distinct()
@@ -482,7 +508,11 @@ def run_incremental_dedup(
         for df, name, store in (
             (verified, "verified", pair_store), (sigs, "sigs", sig_store)
         ):
-            _write_store(df.withColumn("bid", bid), b.rows(name), store, "bid")
+            _write_store(df.withColumn("bid", bid), b.rows(name), store)
+        # last: the band store moves to this batch's generation only
+        # once everything the batch writes is written, so a batch that
+        # fails anywhere leaves the previous generation live
+        _commit_gen(band_store, gen)
 
     q = (
         src.writeStream.foreachBatch(_process)

@@ -155,82 +155,84 @@ def test_event_time_retention_bounds_store(spark, cfg, tmp_path):
         assert pd.Timestamp(json.load(f)["watermark"]) == day(21)
 
 
-def test_store_scan_is_pruned(spark, cfg, tmp_path):
-    """Per-batch store IO stays bounded as the store grows: a batch
-    rewrites only the kb partitions its own keys touch, never the
-    whole band store — observed on the stream's own files."""
-    from pyspark.sql import functions as F
+def test_band_store_is_one_live_generation(spark, cfg, tmp_path, monkeypatch):
+    """The band store is one live generation, band_store/g<k>, named by
+    the commit record band_store/_live.json: after every completed
+    trigger exactly one generation dir exists and the record names it.
+    A trigger whose generation write fails leaves the record and the
+    live generation as they were, and its rerun yields the same band,
+    signature and pair stores as a run that never failed."""
+    import json
 
-    in_dir = str(tmp_path / "in_prune")
-    state = str(tmp_path / "state_prune")
-    os.makedirs(in_dir)
-    pages, _ = make_corpus(seed=29, n_docs=400)
-    pages.iloc[:380].to_parquet(
-        os.path.join(in_dir, "big.parquet"), index=False
+    import pytest
+
+    from destor_spark.streaming import dedup_stream
+
+    pages, _ = make_corpus(seed=29, n_docs=120)
+    files = [pages.iloc[40 * i:40 * (i + 1)] for i in range(3)]
+
+    def feed(name, i):
+        in_dir = str(tmp_path / f"in_{name}")
+        os.makedirs(in_dir, exist_ok=True)
+        files[i].to_parquet(os.path.join(in_dir, f"f{i}.parquet"), index=False)
+        run_incremental_dedup(spark, in_dir, str(tmp_path / name), cfg)
+
+    def generations(name):
+        band_store = str(tmp_path / name / "band_store")
+        with open(os.path.join(band_store, "_live.json")) as f:
+            live = json.load(f)["gen"]
+        gens = sorted(
+            d for d in os.listdir(band_store) if not d.startswith(("_", "."))
+        )
+        return live, gens
+
+    def gen_files(name, gen):
+        d = tmp_path / name / "band_store" / f"g{gen}"
+        return {f.name: f.read_bytes() for f in d.iterdir()}
+
+    def stores(name):
+        out = {}
+        for store, key in (
+            ("band_store", ["url", "band", "key"]),
+            ("signatures", ["url", "bid"]),
+            ("pairs", ["url_a", "url_b"]),
+        ):
+            df = pd.read_parquet(str(tmp_path / name / store))
+            out[store] = df.sort_values(key).reset_index(drop=True)
+        return out
+
+    for i in range(3):
+        feed("plain", i)
+        assert generations("plain") == (i, [f"g{i}"])
+
+    feed("crashed", 0)
+    feed("crashed", 1)
+    assert generations("crashed") == (1, ["g1"])
+    live_files = gen_files("crashed", 1)
+
+    def write_then_fail(df, path):
+        real_write_barrier(df, path)
+        raise RuntimeError("generation write failed")
+
+    real_write_barrier = dedup_stream.write_barrier
+    monkeypatch.setattr(dedup_stream, "write_barrier", write_then_fail)
+    with pytest.raises(Exception, match="generation write failed"):
+        feed("crashed", 2)
+    monkeypatch.undo()
+    # the failed trigger wrote g2 but never committed it
+    assert generations("crashed") == (1, ["g1", "g2"])
+    assert gen_files("crashed", 1) == live_files
+
+    # the stream replays the failed batch: it overwrites g2, commits it
+    # and removes g1
+    run_incremental_dedup(
+        spark, str(tmp_path / "in_crashed"), str(tmp_path / "crashed"), cfg
     )
-    from destor_spark.streaming.dedup_stream import run_incremental_dedup
-
-    band_store = os.path.join(state, "band_store")
-
-    def part_files():
-        return {
-            d: sorted(
-                f for f in os.listdir(os.path.join(band_store, d))
-                if f.startswith("part-")
-            )
-            for d in os.listdir(band_store)
-            if d.startswith("kb=")
-        }
-
-    run_incremental_dedup(spark, in_dir, state, cfg)
-    before = part_files()
-    # tiny second batch: touches few key buckets
-    pages.iloc[380:382].to_parquet(
-        os.path.join(in_dir, "tiny.parquet"), index=False
-    )
-    run_incremental_dedup(spark, in_dir, state, cfg)
-    after = part_files()
-
-    # the kb partitions the 2 docs' band keys land in
-    from destor_spark.operators import lsh as lsh_op
-    from destor_spark.plans.pipeline import signatures_stage
-
-    tiny = spark.createDataFrame(pages.iloc[380:382])
-    sigs = signatures_stage(tiny, cfg)
-    touched = {
-        f"kb={r['kb']}"
-        for r in lsh_op.explode_bands(sigs)
-        .select(F.pmod("key", F.lit(64)).alias("kb"))
-        .distinct()
-        .collect()
-    }
-    untouched = set(before) - touched
-    # (a) the trigger left every partition it does not touch as it was
-    # (same part files), and there are such partitions ...
-    assert untouched, (sorted(touched), len(before))
-    for d in untouched:
-        assert after[d] == before[d], d
-    # ... (b) it rewrote every partition it does touch ...
-    for d in touched:
-        assert d in after and after[d] != before.get(d), d
-    # ... and (c) the stream's own store read (read_band_store, a
-    # broadcast left-semi join on the batch's kb values) carries kb as
-    # a DYNAMIC partition filter in its physical plan: directory-level
-    # pruning, no file of an untouched kb is even opened.
-    from destor_spark.streaming.dedup_stream import read_band_store
-
-    new_bands = lsh_op.explode_bands(sigs).select(
-        "url",
-        "warc_ts",
-        F.lit(1).alias("bid"),
-        "band",
-        "key",
-        F.pmod("key", F.lit(64)).alias("kb"),
-    )
-    pruned = read_band_store(spark, band_store, new_bands)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    part_filters = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "dynamicpruningexpression(kb#" in part_filters, plan
+    assert generations("crashed") == (2, ["g2"])
+    got, want = stores("crashed"), stores("plain")
+    for store in ("band_store", "signatures", "pairs"):
+        assert len(want[store]), store
+        pd.testing.assert_frame_equal(got[store], want[store])
 
 
 def test_zero_row_file_writes_no_store(spark, cfg, tmp_path):
@@ -687,6 +689,17 @@ def test_legacy_flat_store_layout_refused(spark, cfg, tmp_path):
     )
     with pytest.raises(RuntimeError, match="legacy pre-bid store layout"):
         run_incremental_dedup(spark, in_dir, state3, cfg)
+
+    # the key-bucketed band store: band_store/kb=* (the live generation
+    # written next to it would leave its members unread)
+    state4 = str(tmp_path / "state_legacy4")
+    kb_dir = os.path.join(state4, "band_store", "kb=3")
+    os.makedirs(kb_dir)
+    pd.DataFrame({"url": ["x"], "band": [0], "key": [3]}).to_parquet(
+        os.path.join(kb_dir, "part-00000.parquet"), index=False
+    )
+    with pytest.raises(RuntimeError, match="legacy pre-bid store layout"):
+        run_incremental_dedup(spark, in_dir, state4, cfg)
 
 
 def test_signature_store_keyed_by_batch_id(spark, cfg, tmp_path):
